@@ -140,12 +140,25 @@ class PolygonSet:
         self.ring_end = np.array(r_end, dtype=np.int64)
         self.ring_poly = np.array(r_poly, dtype=np.int64)
         self.bboxes = np.array(bboxes, dtype=np.float64).reshape(-1, 4)
+        # edge k runs from vertex edge_from[k] to edge_from[k] + 1: every
+        # vertex but the last of its ring. Rings of one polygon are
+        # contiguous, so are its edges: [poly_edge_start, poly_edge_end).
+        valid = np.ones(len(self.coords), dtype=bool)
+        valid[self.ring_end[self.ring_end > self.ring_start] - 1] = False
+        self.edge_from = np.nonzero(valid)[0]
+        vert_poly = np.repeat(self.ring_poly, self.ring_end - self.ring_start)
+        edge_poly = vert_poly[self.edge_from]
+        ordinals = np.arange(len(self.poly_ids))
+        self.poly_edge_start = np.searchsorted(edge_poly, ordinals, "left")
+        self.poly_edge_end = np.searchsorted(edge_poly, ordinals, "right")
 
     def contains(self, px: np.ndarray, py: np.ndarray) -> list[np.ndarray]:
         """For each polygon ordinal, a bool mask over the points.
 
         Vectorized ray cast: one (points x edges) pass per ring, bbox
-        prefiltered.
+        prefiltered. Dense — one mask per polygon — so it is the
+        brute-force reference; :meth:`match_points` is the sparse kernel
+        the joins use.
         """
         px = np.asarray(px, dtype=np.float64)
         py = np.asarray(py, dtype=np.float64)
@@ -171,17 +184,94 @@ class PolygonSet:
             crossings[p][cand] += cross.sum(axis=1)
         return [(c % 2).astype(bool) for c in crossings]
 
-    def match_points(self, px, py) -> tuple[np.ndarray, np.ndarray]:
-        """-> (point_idx, poly_ordinal) pairs for every containment hit."""
-        masks = self.contains(px, py)
-        pt_idx, poly_ord = [], []
-        for p, m in enumerate(masks):
-            hits = np.nonzero(m)[0]
-            pt_idx.append(hits)
-            poly_ord.append(np.full(len(hits), p, dtype=np.int64))
-        if not pt_idx:
+    def match_points(
+        self, px, py, budget: int = 1 << 18
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """-> (point_idx, poly_ordinal) pairs for every containment hit,
+        sorted by (poly_ordinal, point_idx); equal to :meth:`contains`.
+
+        Sparse: a sorted sweep of the points against the polygon bboxes
+        yields the candidate (point, polygon) pairs, and the ray cast runs
+        over candidate (point, edge) pairs only, in chunks of at most
+        ``budget`` elements. Working memory is O(points + polygons +
+        budget) whatever the polygon count; non-finite points never match.
+        """
+        px = np.asarray(px, dtype=np.float64)
+        py = np.asarray(py, dtype=np.float64)
+        ok = np.nonzero(np.isfinite(px) & np.isfinite(py))[0]
+        pt_out, poly_out = [], []
+        if len(ok) and len(self.poly_ids):
+            # sweep the axis whose bbox slabs hold fewer candidates
+            # (tall strips sweep on x, wide strips on y)
+            best = None
+            for axis, v in ((0, px[ok]), (1, py[ok])):
+                order = np.argsort(v, kind="stable")
+                sv = v[order]
+                lo = np.searchsorted(sv, self.bboxes[:, axis], "left")
+                hi = np.searchsorted(sv, self.bboxes[:, axis + 2], "right")
+                cnt = np.maximum(hi - lo, 0)
+                if best is None or cnt.sum() < best[0]:
+                    best = (cnt.sum(), axis, ok[order], lo, cnt)
+            _, axis, pts, lo, cnt = best
+            other = py if axis == 0 else px
+            o_min, o_max = self.bboxes[:, 1 - axis], self.bboxes[:, 3 - axis]
+            for p0, p1 in _chunks(cnt, budget):
+                c = cnt[p0:p1]
+                poly = np.repeat(np.arange(p0, p1), c)
+                first = np.repeat(lo[p0:p1] - (np.cumsum(c) - c), c)
+                pt = pts[first + np.arange(len(poly))]
+                v = other[pt]
+                keep = (v >= o_min[poly]) & (v <= o_max[poly])
+                hit_pt, hit_poly = self._refine(px, py, pt[keep], poly[keep], budget)
+                pt_out.append(hit_pt)
+                poly_out.append(hit_poly)
+        if not pt_out:
             return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-        return np.concatenate(pt_idx), np.concatenate(poly_ord)
+        pt_idx, poly_ord = np.concatenate(pt_out), np.concatenate(poly_out)
+        order = np.lexsort((pt_idx, poly_ord))
+        return pt_idx[order], poly_ord[order]
+
+    def _refine(self, px, py, pt, poly, budget):
+        """Even-odd ray cast of candidate pairs (pt[i], poly[i]) over
+        every edge of the polygon, ``budget`` (pair, edge) cells at a time;
+        -> the pairs whose crossing count is odd."""
+        e0 = self.poly_edge_start[poly]
+        ne = self.poly_edge_end[poly] - e0
+        keep_pt, keep_poly = [], []
+        for i0, i1 in _chunks(ne, budget):
+            n = ne[i0:i1]
+            pair = np.repeat(np.arange(i1 - i0), n)
+            edge = self.edge_from[
+                np.repeat(e0[i0:i1] - (np.cumsum(n) - n), n) + np.arange(len(pair))
+            ]
+            x1, y1 = self.coords[edge, 0], self.coords[edge, 1]
+            x2, y2 = self.coords[edge + 1, 0], self.coords[edge + 1, 1]
+            cx, cy = px[pt[i0:i1]][pair], py[pt[i0:i1]][pair]
+            # same arithmetic as ``contains``: identical boundary decisions
+            straddle = (y1 > cy) != (y2 > cy)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                x_int = x1 + (cy - y1) / (y2 - y1) * (x2 - x1)
+            cross = np.bincount(
+                pair, weights=straddle & (cx < x_int), minlength=i1 - i0
+            )
+            inside = cross.astype(np.int64) % 2 == 1
+            keep_pt.append(pt[i0:i1][inside])
+            keep_poly.append(poly[i0:i1][inside])
+        if not keep_pt:
+            return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
+        return np.concatenate(keep_pt), np.concatenate(keep_poly)
+
+
+def _chunks(weights: np.ndarray, budget: int):
+    """Consecutive ``[i0, i1)`` ranges whose weights sum to <= ``budget``
+    (a single heavier item gets a range of its own)."""
+    total = np.cumsum(weights)
+    i0, n = 0, len(weights)
+    while i0 < n:
+        base = total[i0 - 1] if i0 else 0
+        i1 = max(int(np.searchsorted(total, base + budget, "right")), i0 + 1)
+        yield i0, i1
+        i0 = i1
 
 
 def wkb_to_geojson(wkb: bytes) -> dict:

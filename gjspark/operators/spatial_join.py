@@ -4,21 +4,31 @@ The reference has no spatial joins — its only join is keyed find-or-create
 (``utils/FrostUtils.java:637-661``); the north rule adds PIP and kNN over
 the image table. Strategy (SURVEY.md §2.3):
 
-PIP  = cell-equi prefilter + exact refine:
-  1. cover every Feature polygon with H3-style cells at ``res``
-     (distributed ``mapInPandas`` over the features DF — no driver
-     geometry work, scales to arbitrarily many polygons),
-  2. equi-join images on the cell column — Catalyst broadcasts the cover
-     side when small (AQE converts at runtime otherwise) or shuffles on
-     the cell key for the bucketed variant,
-  3. refine candidate pairs with the vectorized ray-cast kernel in one
-     pandas UDF (polygon WKB travels with the candidate row; parsed once
-     per feature per batch).
+PIP, broadcast path (the default; Feature sets are the dimension table):
+  1. stream the Polygon/MultiPolygon features to the driver in one job,
+     keeping a running total of their WKB bytes; flatten them into one
+     ``PolygonSet`` and broadcast it,
+  2. one ``mapInPandas`` over ``images(image_id, lat, lon)`` emits the
+     ``match_points`` pairs of every Arrow batch. ``match_points`` is
+     sparse — a sorted bbox sweep picks the candidate (point, polygon)
+     pairs and the ray cast runs over their edges only — so a batch costs
+     O(points + polygons + candidate edges), not points x polygons.
+     No cover, no join, no shuffle.
+
+PIP, bucketed path (polygon sets too big to broadcast — requested with
+``broadcast_cover=False``, or chosen when step 1 passes
+``spark.sql.autoBroadcastJoinThreshold``):
+  1. cover every polygon with H3-style cells at ``res`` (distributed
+     ``mapInPandas`` over the features — no driver geometry work),
+  2. equi-join images on the cell column (a shuffle join on the cell key
+     unless Catalyst finds the cover small enough to broadcast),
+  3. refine candidate pairs with the same ray-cast kernel (polygon WKB
+     travels with the candidate row; parsed once per feature per task).
 
 The cover is a strict superset of cells containing any polygon point
-(dense grid at <= 0.35 x cell inradius + bbox expansion), so step 3 never
-misses a true match — verified against the brute-force numpy oracle in
-``tests/test_spatial.py``.
+(dense grid at <= 0.35 x cell inradius + bbox expansion), so the bucketed
+refine never misses a true match. Both paths equal the brute-force
+``PolygonSet`` oracle — ``tests/test_spatial.py``.
 
 kNN = sorted k-ring expansion + rank, with an exactness guarantee:
   iterate k in (0, 1, 2, 4, 8): explode the k-ring of each unmatched
@@ -31,6 +41,7 @@ kNN = sorted k-ring expansion + rank, with an exactness guarantee:
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Iterator
 
 import numpy as np
@@ -42,8 +53,10 @@ from pyspark.sql import types as T
 from gjspark.functions import geometry as G
 from gjspark.functions import h3 as h3x
 
+_log = logging.getLogger(__name__)
+
 # ---------------------------------------------------------------------------
-# Polygon cell cover
+# Polygon cell cover (bucketed PIP only)
 # ---------------------------------------------------------------------------
 
 _COVER_SCHEMA = T.StructType(
@@ -52,6 +65,13 @@ _COVER_SCHEMA = T.StructType(
         T.StructField("feature_id", T.StringType()),
     ]
 )
+
+
+def _polygon_features(features: DataFrame) -> DataFrame:
+    """The features PIP can match: Polygon/MultiPolygon with a geometry."""
+    return features.filter(
+        F.col("geom_type").isin("Polygon", "MultiPolygon") & F.col("geometry").isNotNull()
+    ).select("feature_id", "geometry")
 
 
 def _cover_cells_for_wkb(wkb: bytes, res: int) -> np.ndarray:
@@ -86,8 +106,6 @@ def polygon_cover(features: DataFrame, res: int) -> DataFrame:
         for pdf in batches:
             ids, cells = [], []
             for fid, wkb in zip(pdf["feature_id"], pdf["geometry"]):
-                if wkb is None:
-                    continue
                 cc = _cover_cells_for_wkb(bytes(wkb), res)
                 cells.append(cc)
                 ids.extend([fid] * len(cc))
@@ -96,12 +114,12 @@ def polygon_cover(features: DataFrame, res: int) -> DataFrame:
                     {"cell": np.concatenate(cells), "feature_id": ids}
                 )
 
+    n_tasks = features.sparkSession.sparkContext.defaultParallelism
     return (
-        features.select("feature_id", "geometry", "geom_type")
-        .filter(F.col("geom_type").isin("Polygon", "MultiPolygon"))
+        _polygon_features(features)
         # a FeatureCollection parses as one task per *file*; cover math is
         # per-polygon CPU, so spread polygons across the cluster first
-        .repartition(32, "feature_id")
+        .repartition(n_tasks, "feature_id")
         .mapInPandas(gen, _COVER_SCHEMA)
     )
 
@@ -118,75 +136,61 @@ _PIP_REFINE_SCHEMA = T.StructType(
 )
 
 
-def pip_join(
-    images: DataFrame,
-    features: DataFrame,
-    res: int = 7,
-    cell_col: str | None = None,
-    broadcast_cover: bool = True,
-) -> DataFrame:
-    """-> (image_id, feature_id) containment pairs.
+def _collect_polygons(
+    features: DataFrame, limit: int
+) -> tuple[list[tuple[str, bytes]] | None, int, int]:
+    """-> (polygons, features read, WKB bytes read), streamed to the
+    driver; polygons is None once the WKB passes ``limit`` bytes. No size
+    probe: a huge set stops at ``limit`` bytes instead of filling the
+    Python driver. ``toLocalIterator`` runs one job per partition, so the
+    features are coalesced to one partition first: one job, as a
+    ``collect`` would be."""
+    polys: list[tuple[str, bytes]] = []
+    n_bytes = 0
+    for fid, wkb in _polygon_features(features).coalesce(1).toLocalIterator():
+        wkb = bytes(wkb)
+        n_bytes += len(wkb)
+        polys.append((fid, wkb))
+        if n_bytes > limit:
+            return None, len(polys), n_bytes
+    return polys, len(polys), n_bytes
 
-    ``broadcast_cover=True``: cover+geometry side is broadcast (the common
-    case — Feature sets are the dimension table, like the reference's
-    entity caches). ``False``: shuffle equi-join on the cell key for huge
-    polygon sets (bucketed variant); at 100 TB both sides pre-partitioned
-    by cell avoid the shuffle entirely.
-    """
-    if cell_col is None:
-        cell_col = f"h3_r{res}"
-    cover = polygon_cover(features, res)
 
-    if broadcast_cover:
-        # r6: geometries ship ONCE as an sc.broadcast dict instead of
-        # riding every candidate row through the join and the Arrow
-        # boundary (each candidate previously carried its polygon's full
-        # WKB — guide §2.3: move keys, not payloads). The features side
-        # is the dimension table (same collect pattern as knn_join_map);
-        # the cover join now carries only (cell, feature_id).
-        spark = images.sparkSession
-        geo_rows = features.select("feature_id", "geometry").collect()
-        wkb_by_id = {
-            r["feature_id"]: bytes(r["geometry"])
-            for r in geo_rows
-            if r["geometry"] is not None
-        }
-        bc = spark.sparkContext.broadcast(wkb_by_id)
-
-        cand = images.select(
-            "image_id", "lat", "lon", F.col(cell_col).alias("cell")
-        ).join(F.broadcast(cover), "cell")
-
-        def refine_bc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            wkbs = bc.value
-            cache: dict[str, G.PolygonSet] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keep = np.zeros(len(pdf), dtype=bool)
-                lon = pdf["lon"].to_numpy(dtype=float)
-                lat = pdf["lat"].to_numpy(dtype=float)
-                for fid, grp in pdf.groupby("feature_id", sort=False):
-                    ps = cache.get(fid)
-                    if ps is None:
-                        ps = G.PolygonSet([fid], [wkbs[fid]])
-                        cache[fid] = ps
-                    pos = pdf.index.get_indexer(grp.index.to_numpy())
-                    keep[pos] = ps.contains(lon[pos], lat[pos])[0]
-                out = pdf.loc[keep, ["image_id", "feature_id"]]
-                if len(out):
-                    yield out
-
-        return cand.mapInPandas(refine_bc, _PIP_REFINE_SCHEMA)
-
-    # bucketed variant (huge polygon sets): no driver collect — geometry
-    # travels with the cover rows through the shuffle equi-join
-    geom = features.select("feature_id", "geometry")
-    cover_geo = cover.join(geom, "feature_id")  # small x small
-
-    cand = images.select("image_id", "lat", "lon", F.col(cell_col).alias("cell")).join(
-        cover_geo, "cell"
+def _pip_broadcast(images: DataFrame, polys: list[tuple[str, bytes]]) -> DataFrame:
+    """Map-only refine of every image batch against the broadcast set,
+    flattened once on the driver (tasks only unpickle numpy arrays)."""
+    bc = images.sparkSession.sparkContext.broadcast(
+        G.PolygonSet([fid for fid, _ in polys], [wkb for _, wkb in polys])
     )
+
+    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ps = bc.value
+        fids = np.array(ps.poly_ids, dtype=object)
+        for pdf in batches:
+            pt, poly = ps.match_points(
+                pdf["lon"].to_numpy(dtype=float), pdf["lat"].to_numpy(dtype=float)
+            )
+            if len(pt):
+                yield pd.DataFrame(
+                    {"image_id": pdf["image_id"].to_numpy()[pt], "feature_id": fids[poly]}
+                )
+
+    return images.select("image_id", "lat", "lon").mapInPandas(
+        refine, _PIP_REFINE_SCHEMA
+    )
+
+
+def _pip_bucketed(
+    images: DataFrame, features: DataFrame, res: int, cell_col: str
+) -> DataFrame:
+    """Cover equi-join on the cell key, then the exact refine; no driver
+    collect — geometry travels with the cover rows through the join."""
+    cover_geo = polygon_cover(features, res).join(
+        _polygon_features(features), "feature_id"
+    )  # small x small
+    cand = images.select(
+        "image_id", "lat", "lon", F.col(cell_col).alias("cell")
+    ).join(cover_geo, "cell")
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cache: dict[str, G.PolygonSet] = {}
@@ -210,6 +214,58 @@ def pip_join(
                 yield out
 
     return cand.mapInPandas(refine, _PIP_REFINE_SCHEMA)
+
+
+def pip_join(
+    images: DataFrame,
+    features: DataFrame,
+    res: int = 7,
+    cell_col: str | None = None,
+    broadcast_cover: bool = True,
+) -> DataFrame:
+    """-> (image_id, feature_id) containment pairs.
+
+    ``broadcast_cover=True`` (the common case — Feature sets are the
+    dimension table, like the reference's entity caches): the polygon
+    features are streamed to the driver and broadcast as one
+    ``PolygonSet``, and one ``mapInPandas`` over ``images(image_id, lat,
+    lon)`` refines each batch against the whole set with the sparse
+    ``match_points`` kernel. No cover, no join, no cell column. If the
+    polygons' WKB passes ``spark.sql.autoBroadcastJoinThreshold`` (or the
+    threshold is negative, i.e. broadcasts are off), the collect stops and
+    the bucketed path runs instead.
+
+    ``broadcast_cover=False`` (polygon sets too big to broadcast): cover
+    the polygons with ``res`` cells, shuffle equi-join the images on
+    ``cell_col`` (default ``h3_r{res}``), then refine; at 100 TB both
+    sides pre-partitioned by cell avoid the shuffle entirely.
+
+    The chosen path goes to ``logging`` with the feature count and the
+    geometry bytes read. Both paths give the same pairs. The byte bound
+    is the only switch because under it the broadcast refine was faster
+    than the cover join for every polygon count and size tried, from 200
+    to 50k polygons and from 2 km to 2 degrees across
+    (``tools/pip_crossover.py``).
+    """
+    if cell_col is None:
+        cell_col = f"h3_r{res}"
+    limit = int(
+        images.sparkSession._jsparkSession.sessionState()
+        .conf()
+        .autoBroadcastJoinThreshold()
+    )
+    polys, n_feat, n_bytes = None, 0, 0
+    if broadcast_cover and limit >= 0:
+        polys, n_feat, n_bytes = _collect_polygons(features, limit)
+    _log.info(
+        "pip_join path=%s broadcast_cover=%s features=%d geometry_bytes=%d "
+        "broadcast_threshold=%d",
+        "bucketed" if polys is None else "broadcast",
+        broadcast_cover, n_feat, n_bytes, limit,
+    )
+    if polys is not None:
+        return _pip_broadcast(images, polys)
+    return _pip_bucketed(images, features, res, cell_col)
 
 
 # ---------------------------------------------------------------------------

@@ -25,8 +25,13 @@ Not a Spark built-in at this granularity (SURVEY.md §4.5). Design:
   never directory listings, so orphaned files from failed attempts are
   invisible;
 - resume = anti-join: completed part_ids (from the manifest) are filtered
-  out *before* any work — their images are never decoded again — and the
-  surviving partitions append their manifest rows.
+  out before the shuffle and the write, and the surviving partitions
+  append their manifest rows. The ``__part`` filter applies to ``df``,
+  i.e. *after* the kernels that produce it: Catalyst cannot push it
+  through a Python stage, so completed parts are still computed (their
+  images decoded) and then dropped. A resume therefore saves the write,
+  not the compute: on a 4-core ``local[4]`` box the perfbench ``images``
+  resume took 0.93-1.04x the cold job's wall time.
 
 The reference's analogue is nothing more than a progress callback
 (``utils/ProgressTracker.java:17-26``) and insert/update counters
@@ -121,7 +126,8 @@ def checkpointed_write(
 ) -> pd.DataFrame:
     """Write ``df`` to ``out_dir`` in ``n_parts`` deterministic logical
     partitions; returns the full manifest (pandas). Safe to re-run: on
-    resume, completed partitions are skipped entirely.
+    resume, completed partitions are not shuffled or written again (their
+    rows are still computed upstream of the ``__part`` filter).
 
     Memory-bounded by construction: each task streams Arrow batches into
     per-partition ``pyarrow.ParquetWriter``s — it never holds a logical

@@ -74,6 +74,119 @@ def test_pip_join_matches_golden(images, features, fixtures_dir, broadcast):
     assert got_set == exp_set
 
 
+def _pairs(df) -> set[tuple[str, str]]:
+    return {(r["image_id"], r["feature_id"]) for r in df.collect()}
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pip_broadcast_plan_is_one_map(spark, features, fixtures_dir):
+    """The broadcast path is a single map over the images: no cover, no
+    cell join, no exchange."""
+    imgs = spark.read.parquet(f"{fixtures_dir}/images_sf_e2e.parquet")
+    plan = _plan(pip_join(imgs, features))
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Exchange" not in plan and "Join" not in plan, plan
+
+
+def test_pip_over_broadcast_threshold_takes_bucketed_path(
+    spark, images, features, fixtures_dir, caplog
+):
+    """Geometry bytes past autoBroadcastJoinThreshold: the collect stops,
+    the bucketed plan runs, the pairs still equal the golden."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100")
+    try:
+        with caplog.at_level("INFO", logger="gjspark.operators.spatial_join"):
+            df = pip_join(images, features)
+        got = _pairs(df)
+        plan = _plan(df)
+    finally:
+        spark.conf.set(key, old)
+    msgs = [r.getMessage() for r in caplog.records if r.name.endswith("spatial_join")]
+    assert len(msgs) == 1 and "path=bucketed broadcast_cover=True" in msgs[0], msgs
+    assert "Join" in plan, plan
+    exp = pd.read_parquet(f"{fixtures_dir}/expected_pip.parquet")
+    assert got == set(zip(exp["image_id"], exp["feature_id"]))
+
+
+def _square(x0, y0, size):
+    return [[x0, y0], [x0 + size, y0], [x0 + size, y0 + size], [x0, y0 + size], [x0, y0]]
+
+
+def test_pip_edge_cases_both_paths_match_oracle(spark, tmp_path):
+    """Non-polygon and null geometries, holes, MultiPolygons, a shared
+    edge and NaN/null coordinates: both paths equal the brute-force
+    PolygonSet oracle."""
+    import json
+
+    from gjspark.functions import geometry as G
+
+    u = 0.0625  # binary-exact coordinates: edge tests are exact
+    feats = [
+        ("holed", {"type": "Polygon", "coordinates": [
+            _square(10.0, 50.0, 4 * u), _square(10.0 + u, 50.0 + u, 2 * u)]}),
+        ("multi", {"type": "MultiPolygon", "coordinates": [
+            [_square(10.5, 50.0, 2 * u)], [_square(10.75, 50.0, 2 * u)]]}),
+        ("west", {"type": "Polygon", "coordinates": [_square(11.0, 50.0, 2 * u)]}),
+        ("east", {"type": "Polygon", "coordinates": [_square(11.125, 50.0, 2 * u)]}),
+        ("point", {"type": "Point", "coordinates": [10.03125, 50.03125]}),
+        ("nogeom", None),
+    ]
+    path = tmp_path / "edge.geojson"
+    path.write_text(json.dumps({"type": "FeatureCollection", "features": [
+        {"type": "Feature", "id": fid, "geometry": g, "properties": {}}
+        for fid, g in feats
+    ]}))
+    features = read_feature_collection(spark, str(path)).cache()
+    nan = float("nan")
+    pts = [
+        ("ring", 50.03125, 10.03125),  # in the shell, on the Point feature
+        ("hole", 50.125, 10.125),
+        ("multi_a", 50.0625, 10.5625),
+        ("multi_b", 50.0625, 10.8125),
+        ("between_parts", 50.0625, 10.6875),
+        ("shared_edge", 50.0625, 11.125),
+        ("far", 0.0, 0.0),
+        ("nan", nan, nan),
+        ("nan_lat", nan, 10.125),
+        ("null", None, None),
+    ]
+    images = with_cell_columns(
+        spark.createDataFrame(pts, "image_id string, lat double, lon double")
+        .repartition(3)
+    )
+    try:
+        poly_rows = (
+            features.filter(F.col("geom_type").isin("Polygon", "MultiPolygon"))
+            .select("feature_id", "geometry")
+            .collect()
+        )
+        ps = G.PolygonSet(
+            [r["feature_id"] for r in poly_rows],
+            [bytes(r["geometry"]) for r in poly_rows],
+        )
+        lat = np.array([p[1] for p in pts], dtype=float)  # None -> NaN
+        lon = np.array([p[2] for p in pts], dtype=float)
+        oracle = {
+            (pts[i][0], ps.poly_ids[j])
+            for j, mask in enumerate(ps.contains(lon, lat))
+            for i in np.nonzero(mask)[0]
+        }
+        # the ray cast is half-open: a shared-edge point belongs to one side
+        assert oracle == {
+            ("ring", "holed"), ("multi_a", "multi"), ("multi_b", "multi"),
+            ("shared_edge", "east"),
+        }
+        for broadcast in (True, False):
+            assert _pairs(pip_join(images, features, broadcast_cover=broadcast)) == oracle
+    finally:
+        features.unpersist()
+
+
 def test_knn_matches_golden(images, locations, fixtures_dir):
     got = knn_join(images, locations).toPandas()
     exp = pd.read_parquet(f"{fixtures_dir}/expected_knn.parquet")

@@ -53,7 +53,11 @@ COMMENT = {
     ),
     "q_ann_topk": "broadcast index; single mapInPandas scoring pass",
     "q_cells": "one ArrowEvalPython node computes all 7 cell columns in a single pass",
-    "q_pip": "cover side broadcast; equi-join on the cell key; vectorized refine",
+    "q_pip": (
+        "broadcast path: one MapInPandas refines each image batch against "
+        "the broadcast polygon set — no cover, no cell join, no exchange "
+        "below it (the cover + cell equi-join is the bucketed path only)"
+    ),
     "q_knn": "map-only: zero exchanges below the final collect",
     "q_tile_rollup": "aggregation over the decoded features (stat rows only through the exchange)",
     "q_mosaic": "explicit-count hash exchange of delta+zlib-compressed thumbs; one vectorized merge per partition",
