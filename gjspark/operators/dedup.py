@@ -21,7 +21,6 @@ text/embedding back by id (broadcast when small, shuffle otherwise). At
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -121,19 +120,6 @@ def minhash_signature_udf(n_hashes: int = 64, shingle_k: int = 5):
         return pd.Series(list(out.astype(np.int64)))
 
     return _sig
-
-
-def jaccard_udf(shingle_k: int = 5):
-    @pandas_udf(T.DoubleType())
-    def _j(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.empty(len(a))
-        for i, (x, y) in enumerate(zip(a, b)):
-            sa = set(_shingle_hashes(x or "", shingle_k))
-            sb = set(_shingle_hashes(y or "", shingle_k))
-            out[i] = len(sa & sb) / max(len(sa | sb), 1)
-        return pd.Series(out)
-
-    return _j
 
 
 def shingle_set_udf(shingle_k: int = 5):

@@ -6,10 +6,9 @@ it 3-4x. :func:`decoded_features` performs ONE ``mapInPandas`` decode
 pass per image emitting everything downstream needs:
 
 - verification stats (crc32 of pixels, recomputed phash, mean luma,
-  dims check) — exactly :mod:`gjspark.operators.multimodal.decode_stats`
-  semantics;
-- per-image tile statistics (integral-image tile sums) — exactly
-  :mod:`gjspark.operators.tiling.image_tile_stats` semantics;
+  dims check);
+- per-image tile statistics (exact integer sums over 16x16 pixel
+  tiles), which :func:`rollup_from_features` aggregates per cell;
 - a per-image rounded uint8 thumbnail (the mosaic partial unit; rounding
   once per image is what makes any grouping of the subsequent integer
   sums byte-identical — see ``tiling.cell_mosaic``). Stored LOSSLESSLY
@@ -47,7 +46,7 @@ from gjspark.operators.multimodal import _decode_one
 from gjspark.operators.tiling import (
     _merge_mosaic_partials,
     _MOSAIC_PARTIAL_SCHEMA,
-    TILE,
+    _MOSAIC_SCHEMA,
 )
 
 FEATURES_SCHEMA = T.StructType(
@@ -74,6 +73,8 @@ FEATURES_SCHEMA = T.StructType(
 )
 
 _LUMA = np.array([0.299, 0.587, 0.114])
+
+TILE = 16  # pixels per tile edge
 
 MOSAIC_SIZE = 32  # thumb edge; fixed by codecs.block_mean_numerators_cf
 
@@ -140,7 +141,8 @@ def decoded_features(
                 ok[k] = True
                 dims_ok[k] = img.shape[0] == h0 and img.shape[1] == w0
             good = [k for k in range(n) if imgs[k] is not None]
-            # shape-batched tile stats (identical math to image_tile_stats),
+            # shape-batched tile stats (tests/test_spatial.py checks them
+            # against a per-image reduceat reference),
             # exact mosaic thumbs, and the phash — ONE exact block-mean
             # GEMM pass feeds both the thumbs and (by linearity of the
             # resize) the phash luma stage. All per-pixel math is exact
@@ -164,10 +166,15 @@ def decoded_features(
                 # ONE channel-first float64 cast feeds every exact GEMM
                 # kernel: thumbs, phash, tile sums, channel sums
                 xf = C.to_chanfirst_f64(stack)  # (n, 3, h, w)
-                # exact mean luma from integer channel sums (same formula,
-                # per-batch, as multimodal.decode_stats — parity-tested)
+                # mean luma from exact integer channel sums. The weighted
+                # sum is spelled out: BLAS rounds a one-row product (dot)
+                # differently from a many-row one (gemv), which made the
+                # value depend on how many same-shape images shared the
+                # batch
                 csum = xf.reshape(len(idxs) * 3, -1).sum(axis=1).reshape(-1, 3)
-                mean[ia] = (csum @ _LUMA) / float(h * w)
+                mean[ia] = (
+                    csum[:, 0] * _LUMA[0] + csum[:, 1] * _LUMA[1] + csum[:, 2] * _LUMA[2]
+                ) / float(h * w)
                 # exact integer tile sums as a float64 GEMM sandwich with
                 # 0/1 tile-aggregation matrices — identical integers to a
                 # reduceat at ANY image size, ~5x faster single-thread
@@ -239,8 +246,13 @@ def decoded_features(
 
 
 def rollup_from_features(feat: DataFrame) -> DataFrame:
-    """cell_tile_rollup over an already-decoded features frame (same
-    output as tiling.cell_tile_rollup; only shuffles tiny stat rows)."""
+    """Per-cell tile statistics over an already-decoded features frame.
+
+    -> (cell, n_images, n_tiles, mean_tile_luma, phash_xor, min_tile_mean,
+    max_tile_mean) over the ``decode_ok`` rows. Every column is a
+    commutative monoid, so the only shuffle carries tiny partial-aggregated
+    stat rows and hot cells cannot skew it. ``phash_xor`` is an
+    order-independent per-cell checksum of the stored phashes."""
     xor_agg = F.expr(
         "aggregate(collect_list(phash_stored), cast(0 as bigint), (a, x) -> a ^ x)"
     )
@@ -326,8 +338,6 @@ def mosaic_from_features(
                     "mosaic": [x.tobytes() for x in mosaics],
                 }
             )
-
-        from gjspark.operators.tiling import _MOSAIC_SCHEMA
 
         # EXPLICIT partition count: an unnumbered repartition(col) is fair
         # game for AQE's 64 MB-advisory coalescing, which squeezes this

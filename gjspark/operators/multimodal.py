@@ -1,42 +1,25 @@
-"""Multimodal (image) operators: decode, verify, feature-extract, resize.
+"""Multimodal operators: the image decode shared by the fused decode pass
+and the quality filter, video frame sampling and audio features.
 
-Images are opaque ``binary`` columns with typed metadata (input_hint
-schema). All pixel work happens in ``mapInPandas`` over Arrow batches with
-the pure-numpy codecs from ``gjspark.functions.codecs`` — never per-row
-Python in a driver loop. Decode of formats whose codecs aren't available
-in this environment (JPEG/WebP/video frames) is stubbed behind
-``NotImplementedError`` with the Spark-side plumbing (schema, batching,
-partitioning) fully real and tested.
+Media are opaque ``binary`` columns with typed metadata (input_hint
+schema). All pixel and sample work happens in ``mapInPandas`` over Arrow
+batches with the pure-numpy codecs from ``gjspark.functions`` — never
+per-row Python in a driver loop. Formats with no from-spec implementation
+here (``STUB_FORMATS``, lossy video and audio codecs) raise
+``NotImplementedError`` while the Spark-side plumbing (schema, batching,
+partitioning) stays fully real and tested.
 """
 
 from __future__ import annotations
 
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gjspark.functions import codecs as C
-
-DECODE_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("h", T.IntegerType()),
-        T.StructField("fmt", T.StringType()),
-        T.StructField("caption", T.StringType()),
-        T.StructField("phash_stored", T.LongType()),
-        T.StructField("phash_decoded", T.LongType()),
-        T.StructField("pix_crc32", T.LongType()),
-        T.StructField("mean_luma", T.DoubleType()),
-        T.StructField("decode_ok", T.BooleanType()),
-        T.StructField("dims_ok", T.BooleanType()),
-    ]
-)
 
 # jpeg/jpg (gjspark/functions/jpeg.py, pure-numpy baseline T.81) and
 # webp-lossless (gjspark/functions/webp.py, from the public VP8L spec)
@@ -51,118 +34,6 @@ def _decode_one(data: bytes, fmt: str) -> np.ndarray:
         # (schema/batching) is identical — swap the codec in production
         raise NotImplementedError(f"codec '{fmt}' requires external library")
     return C.decode_image(data, fmt)
-
-
-def decode_stats(images: DataFrame) -> DataFrame:
-    """Decode every image; emit verification stats (crc32 of pixels,
-    recomputed phash, mean luma, dims check). The correctness gates
-    "decoded pixels allclose + captions byte-equal" are asserted against
-    these columns in tests/e2e."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            crc = np.zeros(n, dtype=np.int64)
-            mean = np.zeros(n, dtype=np.float64)
-            ok = np.zeros(n, dtype=bool)
-            dims_ok = np.zeros(n, dtype=bool)
-            imgs: list[np.ndarray | None] = [None] * n
-            for k, (b, f, w0, h0) in enumerate(
-                zip(pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"])
-            ):
-                try:
-                    img = _decode_one(bytes(b), f)
-                except (NotImplementedError, ValueError):
-                    continue
-                imgs[k] = img
-                crc[k] = zlib.crc32(img.tobytes()) & 0x7FFFFFFF
-                # exact mean luma from integer channel sums (bit-identical
-                # to fused.decoded_features' batched formula)
-                csum = img.sum(axis=(0, 1), dtype=np.int64)
-                mean[k] = float(
-                    (csum @ np.array([0.299, 0.587, 0.114]))
-                    / float(img.shape[0] * img.shape[1])
-                )
-                ok[k] = True
-                dims_ok[k] = img.shape[0] == h0 and img.shape[1] == w0
-            ph_dec = np.zeros(n, dtype=np.int64)
-            good = [k for k in range(n) if imgs[k] is not None]
-            if good:
-                ph_dec[np.array(good)] = C.phash64_batch([imgs[k] for k in good])
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "w": pdf["w"],
-                    "h": pdf["h"],
-                    "fmt": pdf["fmt"],
-                    "caption": pdf["caption"],
-                    "phash_stored": pdf["phash"],
-                    "phash_decoded": ph_dec,
-                    "pix_crc32": crc,
-                    "mean_luma": mean,
-                    "decode_ok": ok,
-                    "dims_ok": dims_ok,
-                }
-            )
-
-    cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
-    return images.select(*cols).mapInPandas(run, DECODE_STATS_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("rw", T.IntegerType()),
-        T.StructField("rh", T.IntegerType()),
-        T.StructField("pixels", T.BinaryType()),
-    ]
-)
-
-
-def resize_images(images: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
-    """Decode + area-resize to (out_h, out_w); emits raw RGB bytes.
-    Feature-extraction pattern for training pipelines (thumbnailing,
-    embedding preprocessing)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from gjspark.functions.codecs import _resize_matrix
-
-        rm_cache: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
-        for pdf in batches:
-            ids, blobs = [], []
-            for b, f, iid in zip(pdf["bytes"], pdf["fmt"], pdf["image_id"]):
-                try:
-                    img = _decode_one(bytes(b), f)
-                except (NotImplementedError, ValueError):
-                    continue
-                key = img.shape[:2]
-                if key not in rm_cache:
-                    rm_cache[key] = (
-                        _resize_matrix(key[0], out_h),
-                        _resize_matrix(key[1], out_w),
-                    )
-                A, B = rm_cache[key]
-                cf = img.transpose(2, 0, 1).astype(np.float64)  # (3, h, w)
-                small = (
-                    np.clip(A @ cf @ B.T, 0, 255)
-                    .astype(np.uint8)
-                    .transpose(1, 2, 0)
-                )
-                ids.append(iid)
-                blobs.append(small.tobytes())
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "image_id": ids,
-                        "rw": out_w,
-                        "rh": out_h,
-                        "pixels": blobs,
-                    }
-                )
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(run, RESIZE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

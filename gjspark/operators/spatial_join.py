@@ -15,12 +15,13 @@ PIP, broadcast path (the default; Feature sets are the dimension table):
      O(points + polygons + candidate edges), not points x polygons.
      No cover, no join, no shuffle.
 
-PIP, bucketed path (polygon sets too big to broadcast — requested with
-``broadcast_cover=False``, or chosen when step 1 passes
-``spark.sql.autoBroadcastJoinThreshold``):
-  1. cover every polygon with H3-style cells at ``res`` (distributed
-     ``mapInPandas`` over the features — no driver geometry work),
-  2. equi-join images on the cell column (a shuffle join on the cell key
+PIP, bucketed path (polygon sets too big to broadcast — chosen when
+step 1 passes ``spark.sql.autoBroadcastJoinThreshold``, or when that
+threshold is negative):
+  1. cover every polygon with H3-style cells at ``PIP_BUCKET_RES``
+     (distributed ``mapInPandas`` over the features — no driver geometry
+     work),
+  2. equi-join images on ``h3_r7`` (a shuffle join on the cell key
      unless Catalyst finds the cover small enough to broadcast),
   3. refine candidate pairs with the same ray-cast kernel (polygon WKB
      travels with the candidate row; parsed once per feature per task).
@@ -46,7 +47,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -54,6 +55,9 @@ from gjspark.functions import geometry as G
 from gjspark.functions import h3 as h3x
 
 _log = logging.getLogger(__name__)
+
+# bucketed PIP cover resolution; images join on the matching ``h3_r7``
+PIP_BUCKET_RES = 7
 
 # ---------------------------------------------------------------------------
 # Polygon cell cover (bucketed PIP only)
@@ -180,16 +184,14 @@ def _pip_broadcast(images: DataFrame, polys: list[tuple[str, bytes]]) -> DataFra
     )
 
 
-def _pip_bucketed(
-    images: DataFrame, features: DataFrame, res: int, cell_col: str
-) -> DataFrame:
+def _pip_bucketed(images: DataFrame, features: DataFrame) -> DataFrame:
     """Cover equi-join on the cell key, then the exact refine; no driver
     collect — geometry travels with the cover rows through the join."""
-    cover_geo = polygon_cover(features, res).join(
+    cover_geo = polygon_cover(features, PIP_BUCKET_RES).join(
         _polygon_features(features), "feature_id"
     )  # small x small
     cand = images.select(
-        "image_id", "lat", "lon", F.col(cell_col).alias("cell")
+        "image_id", "lat", "lon", F.col(f"h3_r{PIP_BUCKET_RES}").alias("cell")
     ).join(cover_geo, "cell")
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -216,29 +218,22 @@ def _pip_bucketed(
     return cand.mapInPandas(refine, _PIP_REFINE_SCHEMA)
 
 
-def pip_join(
-    images: DataFrame,
-    features: DataFrame,
-    res: int = 7,
-    cell_col: str | None = None,
-    broadcast_cover: bool = True,
-) -> DataFrame:
+def pip_join(images: DataFrame, features: DataFrame) -> DataFrame:
     """-> (image_id, feature_id) containment pairs.
 
-    ``broadcast_cover=True`` (the common case — Feature sets are the
-    dimension table, like the reference's entity caches): the polygon
-    features are streamed to the driver and broadcast as one
-    ``PolygonSet``, and one ``mapInPandas`` over ``images(image_id, lat,
-    lon)`` refines each batch against the whole set with the sparse
-    ``match_points`` kernel. No cover, no join, no cell column. If the
-    polygons' WKB passes ``spark.sql.autoBroadcastJoinThreshold`` (or the
-    threshold is negative, i.e. broadcasts are off), the collect stops and
-    the bucketed path runs instead.
+    Broadcast path (the common case — Feature sets are the dimension
+    table, like the reference's entity caches): the polygon features are
+    streamed to the driver and broadcast as one ``PolygonSet``, and one
+    ``mapInPandas`` over ``images(image_id, lat, lon)`` refines each batch
+    against the whole set with the sparse ``match_points`` kernel. No
+    cover, no join, no cell column.
 
-    ``broadcast_cover=False`` (polygon sets too big to broadcast): cover
-    the polygons with ``res`` cells, shuffle equi-join the images on
-    ``cell_col`` (default ``h3_r{res}``), then refine; at 100 TB both
-    sides pre-partitioned by cell avoid the shuffle entirely.
+    Bucketed path: if the polygons' WKB passes
+    ``spark.sql.autoBroadcastJoinThreshold`` (or the threshold is
+    negative, i.e. broadcasts are off), the collect stops; the polygons
+    are covered with ``PIP_BUCKET_RES`` cells, the images shuffle
+    equi-join on ``h3_r7``, and the same exact refine runs. At 100 TB
+    both sides pre-partitioned by cell avoid the shuffle entirely.
 
     The chosen path goes to ``logging`` with the feature count and the
     geometry bytes read. Both paths give the same pairs. The byte bound
@@ -247,25 +242,21 @@ def pip_join(
     to 50k polygons and from 2 km to 2 degrees across
     (``tools/pip_crossover.py``).
     """
-    if cell_col is None:
-        cell_col = f"h3_r{res}"
     limit = int(
         images.sparkSession._jsparkSession.sessionState()
         .conf()
         .autoBroadcastJoinThreshold()
     )
     polys, n_feat, n_bytes = None, 0, 0
-    if broadcast_cover and limit >= 0:
+    if limit >= 0:
         polys, n_feat, n_bytes = _collect_polygons(features, limit)
     _log.info(
-        "pip_join path=%s broadcast_cover=%s features=%d geometry_bytes=%d "
-        "broadcast_threshold=%d",
-        "bucketed" if polys is None else "broadcast",
-        broadcast_cover, n_feat, n_bytes, limit,
+        "pip_join path=%s features=%d geometry_bytes=%d broadcast_threshold=%d",
+        "bucketed" if polys is None else "broadcast", n_feat, n_bytes, limit,
     )
     if polys is not None:
         return _pip_broadcast(images, polys)
-    return _pip_bucketed(images, features, res, cell_col)
+    return _pip_bucketed(images, features)
 
 
 # ---------------------------------------------------------------------------

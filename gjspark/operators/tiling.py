@@ -1,14 +1,11 @@
-"""Raster<->vector tiling join (J7, north rule) with explicit hot-cell
-skew handling.
+"""Raster<->vector tiling join (J7, north rule): per-cell mosaic plans
+that decode straight from the image bytes, with explicit hot-cell skew
+handling, plus the integer-partial merge every mosaic plan shares.
 
-Two plans, chosen by what the aggregate needs:
-
-- :func:`cell_tile_rollup` — per-cell tile *statistics*. Decode + tile
-  math run map-side on the scan partitioning (balanced by row count, so
-  cell skew cannot touch the Python stage); the only shuffle carries tiny
-  per-image stat rows into a partial-aggregated ``groupBy(cell)``. This
-  is the plan shape to prefer whenever the per-cell result is a
-  commutative monoid.
+Per-cell tile *statistics* and the production mosaic come from the single
+decode pass in :mod:`gjspark.operators.fused`; this module holds the
+decode-from-bytes mosaic plans and :func:`_merge_mosaic_partials`, which
+``fused.mosaic_from_features`` reuses.
 
 - :func:`cell_mosaic` — per-cell tile *materialization* (mean-thumbnail
   mosaic). Here every member tile must meet in one place, so the shuffle
@@ -18,6 +15,9 @@ Two plans, chosen by what the aggregate needs:
   merge adds them. Integer accumulation makes salted output byte-identical
   to unsalted (tested). AQE can split skewed *shuffle partitions* but not
   a skewed ``applyInPandas`` group — hence the explicit salt.
+- :func:`cell_mosaic_mapcombine` — map-side per-cell partials, then the
+  same merge; the byte reference ``mosaic_from_features`` is tested
+  against.
 
 At 10^12-image scale the histogram is a cheap two-column
 ``groupBy(cell).count()`` over the (pruned) cell column, and the salt map
@@ -35,145 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gjspark.functions import codecs as C
-
-TILE = 16  # pixels per tile edge
-
-TILES_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("cell", T.LongType()),
-        T.StructField("tile_x", T.IntegerType()),
-        T.StructField("tile_y", T.IntegerType()),
-        T.StructField("tile_w", T.IntegerType()),
-        T.StructField("tile_h", T.IntegerType()),
-        T.StructField("tile_mean", T.DoubleType()),
-        T.StructField("tile", T.BinaryType()),
-    ]
-)
-
-
-def explode_tiles(
-    images: DataFrame, cell_col: str = "h3_r7", with_bytes: bool = True
-) -> DataFrame:
-    """Decode each image and emit one row per TILE x TILE pixel tile."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows_id, rows_cell, tx, ty, tw, th, tmean, tbytes = (
-                [], [], [], [], [], [], [], [],
-            )
-            for iid, cell, b, f in zip(
-                pdf["image_id"], pdf["cell"], pdf["bytes"], pdf["fmt"]
-            ):
-                try:
-                    img = C.decode_image(bytes(b), f)
-                except (ValueError, NotImplementedError):
-                    continue
-                h, w, _ = img.shape
-                for y0 in range(0, h, TILE):
-                    for x0 in range(0, w, TILE):
-                        t = img[y0 : y0 + TILE, x0 : x0 + TILE]
-                        rows_id.append(iid)
-                        rows_cell.append(cell)
-                        tx.append(x0 // TILE)
-                        ty.append(y0 // TILE)
-                        tw.append(t.shape[1])
-                        th.append(t.shape[0])
-                        tmean.append(float(t.mean()))
-                        tbytes.append(t.tobytes() if with_bytes else b"")
-            if rows_id:
-                yield pd.DataFrame(
-                    {
-                        "image_id": rows_id,
-                        "cell": np.array(rows_cell, dtype=np.int64),
-                        "tile_x": np.array(tx, dtype=np.int32),
-                        "tile_y": np.array(ty, dtype=np.int32),
-                        "tile_w": np.array(tw, dtype=np.int32),
-                        "tile_h": np.array(th, dtype=np.int32),
-                        "tile_mean": tmean,
-                        "tile": tbytes,
-                    }
-                )
-
-    return images.select(
-        "image_id", F.col(cell_col).alias("cell"), "bytes", "fmt"
-    ).mapInPandas(run, TILES_SCHEMA)
-
-
-_IMG_TILE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("cell", T.LongType()),
-        T.StructField("n_tiles_img", T.LongType()),
-        T.StructField("luma_wsum", T.DoubleType()),
-        T.StructField("px", T.LongType()),
-        T.StructField("min_tm", T.DoubleType()),
-        T.StructField("max_tm", T.DoubleType()),
-        T.StructField("phash", T.LongType()),
-    ]
-)
-
-
-def image_tile_stats(images: DataFrame, cell_col: str = "h3_r7") -> DataFrame:
-    """Per-image tile statistics, fully vectorized (integral-image tile
-    sums; no per-tile Python rows). Produces exactly the quantities
-    ``cell_tile_rollup`` aggregates; ~10x faster than exploding tiles when
-    the tile bytes themselves aren't needed."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, cells, imgs, phs = [], [], [], []
-            for iid, cell, b, f, ph in zip(
-                pdf["image_id"], pdf["cell"], pdf["bytes"], pdf["fmt"], pdf["phash"]
-            ):
-                try:
-                    imgs.append(C.decode_image(bytes(b), f))
-                except (ValueError, NotImplementedError):
-                    continue
-                ids.append(iid)
-                cells.append(cell)
-                phs.append(ph)
-            if not ids:
-                continue
-            out = {
-                "image_id": [], "cell": [], "n_tiles_img": [],
-                "luma_wsum": [], "px": [], "min_tm": [], "max_tm": [],
-                "phash": [],
-            }
-            by_shape: dict[tuple, list[int]] = {}
-            for k, im in enumerate(imgs):
-                by_shape.setdefault(im.shape, []).append(k)
-            for (h, w, _c), idxs in by_shape.items():
-                # integer tile sums via double reduceat over the channel
-                # sum — exact at ANY image size (a 16x16 tile sums to at
-                # most 16*16*765 < 2^31), bit-identical to fused.py's
-                # decoded_features and to the old integral-image path
-                stack = np.stack([imgs[k] for k in idxs])  # (n, h, w, 3)
-                cs = stack.sum(axis=3, dtype=np.int32)  # (n, h, w)
-                ys = np.arange(0, h, TILE)
-                xs = np.arange(0, w, TILE)
-                s = np.add.reduceat(
-                    np.add.reduceat(cs, ys, axis=1), xs, axis=2
-                )  # (n, gy, gx) int32
-                gy, gx = len(ys), len(xs)
-                areas = 3.0 * np.outer(
-                    np.minimum(ys + TILE, h) - ys, np.minimum(xs + TILE, w) - xs
-                )[None, :, :]
-                means = s / areas
-                for j, k in enumerate(idxs):
-                    out["image_id"].append(ids[k])
-                    out["cell"].append(cells[k])
-                    out["n_tiles_img"].append(gy * gx)
-                    out["luma_wsum"].append(float(s[j].sum()) / 3.0)
-                    out["px"].append(int((areas / 3.0).sum()))
-                    out["min_tm"].append(float(means[j].min()))
-                    out["max_tm"].append(float(means[j].max()))
-                    out["phash"].append(phs[k])
-            yield pd.DataFrame(out)
-
-    return images.select(
-        "image_id", F.col(cell_col).alias("cell"), "bytes", "fmt", "phash"
-    ).mapInPandas(run, _IMG_TILE_SCHEMA)
 
 
 def salt_map(
@@ -195,37 +56,6 @@ def salt_map(
     )
 
 
-def cell_tile_rollup(
-    images: DataFrame,
-    cell_col: str = "h3_r7",
-) -> DataFrame:
-    """Per-cell tile statistics, shuffle-minimal.
-
-    -> (cell, n_images, n_tiles, mean_tile_luma, phash_xor, min_tile_mean,
-        max_tile_mean). Decode + per-image tile stats run map-side on the
-    input partitioning (balanced by row count regardless of cell skew);
-    the only shuffle carries the tiny per-image stat rows into a
-    partial-aggregated ``groupBy(cell)``. Hot cells therefore cannot skew
-    this plan at all — salting is only needed when a cell's tiles must be
-    *materialized together*, which is :func:`cell_mosaic`'s job.
-    ``phash_xor`` is an order-independent per-cell checksum used by tests.
-    """
-    # phase 1: vectorized per-image tile stats on the scan partitioning
-    per_image = image_tile_stats(images, cell_col)
-    # phase 2: merge partials per cell (all commutative monoids)
-    xor_agg = F.expr(
-        "aggregate(collect_list(phash), cast(0 as bigint), (a, x) -> a ^ x)"
-    )
-    return per_image.groupBy("cell").agg(
-        F.countDistinct("image_id").alias("n_images"),
-        F.sum("n_tiles_img").alias("n_tiles"),
-        (F.sum("luma_wsum") / F.sum("px")).alias("mean_tile_luma"),
-        xor_agg.alias("phash_xor"),
-        F.min("min_tm").alias("min_tile_mean"),
-        F.max("max_tm").alias("max_tile_mean"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Per-cell mosaic: the operator that genuinely needs salted repartitioning
 # ---------------------------------------------------------------------------
@@ -243,8 +73,6 @@ def _merge_mosaic_partials(parts: DataFrame) -> DataFrame:
     dominant mosaic cost when cells are plentiful); integer addition is
     order-independent so the partition-level merge is byte-identical.
     """
-    px_len = MOSAIC_SIZE * MOSAIC_SIZE * 3
-
     def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cells_l, ns_l, mats_l = [], [], []
         for pdf in batches:

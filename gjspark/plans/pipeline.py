@@ -1,7 +1,7 @@
 """The end-to-end spatial pipeline (the engine's flagship job).
 
 features(GeoJSON) + images(Iceberg-shaped) ->
-  cells (H3 r7-12 + S2) -> PIP join -> kNN -> salted tile rollup
+  cells (H3 r7-12 + S2) -> PIP join -> kNN -> per-cell tile rollup
   -> checkpointed outputs with lineage + metrics.
 
 One lazy DAG per output; barriers only where semantics require (kNN ring
@@ -11,20 +11,17 @@ gjspark.plans.job`` (see ``job.py``).
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gjspark.functions import geometry as G
 from gjspark.operators.cells import with_cell_columns
 from gjspark.operators.entities import CreatorConfig, create_entities, nuts_config
+from gjspark.operators.fused import decoded_features, rollup_from_features
 from gjspark.operators.spatial_join import knn_join, pip_join
-from gjspark.operators.tiling import cell_tile_rollup
 from gjspark.operators.upsert import find_or_create
 from gjspark.sources.geojson import read_feature_collection
 from gjspark.sources.images import read_images
@@ -92,7 +89,8 @@ def build_pipeline(
     # blob-free projection so callers can cache THAT. Caching the full
     # frame pins the payload column — ~15x the bytes at any scale — in
     # storage memory for stages that never read it; the single decode
-    # consumer (rollup) streams blobs straight off the scan instead.
+    # consumer (the rollup's decoded_features pass) streams blobs
+    # straight off the scan instead.
     slim = images.drop("bytes")
     return {
         "features": features,
@@ -101,7 +99,7 @@ def build_pipeline(
         "locations": upserted,
         "pip": pip_join(slim, features),
         "knn": knn_join(slim, loc_points),
-        "rollup": cell_tile_rollup(images),
+        "rollup": rollup_from_features(decoded_features(images)),
     }
 
 

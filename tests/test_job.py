@@ -67,3 +67,36 @@ def test_job_cli_end_to_end(fixtures_dir, tmp_path):
     s2 = json.loads([ln for ln in r2.stdout.splitlines() if ln.startswith("{")][-1])
     assert s2["knn_rows"] == summary["knn_rows"]
     assert s2["pip_rows"] == summary["pip_rows"]
+
+
+def test_pipeline_rollup_skips_stub_format_rows(spark, fixtures_dir, tmp_path):
+    """A row in a format with no codec here (avif) is left out of the
+    rollup as an undecodable image; it does not fail the job."""
+    import numpy as np
+    import pandas as pd
+
+    from gjspark.functions import h3 as h3x
+    from gjspark.plans.checkpoint import read_checkpointed
+    from gjspark.plans.pipeline import run_pipeline
+
+    unit = pq.read_table(f"{fixtures_dir}/images_sf_unit.parquet").to_pandas()
+    stub = unit.iloc[[0]].assign(image_id="stub-avif", fmt="avif", bytes=b"\0" * 64)
+    images_path = str(tmp_path / "images.parquet")
+    pd.concat([unit, stub], ignore_index=True).to_parquet(images_path)
+
+    summary = run_pipeline(
+        spark,
+        images_path,
+        f"{fixtures_dir}/features_nuts.geojson",
+        str(tmp_path / "out"),
+        n_parts=8,
+    )
+    roll = read_checkpointed(spark, str(tmp_path / "out" / "rollup")).toPandas()
+    # the stub row shares its cell with unit row 0, whose count must not grow
+    cells = h3x.h3_index(unit["lat"].to_numpy(), unit["lon"].to_numpy(), 7)
+    exp = pd.Series(cells).value_counts()
+    got = roll.set_index("cell")["n_images"]
+    assert dict(zip(got.index.astype(np.int64), got.astype(np.int64))) == dict(
+        zip(exp.index.astype(np.int64), exp.astype(np.int64))
+    )
+    assert summary["rollup_rows"] == len(exp)

@@ -2,6 +2,9 @@
 (SURVEY.md §5.5): cell assignment, PIP join (broadcast + bucketed), kNN,
 decode invariants, salted tiling == unsalted tiling."""
 
+import zlib
+from contextlib import contextmanager
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -10,9 +13,8 @@ from pyspark.sql import functions as F
 from gjspark.fixtures import generator as gen
 from gjspark.functions import codecs as C
 from gjspark.operators.cells import with_cell_columns
-from gjspark.operators.multimodal import decode_stats
+from gjspark.operators.fused import decoded_features, rollup_from_features
 from gjspark.operators.spatial_join import knn_join, pip_join
-from gjspark.operators.tiling import cell_tile_rollup
 from gjspark.sources.geojson import read_feature_collection
 
 
@@ -27,6 +29,15 @@ def images(spark, fixtures_dir):
     ).cache()
     df.count()
     return df
+
+
+@pytest.fixture(scope="module")
+def decoded(images):
+    """The corpus decoded once for every test that reads decode stats or
+    tile rollups."""
+    feat = decoded_features(images).cache()
+    yield feat
+    feat.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -65,9 +76,25 @@ def test_cell_assignment_matches_golden(images, fixtures_dir):
         assert (got[col].to_numpy() == exp[col].to_numpy()).all(), col
 
 
+@contextmanager
+def _broadcast_threshold(spark, value: str | None):
+    """Run the block with spark.sql.autoBroadcastJoinThreshold set to
+    ``value`` (None: unchanged), then restore the old setting. "-1" turns
+    broadcasts off, which sends ``pip_join`` down its bucketed path."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 @pytest.mark.parametrize("broadcast", [True, False])
-def test_pip_join_matches_golden(images, features, fixtures_dir, broadcast):
-    got = pip_join(images, features, broadcast_cover=broadcast).toPandas()
+def test_pip_join_matches_golden(spark, images, features, fixtures_dir, broadcast):
+    with _broadcast_threshold(spark, None if broadcast else "-1"):
+        got = pip_join(images, features).toPandas()
     exp = pd.read_parquet(f"{fixtures_dir}/expected_pip.parquet")
     got_set = set(zip(got["image_id"], got["feature_id"]))
     exp_set = set(zip(exp["image_id"], exp["feature_id"]))
@@ -96,18 +123,13 @@ def test_pip_over_broadcast_threshold_takes_bucketed_path(
 ):
     """Geometry bytes past autoBroadcastJoinThreshold: the collect stops,
     the bucketed plan runs, the pairs still equal the golden."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "100")
-    try:
+    with _broadcast_threshold(spark, "100"):
         with caplog.at_level("INFO", logger="gjspark.operators.spatial_join"):
             df = pip_join(images, features)
         got = _pairs(df)
         plan = _plan(df)
-    finally:
-        spark.conf.set(key, old)
     msgs = [r.getMessage() for r in caplog.records if r.name.endswith("spatial_join")]
-    assert len(msgs) == 1 and "path=bucketed broadcast_cover=True" in msgs[0], msgs
+    assert len(msgs) == 1 and "path=bucketed" in msgs[0], msgs
     assert "Join" in plan, plan
     exp = pd.read_parquet(f"{fixtures_dir}/expected_pip.parquet")
     assert got == set(zip(exp["image_id"], exp["feature_id"]))
@@ -181,8 +203,9 @@ def test_pip_edge_cases_both_paths_match_oracle(spark, tmp_path):
             ("ring", "holed"), ("multi_a", "multi"), ("multi_b", "multi"),
             ("shared_edge", "east"),
         }
-        for broadcast in (True, False):
-            assert _pairs(pip_join(images, features, broadcast_cover=broadcast)) == oracle
+        for threshold in (None, "-1"):  # broadcast path, then bucketed
+            with _broadcast_threshold(spark, threshold):
+                assert _pairs(pip_join(images, features)) == oracle
     finally:
         features.unpersist()
 
@@ -213,8 +236,10 @@ def test_knn_cellwise_variant_matches_golden(images, locations, fixtures_dir):
     assert (m["nearest_location_id_got"] == m["nearest_location_id_exp"]).all()
 
 
-def test_decode_invariants(images, fixtures_dir):
-    stats = decode_stats(images).toPandas().sort_values("image_id").reset_index(drop=True)
+def test_decode_invariants(decoded, fixtures_dir):
+    stats = (
+        decoded.drop("thumb").toPandas().sort_values("image_id").reset_index(drop=True)
+    )
     exp = (
         pd.read_parquet(f"{fixtures_dir}/expected_images.parquet")
         .sort_values("image_id")
@@ -267,14 +292,14 @@ def test_mosaic_salted_equals_unsalted(images):
     assert int(salted["n_images"].sum()) == images.count()
 
 
-def test_rollup_totals(images):
-    roll = cell_tile_rollup(images).toPandas()
+def test_rollup_totals(images, decoded):
+    roll = rollup_from_features(decoded).toPandas()
     assert int(roll["n_images"].sum()) == images.count()
     assert (roll["n_tiles"] >= roll["n_images"]).all()
 
 
-def test_tiling_counts_match_pixel_math(images):
-    roll = cell_tile_rollup(images).agg(F.sum("n_tiles")).collect()[0][0]
+def test_tiling_counts_match_pixel_math(images, decoded):
+    roll = rollup_from_features(decoded).agg(F.sum("n_tiles")).collect()[0][0]
     tile = 16
     pdf = images.select("w", "h").toPandas()
     exp = int(
@@ -307,46 +332,65 @@ def test_mosaic_mapcombine_equals_salted(images):
         assert bytes(x) == bytes(y)
 
 
-def test_fused_pipeline_matches_standalone(images):
-    """decoded_features must reproduce decode_stats, cell_tile_rollup and
-    cell_mosaic exactly from ONE decode pass (the 100TB plan shape)."""
-    from gjspark.operators.fused import (
-        decoded_features,
-        mosaic_from_features,
-        rollup_from_features,
+_LUMA = np.array([0.299, 0.587, 0.114])
+_TILE = 16
+
+
+def _reference_image_stats(image_id, data, fmt, w, h) -> dict:
+    """One image's decode stats and tile stats, computed independently of
+    ``decoded_features``: a single ``codecs.decode_image``, int64 channel
+    sums, ``phash64_batch`` on the image alone and ``reduceat`` tile
+    sums, where the fused kernel batches images by shape and runs float64
+    GEMMs."""
+    img = C.decode_image(bytes(data), fmt)
+    ih, iw, _ = img.shape
+    csum = img.sum(axis=(0, 1), dtype=np.int64)
+    ys, xs = np.arange(0, ih, _TILE), np.arange(0, iw, _TILE)
+    tiles = np.add.reduceat(
+        np.add.reduceat(img.sum(axis=2, dtype=np.int64), ys, axis=0), xs, axis=1
     )
+    areas = np.outer(np.minimum(ys + _TILE, ih) - ys, np.minimum(xs + _TILE, iw) - xs)
+    means = tiles / (3.0 * areas)
+    return {
+        "image_id": image_id,
+        "pix_crc32": zlib.crc32(img.tobytes()) & 0x7FFFFFFF,
+        "phash_decoded": int(C.phash64_batch([img])[0]),
+        "mean_luma": float(
+            (csum[0] * _LUMA[0] + csum[1] * _LUMA[1] + csum[2] * _LUMA[2]) / float(ih * iw)
+        ),
+        "decode_ok": True,
+        "dims_ok": ih == h and iw == w,
+        "n_tiles_img": len(ys) * len(xs),
+        "luma_wsum": float(tiles.sum()) / 3.0,
+        "px": int(areas.sum()),
+        "min_tm": float(means.min()),
+        "max_tm": float(means.max()),
+    }
+
+
+def test_fused_pipeline_matches_standalone(images):
+    """decoded_features must reproduce, from ONE decode pass (the 100TB
+    plan shape), an independent per-image decode of every image, and
+    mosaic_from_features must equal the map-combine mosaic plan byte for
+    byte."""
+    from gjspark.operators.fused import mosaic_from_features
     from gjspark.operators.tiling import cell_mosaic_mapcombine
 
     sub = images.limit(6000).repartition(32).cache()
     feat = decoded_features(sub).cache()
     try:
-        # decode stats parity (crc32 / phash / luma / flags)
-        a = (
-            feat.select(
-                "image_id", "pix_crc32", "phash_decoded", "mean_luma",
-                "decode_ok", "dims_ok",
-            )
+        ref = pd.DataFrame(
+            [
+                _reference_image_stats(*r)
+                for r in sub.select("image_id", "bytes", "fmt", "w", "h").collect()
+            ]
+        ).sort_values("image_id").reset_index(drop=True)
+        got = (
+            feat.select(*ref.columns)
             .toPandas().sort_values("image_id").reset_index(drop=True)
         )
-        b = (
-            decode_stats(sub)
-            .select(
-                "image_id", "pix_crc32", "phash_decoded", "mean_luma",
-                "decode_ok", "dims_ok",
-            )
-            .toPandas().sort_values("image_id").reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(a, b)
-        # rollup parity (exact, including float luma columns)
-        ra = (
-            rollup_from_features(feat).toPandas()
-            .sort_values("cell").reset_index(drop=True)
-        )
-        rb = (
-            cell_tile_rollup(sub).toPandas()
-            .sort_values("cell").reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(ra, rb)
+        # decode stats and tile stats, per image, exact (float columns too)
+        pd.testing.assert_frame_equal(got, ref, check_exact=True)
         # mosaic byte parity vs the map-combine plan
         ma = (
             mosaic_from_features(feat).toPandas()

@@ -6,8 +6,10 @@ on seeded synthetic inputs that stay under that threshold while the
 polygon count grows: ``n`` ``verts``-gon features of ``radius`` degrees
 (default 0.01, about 2 km across: the size of a res-7 cell, which is the
 cover join's best case) scattered over a Europe-sized box, and ``points``
-image rows over the same box. Each run checks that both paths return the
-same pair set.
+image rows over the same box. The bucketed path is forced by setting
+``spark.sql.autoBroadcastJoinThreshold`` to -1 around its runs, so its
+cover join cannot be broadcast either. Each run checks that both paths
+return the same pair set.
 
 Usage: python tools/pip_crossover.py [--polys 200,5000,50000]
        [--points 100000] [--verts 16] [--radius 0.01] [--reps 3]
@@ -24,6 +26,7 @@ import os
 import statistics
 import sys
 import time
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -31,6 +34,21 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BOX = (-10.0, 35.0, 30.0, 60.0)  # lon_min, lat_min, lon_max, lat_max
+
+
+@contextmanager
+def _path(spark, broadcast: bool):
+    """Run the block on ``pip_join``'s broadcast path (threshold
+    unchanged) or its bucketed path (threshold -1), then restore the
+    threshold."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if not broadcast:
+        spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def synth_features(n: int, verts: int, radius: float, seed: int) -> pd.DataFrame:
@@ -93,19 +111,21 @@ def main() -> None:
         feats.count()
         pairs = {}
         for broadcast in (True, False):
-            pairs[broadcast] = set(
-                map(tuple, pip_join(images, feats, broadcast_cover=broadcast)
-                    .toPandas()[["image_id", "feature_id"]].to_numpy())
-            )
+            with _path(spark, broadcast):
+                pairs[broadcast] = set(
+                    map(tuple, pip_join(images, feats)
+                        .toPandas()[["image_id", "feature_id"]].to_numpy())
+                )
         same = pairs[True] == pairs[False]
         walls = {True: [], False: []}
         for _ in range(args.reps):  # alternate the paths
             for broadcast in (True, False):
-                t0 = time.perf_counter()
-                pip_join(images, feats, broadcast_cover=broadcast).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                walls[broadcast].append(time.perf_counter() - t0)
+                with _path(spark, broadcast):
+                    t0 = time.perf_counter()
+                    pip_join(images, feats).write.format(
+                        "noop"
+                    ).mode("overwrite").save()
+                    walls[broadcast].append(time.perf_counter() - t0)
         feats.unpersist()
         for broadcast in (True, False):
             print(json.dumps({
