@@ -139,14 +139,6 @@ def encode_png(img: np.ndarray, level: int = 6) -> bytes:
     )
 
 
-def _paeth_predict(a, b, c):
-    p = a.astype(np.int16) + b.astype(np.int16) - c.astype(np.int16)
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c)).astype(
-        np.uint8
-    )
-
-
 def decode_png(data: bytes) -> np.ndarray:
     if data[: len(_PNG_SIG)] != _PNG_SIG:
         raise ValueError("not a PNG")
@@ -338,15 +330,6 @@ def _resize_matrix(src: int, dst: int = 32) -> np.ndarray:
         for c in range(int(np.floor(lo)), int(np.ceil(hi))):
             m[r, c] = min(hi, c + 1) - max(lo, c)
     return m / m.sum(axis=1, keepdims=True)
-
-
-_RESIZE_CACHE: dict[int, np.ndarray] = {}
-
-
-def _rm(n: int) -> np.ndarray:
-    if n not in _RESIZE_CACHE:
-        _RESIZE_CACHE[n] = _resize_matrix(n)
-    return _RESIZE_CACHE[n]
 
 
 # ---------------------------------------------------------------------------

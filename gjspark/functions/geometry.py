@@ -157,8 +157,8 @@ class PolygonSet:
 
         Vectorized ray cast: one (points x edges) pass per ring, bbox
         prefiltered. Dense — one mask per polygon — so it is the
-        brute-force reference; :meth:`match_points` is the sparse kernel
-        the joins use.
+        brute-force reference; the joins use the sparse kernels
+        :meth:`match_points` and :meth:`refine_pairs`.
         """
         px = np.asarray(px, dtype=np.float64)
         py = np.asarray(py, dtype=np.float64)
@@ -191,10 +191,11 @@ class PolygonSet:
         sorted by (poly_ordinal, point_idx); equal to :meth:`contains`.
 
         Sparse: a sorted sweep of the points against the polygon bboxes
-        yields the candidate (point, polygon) pairs, and the ray cast runs
-        over candidate (point, edge) pairs only, in chunks of at most
-        ``budget`` elements. Working memory is O(points + polygons +
-        budget) whatever the polygon count; non-finite points never match.
+        yields the candidate (point, polygon) pairs, and
+        :meth:`refine_pairs` ray-casts them over candidate (point, edge)
+        pairs only, in chunks of at most ``budget`` elements. Working
+        memory is O(points + polygons + budget) whatever the polygon
+        count; non-finite points never match.
         """
         px = np.asarray(px, dtype=np.float64)
         py = np.asarray(py, dtype=np.float64)
@@ -213,16 +214,12 @@ class PolygonSet:
                 if best is None or cnt.sum() < best[0]:
                     best = (cnt.sum(), axis, ok[order], lo, cnt)
             _, axis, pts, lo, cnt = best
-            other = py if axis == 0 else px
-            o_min, o_max = self.bboxes[:, 1 - axis], self.bboxes[:, 3 - axis]
             for p0, p1 in _chunks(cnt, budget):
                 c = cnt[p0:p1]
                 poly = np.repeat(np.arange(p0, p1), c)
                 first = np.repeat(lo[p0:p1] - (np.cumsum(c) - c), c)
                 pt = pts[first + np.arange(len(poly))]
-                v = other[pt]
-                keep = (v >= o_min[poly]) & (v <= o_max[poly])
-                hit_pt, hit_poly = self._refine(px, py, pt[keep], poly[keep], budget)
+                hit_pt, hit_poly = self.refine_pairs(px, py, pt, poly, budget)
                 pt_out.append(hit_pt)
                 poly_out.append(hit_poly)
         if not pt_out:
@@ -231,10 +228,23 @@ class PolygonSet:
         order = np.lexsort((pt_idx, poly_ord))
         return pt_idx[order], poly_ord[order]
 
-    def _refine(self, px, py, pt, poly, budget):
-        """Even-odd ray cast of candidate pairs (pt[i], poly[i]) over
-        every edge of the polygon, ``budget`` (pair, edge) cells at a time;
-        -> the pairs whose crossing count is odd."""
+    def refine_pairs(
+        self, px, py, pt, poly, budget: int = 1 << 18
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """-> the candidate pairs (pt[i], poly[i]) whose point lies in the
+        polygon, in input order; equal to :meth:`contains` on every pair.
+
+        Pairs outside the polygon's bbox (non-finite points among them)
+        drop first; the rest get an even-odd ray cast over every edge of
+        their polygon, ``budget`` (pair, edge) cells at a time.
+        """
+        px = np.asarray(px, dtype=np.float64)
+        py = np.asarray(py, dtype=np.float64)
+        pt = np.asarray(pt, dtype=np.int64)
+        poly = np.asarray(poly, dtype=np.int64)
+        x, y, bb = px[pt], py[pt], self.bboxes[poly]
+        inb = (x >= bb[:, 0]) & (x <= bb[:, 2]) & (y >= bb[:, 1]) & (y <= bb[:, 3])
+        pt, poly = pt[inb], poly[inb]
         e0 = self.poly_edge_start[poly]
         ne = self.poly_edge_end[poly] - e0
         keep_pt, keep_poly = [], []

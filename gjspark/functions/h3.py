@@ -1294,7 +1294,3 @@ def face_boundary_margin_m(lat_deg, lng_deg) -> np.ndarray:
     dots = np.einsum("nd,ned->ne", p, _FACE_EDGE_N[face])
     ang = np.arcsin(np.clip(dots, 0, 1)).min(axis=1)
     return ang * EARTH_RADIUS_M
-
-
-def cols_for_point(lat_deg, lng_deg, resolutions=(7, 8, 9, 10, 11, 12)):
-    return latlng_to_cells_multi(lat_deg, lng_deg, resolutions)

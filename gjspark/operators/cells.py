@@ -64,13 +64,3 @@ def with_cell_columns(
     for f in _CELL_STRUCT.fields:
         tmp = tmp.withColumn(f.name, F.col(f"__cells.{f.name}"))
     return tmp.drop("__cells")
-
-
-def h3_index_udf(res: int):
-    @pandas_udf(T.LongType())
-    def _f(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(
-            h3x.h3_index(lat.to_numpy(dtype=float), lon.to_numpy(dtype=float), res)
-        )
-
-    return _f

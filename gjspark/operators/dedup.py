@@ -262,16 +262,6 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _token_hash64(tok: str) -> int:
-    """64-bit token hash = little-endian uint64 of md5 digest bytes
-    [8:16] — exactly DuckDB's ``md5_number_lower``, so the whole SimHash
-    pipeline has a bit-exact SQL oracle."""
-    import hashlib
-    import struct
-
-    return struct.unpack("<Q", hashlib.md5(tok.encode()).digest()[8:16])[0]
-
-
 def simhash_udf():
     _bitpos = np.arange(64, dtype=np.uint64)
 

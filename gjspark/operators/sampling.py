@@ -127,16 +127,6 @@ def sample_predicate_sql(
     return f"{h} < {cut}"
 
 
-def sample_sql_twin(
-    table_expr: str, id_col: str, fraction: float, salt: str = "sample"
-) -> str:
-    """DuckDB twin of :func:`deterministic_sample` (filter form)."""
-    return (
-        f"SELECT * FROM {table_expr} WHERE "
-        f"{sample_predicate_sql(id_col, fraction, salt)}"
-    )
-
-
 def split_case_sql(
     id_col: str,
     splits: dict[str, float] | None = None,

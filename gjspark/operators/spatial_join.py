@@ -23,21 +23,27 @@ threshold is negative):
      work),
   2. equi-join images on ``h3_r7`` (a shuffle join on the cell key
      unless Catalyst finds the cover small enough to broadcast),
-  3. refine candidate pairs with the same ray-cast kernel (polygon WKB
-     travels with the candidate row; parsed once per feature per task).
+  3. refine each batch of candidate pairs with ``refine_pairs``, the
+     pair kernel under ``match_points`` (polygon WKB travels with the
+     candidate row; the batch's distinct polygons make one ``PolygonSet``).
 
 The cover is a strict superset of cells containing any polygon point
 (dense grid at <= 0.35 x cell inradius + bbox expansion), so the bucketed
 refine never misses a true match. Both paths equal the brute-force
 ``PolygonSet`` oracle — ``tests/test_spatial.py``.
 
-kNN = sorted k-ring expansion + rank, with an exactness guarantee:
-  iterate k in (0, 1, 2, 4, 8): explode the k-ring of each unmatched
-  image's cell, equi-join against location cells, take the min-distance
-  candidate (``row_number`` with deterministic (dist, location_id)
-  tiebreak, W5); accept when the best distance is provably inside the
-  ring-radius guarantee, else widen. Survivors fall back to a broadcast
-  brute-force pass (exact), so results equal the oracle row-for-row.
+kNN, map-only (locations are the dimension side):
+  1. collect the locations to the driver, sorted by ``location_id``, and
+     broadcast them with a cell -> locations index at a resolution picked
+     from their spacing,
+  2. one ``mapInPandas`` over ``images(image_id, lat, lon)``: per distinct
+     cell of a batch, expand rings k in ``KNN_K_SCHEDULE`` and keep the
+     running best; accept it once its distance is provably inside the
+     ring-radius guarantee and the icosahedron-face margin, else widen,
+  3. rows still unproven get an exact brute-force pass over every
+     location in the same kernel. First-min over the sorted ids is the
+     deterministic (dist, location_id) tiebreak (W5), so results equal the
+     oracle row-for-row. No join, no shuffle.
 """
 
 from __future__ import annotations
@@ -59,6 +65,9 @@ _log = logging.getLogger(__name__)
 # bucketed PIP cover resolution; images join on the matching ``h3_r7``
 PIP_BUCKET_RES = 7
 
+# kNN ring radii tried in order before the exact fallback
+KNN_K_SCHEDULE = (0, 1, 2, 4, 8)
+
 # ---------------------------------------------------------------------------
 # Polygon cell cover (bucketed PIP only)
 # ---------------------------------------------------------------------------
@@ -78,13 +87,14 @@ def _polygon_features(features: DataFrame) -> DataFrame:
     ).select("feature_id", "geometry")
 
 
-def _cover_cells_for_wkb(wkb: bytes, res: int) -> np.ndarray:
-    """All res-cells whose region can intersect the polygon (superset)."""
+def _cover_cells_for_wkb(wkb: bytes) -> np.ndarray:
+    """All ``PIP_BUCKET_RES`` cells whose region can intersect the polygon
+    (superset)."""
     gtype, body = G.parse_wkb(wkb)
     polys = [body] if gtype == "Polygon" else body
     # grid spacing: cell inradius on the sphere, with margin for gnomonic
     # distortion; in degrees of latitude
-    edge_m = h3x.h3_edge_length_m(res)
+    edge_m = h3x.h3_edge_length_m(PIP_BUCKET_RES)
     step_deg = (edge_m * 0.866 * 0.35) / 111320.0
     cells = []
     for rings in polys:
@@ -97,20 +107,22 @@ def _cover_cells_for_wkb(wkb: bytes, res: int) -> np.ndarray:
         xs = np.arange(xmin - pad, xmax + pad + step_lon, step_lon)
         ys = np.arange(ymin - pad, ymax + pad + step_deg, step_deg)
         gx, gy = np.meshgrid(xs, ys)
-        cells.append(np.unique(h3x.h3_index(gy.ravel(), gx.ravel(), res)))
+        cells.append(np.unique(h3x.h3_index(gy.ravel(), gx.ravel(), PIP_BUCKET_RES)))
         for ring in rings:  # ring vertices too (degenerate slivers)
-            cells.append(np.unique(h3x.h3_index(ring[:, 1], ring[:, 0], res)))
+            cells.append(
+                np.unique(h3x.h3_index(ring[:, 1], ring[:, 0], PIP_BUCKET_RES))
+            )
     return np.unique(np.concatenate(cells))
 
 
-def polygon_cover(features: DataFrame, res: int) -> DataFrame:
+def polygon_cover(features: DataFrame) -> DataFrame:
     """features(feature_id, geometry WKB) -> (cell, feature_id) cover rows."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, cells = [], []
             for fid, wkb in zip(pdf["feature_id"], pdf["geometry"]):
-                cc = _cover_cells_for_wkb(bytes(wkb), res)
+                cc = _cover_cells_for_wkb(bytes(wkb))
                 cells.append(cc)
                 ids.extend([fid] * len(cc))
             if ids:
@@ -187,7 +199,7 @@ def _pip_broadcast(images: DataFrame, polys: list[tuple[str, bytes]]) -> DataFra
 def _pip_bucketed(images: DataFrame, features: DataFrame) -> DataFrame:
     """Cover equi-join on the cell key, then the exact refine; no driver
     collect — geometry travels with the cover rows through the join."""
-    cover_geo = polygon_cover(features, PIP_BUCKET_RES).join(
+    cover_geo = polygon_cover(features).join(
         _polygon_features(features), "feature_id"
     )  # small x small
     cand = images.select(
@@ -195,25 +207,22 @@ def _pip_bucketed(images: DataFrame, features: DataFrame) -> DataFrame:
     ).join(cover_geo, "cell")
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, G.PolygonSet] = {}
         for pdf in batches:
             if not len(pdf):
                 continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            lon = pdf["lon"].to_numpy(dtype=float)
-            lat = pdf["lat"].to_numpy(dtype=float)
-            for fid, grp in pdf.groupby("feature_id", sort=False):
-                ps = cache.get(fid)
-                if ps is None:
-                    ps = G.PolygonSet([fid], [bytes(grp["geometry"].iloc[0])])
-                    cache[fid] = ps
-                idx = grp.index.to_numpy()
-                pos = pdf.index.get_indexer(idx)
-                mask = ps.contains(lon[pos], lat[pos])[0]
-                keep[pos] = mask
-            out = pdf.loc[keep, ["image_id", "feature_id"]]
-            if len(out):
-                yield out
+            polys = pdf.drop_duplicates("feature_id")
+            ps = G.PolygonSet(
+                polys["feature_id"], [bytes(g) for g in polys["geometry"]]
+            )
+            ordinal = pd.Index(ps.poly_ids).get_indexer(pdf["feature_id"])
+            pt, _ = ps.refine_pairs(
+                pdf["lon"].to_numpy(dtype=float),
+                pdf["lat"].to_numpy(dtype=float),
+                np.arange(len(pdf)),
+                ordinal,
+            )
+            if len(pt):
+                yield pdf.iloc[pt][["image_id", "feature_id"]]
 
     return cand.mapInPandas(refine, _PIP_REFINE_SCHEMA)
 
@@ -285,20 +294,26 @@ def _choose_knn_res(loc_lat: np.ndarray, loc_lon: np.ndarray) -> int:
     return h3x.MAX_RES
 
 
-def knn_join_map(
-    images: DataFrame,
-    locations: DataFrame,
-    res: int | None = None,
-    k_schedule: tuple[int, ...] = (0, 1, 2, 4, 8),
-) -> DataFrame:
-    """Map-only cell-local kNN: sorted k-ring expansion executed inside one
-    ``mapInPandas`` pass against a broadcast cell->locations index.
+_KNN_SCHEMA = T.StructType(
+    [
+        T.StructField("image_id", T.StringType()),
+        T.StructField("nearest_location_id", T.StringType()),
+        T.StructField("dist_m", T.DoubleType()),
+    ]
+)
 
-    The default kNN path. Locations are the dimension side (broadcast —
-    exactly the reference's entity-cache pattern); each Arrow batch:
 
-    1. index query points at ``res`` and group by cell,
-    2. per distinct cell, expand rings k = 0, 1, 2, 4, 8 gathering
+def knn_join(images: DataFrame, locations: DataFrame) -> DataFrame:
+    """images(image_id, lat, lon) x locations(location_id, lat, lon)
+    -> (image_id, nearest_location_id, dist_m): map-only cell-local kNN,
+    sorted k-ring expansion inside one ``mapInPandas`` pass against a
+    broadcast cell->locations index.
+
+    Locations are the dimension side (broadcast — exactly the reference's
+    entity-cache pattern); each Arrow batch:
+
+    1. index query points at the ring resolution and group by cell,
+    2. per distinct cell, expand rings k in ``KNN_K_SCHEDULE`` gathering
        candidate locations from the broadcast index,
     3. accept the running best at distance d iff d <= k*inradius*0.8 AND
        d <= face-boundary margin (rings never cross icosahedron faces),
@@ -306,19 +321,20 @@ def knn_join_map(
        the full location array (vectorized, still in the same kernel).
 
     Zero shuffles => scales linearly with executors at any image count;
-    output equals the brute-force oracle row-for-row (tested). For
-    location sets too big to broadcast, use :func:`knn_join_cellwise`.
+    output equals the brute-force oracle row-for-row (tested). With no
+    locations the result is empty, as an inner join with an empty side.
     """
     spark = images.sparkSession
     loc_rows = locations.select("location_id", "lat", "lon").collect()
+    if not loc_rows:
+        return spark.createDataFrame([], _KNN_SCHEMA)
     loc_ids = np.array([r["location_id"] for r in loc_rows])
     loc_lat = np.array([r["lat"] for r in loc_rows], dtype=float)
     loc_lon = np.array([r["lon"] for r in loc_rows], dtype=float)
     order = np.argsort(loc_ids)
     loc_ids, loc_lat, loc_lon = loc_ids[order], loc_lat[order], loc_lon[order]
 
-    if res is None:
-        res = _choose_knn_res(loc_lat, loc_lon)
+    res = _choose_knn_res(loc_lat, loc_lon)
     inradius_m = 0.866 * h3x.h3_edge_length_m(res)
 
     loc_cells = h3x.h3_index(loc_lat, loc_lon, res)
@@ -327,19 +343,11 @@ def knn_join_map(
         cell_index.setdefault(int(c), []).append(i)
     cell_index = {c: np.array(v, dtype=np.int64) for c, v in cell_index.items()}
     bc = spark.sparkContext.broadcast(
-        (loc_ids, loc_lat, loc_lon, cell_index, res, inradius_m, tuple(k_schedule))
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType()),
-            T.StructField("nearest_location_id", T.StringType()),
-            T.StructField("dist_m", T.DoubleType()),
-        ]
+        (loc_ids, loc_lat, loc_lon, cell_index, res, inradius_m)
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_b, lat_b, lon_b, index_b, res_b, inr_b, ks = bc.value
+        ids_b, lat_b, lon_b, index_b, res_b, inr_b = bc.value
         # per-cell ring-candidate cache: cells repeat heavily across
         # batches, and ring lookups are the kernel's only Python-side loop
         cand_cache: dict[tuple[int, int], np.ndarray] = {}
@@ -369,11 +377,11 @@ def knn_join_map(
             best_i = np.full(n, -1, dtype=np.int64)
             resolved = np.zeros(n, dtype=bool)
             uniq, inv = np.unique(cells, return_inverse=True)
-            rings = {k: h3x.h3_kring(uniq, k) for k in ks}
+            rings = {k: h3x.h3_kring(uniq, k) for k in KNN_K_SCHEDULE}
             for g, cell in enumerate(uniq):
                 rows = np.nonzero(inv == g)[0]
                 seen_cand = 0
-                for k in ks:
+                for k in KNN_K_SCHEDULE:
                     cand = candidates(int(cell), k, rings[k][g])
                     if len(cand) > seen_cand:
                         act = rows[~resolved[rows]]
@@ -415,191 +423,4 @@ def knn_join_map(
                 }
             )
 
-    return images.select("image_id", "lat", "lon").mapInPandas(run, schema)
-
-
-def knn_join(
-    images: DataFrame,
-    locations: DataFrame,
-    res: int | None = None,
-    k_schedule: tuple[int, ...] = (0, 1, 2, 4, 8),
-) -> DataFrame:
-    """Default kNN entry point: map-only broadcast ring expansion."""
-    return knn_join_map(images, locations, res=res, k_schedule=k_schedule)
-
-
-def knn_join_cellwise(
-    images: DataFrame,
-    locations: DataFrame,
-    res: int | None = None,
-    k_schedule: tuple[int, ...] = (1, 3),
-) -> DataFrame:
-    """images(image_id, lat, lon) x locations(location_id, lat, lon)
-    -> (image_id, nearest_location_id, dist_m).
-
-    Sorted k-ring expansion with *provable* accepts: a best candidate at
-    distance d is the true nearest iff
-
-        d <= guarantee(k) = k * inradius * 0.8   (planar ring bound with
-                                                  gnomonic-distortion margin)
-        AND d <= face_boundary_margin(point)     (rings never cross
-                                                  icosahedron face edges)
-
-    ``res`` defaults to an adaptive choice from location spacing so round
-    k=1 resolves the vast majority. Rows that stay unprovable fall back to
-    one exact broadcast brute-force pass — output equals the brute-force
-    oracle row-for-row (tested), while at 10^12 scale only a sliver of
-    rows pay the fallback.  Locations are the broadcast side (dimension
-    table); a huge location set would instead use the bucketed cell join
-    of :func:`pip_join` as the candidate generator.
-    """
-    spark = images.sparkSession
-
-    loc_rows = locations.select("location_id", "lat", "lon").collect()
-    loc_ids = [r["location_id"] for r in loc_rows]
-    loc_lat = np.array([r["lat"] for r in loc_rows], dtype=float)
-    loc_lon = np.array([r["lon"] for r in loc_rows], dtype=float)
-    order = np.argsort(np.array(loc_ids))
-    loc_ids = [loc_ids[i] for i in order]
-    loc_lat, loc_lon = loc_lat[order], loc_lon[order]
-    bc = spark.sparkContext.broadcast((loc_ids, loc_lat, loc_lon))
-
-    if res is None:
-        res = _choose_knn_res(loc_lat, loc_lon)
-    inradius_m = 0.866 * h3x.h3_edge_length_m(res)
-
-    loc_cell = (
-        locations.select(
-            F.col("location_id"),
-            F.col("lat").alias("llat"),
-            F.col("lon").alias("llon"),
-        )
-        .withColumn("cell", _h3_udf(res)(F.col("llat"), F.col("llon")))
-    )
-
-    pending = (
-        images.select("image_id", "lat", "lon")
-        .withColumn("cell0", _h3_udf(res)(F.col("lat"), F.col("lon")))
-        .withColumn("margin_m", _face_margin_udf()(F.col("lat"), F.col("lon")))
-    )
-    resolved = []
-    for k in k_schedule:
-        guarantee_m = k * inradius_m * 0.8
-        ring = pending.withColumn(
-            "cell", F.explode(_kring_udf(res, k)(F.col("cell0")))
-        )
-        cand = ring.join(F.broadcast(loc_cell), "cell").withColumn(
-            "dist_m",
-            _haversine_col(F.col("lat"), F.col("lon"), F.col("llat"), F.col("llon")),
-        )
-        # top-1 per image via min(struct(dist, id)): partial-aggregates
-        # map-side (no sort, no window shuffle of full candidate rows) and
-        # the struct ordering gives the deterministic (dist, id) tiebreak
-        ok = (
-            cand.groupBy("image_id")
-            .agg(
-                F.min(F.struct("dist_m", "location_id")).alias("best"),
-                F.first("margin_m").alias("margin_m"),
-            )
-            .select(
-                "image_id",
-                F.col("best.location_id").alias("location_id"),
-                F.col("best.dist_m").alias("dist_m"),
-                "margin_m",
-            )
-            .filter(
-                (F.col("dist_m") <= F.lit(guarantee_m))
-                & (F.col("dist_m") <= F.col("margin_m"))
-            )
-            .select("image_id", "location_id", "dist_m")
-        )
-        resolved.append(ok)
-        pending = pending.join(
-            ok.select("image_id"), "image_id", "left_anti"
-        ).localCheckpoint(eager=False)
-
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType()),
-            T.StructField("location_id", T.StringType()),
-            T.StructField("dist_m", T.DoubleType()),
-        ]
-    )
-
-    def brute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, llat, llon = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            la = pdf["lat"].to_numpy(dtype=float)
-            lo = pdf["lon"].to_numpy(dtype=float)
-            best_d = np.full(len(pdf), np.inf)
-            best_i = np.zeros(len(pdf), dtype=np.int64)
-            for j in range(len(ids)):  # ids sorted -> first-min = min id tiebreak
-                d = G.haversine_m(la, lo, llat[j], llon[j])
-                upd = d < best_d
-                best_d = np.where(upd, d, best_d)
-                best_i = np.where(upd, j, best_i)
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "location_id": [ids[i] for i in best_i],
-                    "dist_m": best_d,
-                }
-            )
-
-    fallback = pending.select("image_id", "lat", "lon").mapInPandas(brute, schema)
-    resolved.append(fallback)
-
-    out = resolved[0]
-    for df in resolved[1:]:
-        out = out.unionByName(df)
-    return out.withColumnRenamed("location_id", "nearest_location_id")
-
-
-def _h3_udf(res: int):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.LongType())
-    def _f(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(
-            h3x.h3_index(lat.to_numpy(dtype=float), lon.to_numpy(dtype=float), res)
-        )
-
-    return _f
-
-
-def _kring_udf(res: int, k: int):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _f(cell: pd.Series) -> pd.Series:
-        kr = h3x.h3_kring(cell.to_numpy(dtype=np.int64), k)
-        return pd.Series(list(kr))
-
-    return _f
-
-
-def _face_margin_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.DoubleType())
-    def _f(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(
-            h3x.face_boundary_margin_m(
-                lat.to_numpy(dtype=float), lon.to_numpy(dtype=float)
-            )
-        )
-
-    return _f
-
-
-def _haversine_col(lat1, lon1, lat2, lon2):
-    """Haversine in meters as native Column expressions (JVM-side, no UDF)."""
-    rlat1, rlat2 = F.radians(lat1), F.radians(lat2)
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    h = F.pow(F.sin(dlat / 2), 2) + F.cos(rlat1) * F.cos(rlat2) * F.pow(
-        F.sin(dlon / 2), 2
-    )
-    return 2 * F.lit(G.EARTH_RADIUS_M) * F.asin(F.sqrt(F.least(h, F.lit(1.0))))
+    return images.select("image_id", "lat", "lon").mapInPandas(run, _KNN_SCHEMA)

@@ -69,7 +69,8 @@ def _star(rng, cx, cy, r, n):
 
 
 def test_match_points_equals_dense_contains():
-    """The sparse kernel gives exactly the dense kernel's pairs: holes,
+    """The sparse kernels (``match_points`` and ``refine_pairs`` on explicit
+    candidate pairs) give exactly the dense kernel's pairs: holes,
     MultiPolygons (one of them empty), grid-snapped boundary points, non-finite points, tall
     and wide strips (both sweep axes) and every chunk size."""
     rng = np.random.default_rng(0)
@@ -101,6 +102,23 @@ def test_match_points_equals_dense_contains():
         for budget in (1, 7, 1 << 18):
             pt, po = ps.match_points(px, py, budget=budget)
             assert list(zip(po.tolist(), pt.tolist())) == exp, (trial, budget)
+        # explicit candidate pairs: random ones (mostly outside the bbox),
+        # every non-finite point and every point against the empty polygon
+        n_poly = len(wkbs)
+        pt = np.concatenate([
+            rng.integers(0, len(px), 2000), np.repeat(np.arange(8), n_poly),
+            np.arange(len(px)),
+        ])
+        po = np.concatenate([
+            rng.integers(0, n_poly, 2000), np.tile(np.arange(n_poly), 8),
+            np.full(len(px), n_poly - 1),
+        ])
+        dense = np.array(ps.contains(px, py))
+        keep = dense[po, pt]
+        for budget in (1, 7, 1 << 18):
+            hit_pt, hit_po = ps.refine_pairs(px, py, pt, po, budget=budget)
+            assert hit_pt.tolist() == pt[keep].tolist(), (trial, budget)
+            assert hit_po.tolist() == po[keep].tolist(), (trial, budget)
 
 
 def test_match_points_memory_is_sparse():

@@ -210,30 +210,27 @@ def test_pip_edge_cases_both_paths_match_oracle(spark, tmp_path):
         features.unpersist()
 
 
-def test_knn_matches_golden(images, locations, fixtures_dir):
-    got = knn_join(images, locations).toPandas()
+@pytest.mark.parametrize("repartitioned", [False, True])
+def test_knn_matches_golden(images, locations, fixtures_dir, repartitioned):
+    """The whole corpus, and a 5000-row slice spread over 32 partitions:
+    the kernel's answer does not depend on the partitioning."""
+    imgs = images.limit(5000).repartition(32) if repartitioned else images
+    got = knn_join(imgs, locations).toPandas()
     exp = pd.read_parquet(f"{fixtures_dir}/expected_knn.parquet")
-    assert len(got) == len(exp)
+    assert len(got) == (5000 if repartitioned else len(exp))
     m = got.merge(exp, on="image_id", suffixes=("_got", "_exp"))
+    assert len(m) == len(got)
     assert (m["nearest_location_id_got"] == m["nearest_location_id_exp"]).all()
     assert np.allclose(m["dist_m_got"], m["dist_m_exp"], atol=0.01)
 
 
-def test_knn_cellwise_variant_matches_golden(images, locations, fixtures_dir):
-    """The shuffle-join variant (for non-broadcastable location sets) must
-    agree with the map-only default and the oracle."""
-    from gjspark.operators.spatial_join import knn_join_cellwise
-
-    got = (
-        knn_join_cellwise(images.limit(5000).repartition(32), locations)
-        .toPandas()
-        .sort_values("image_id")
-        .reset_index(drop=True)
-    )
-    exp = pd.read_parquet(f"{fixtures_dir}/expected_knn.parquet")
-    m = got.merge(exp, on="image_id", suffixes=("_got", "_exp"))
-    assert len(m) == len(got)
-    assert (m["nearest_location_id_got"] == m["nearest_location_id_exp"]).all()
+def test_knn_empty_locations_is_empty(spark, images):
+    """No locations (a FeatureCollection without geometries): an empty
+    result with the usual schema, as an inner join with an empty side."""
+    empty = spark.createDataFrame([], "location_id string, lat double, lon double")
+    got = knn_join(images.limit(2), empty)
+    assert got.schema.fieldNames() == ["image_id", "nearest_location_id", "dist_m"]
+    assert got.collect() == []
 
 
 def test_decode_invariants(decoded, fixtures_dir):
