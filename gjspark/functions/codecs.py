@@ -303,12 +303,28 @@ _DECODERS = {
 LOSSLESS = {"ppm", "bmp", "png", "webp", "gif"}
 
 
+class CodecError(ValueError):
+    """Unknown format or malformed payload: the one error ``decode_image``
+    raises for bad input. A ``ValueError``, so the decode call sites that
+    catch ``(NotImplementedError, ValueError)`` mark the row failed
+    instead of failing the task."""
+
+
 def encode_image(img: np.ndarray, fmt: str) -> bytes:
     return _ENCODERS[fmt](img)
 
 
 def decode_image(data: bytes, fmt: str) -> np.ndarray:
-    return _DECODERS[fmt](bytes(data))
+    try:
+        decode = _DECODERS[fmt]
+    except KeyError:
+        raise CodecError(f"unknown image format {fmt!r}") from None
+    try:
+        return decode(bytes(data))
+    except (ValueError, struct.error, zlib.error) as e:
+        # the raw parsers hit struct.error on cut headers and zlib.error
+        # on corrupt deflate streams
+        raise CodecError(f"malformed {fmt}: {e}") from e
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

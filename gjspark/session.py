@@ -4,15 +4,33 @@ Arrow on (every custom kernel is a pandas/Arrow UDF), AQE on (runtime
 skew/broadcast re-planning), shuffle partitions sized to cores rather than
 the 200 default. At cluster scale the same factory is used via
 ``spark-submit --py-files gjspark.zip`` (see ``gjspark/plans/job.py``).
+
+Python daemon: on ``local``/``local[...]`` masters the Python workers are
+forked from ``gjspark.pydaemon`` instead of ``pyspark.daemon``. Every
+kernel here is an Arrow UDF, so every operator pays the fixed cost of
+each Python task, and on CPython below 3.12 most of that cost was
+re-reading ``pyspark.zip``'s directory in every zip importer at the start
+of every task (see the ``pydaemon`` docstring). The daemon applies the
+fix before forking, so it reaches every worker, including UDFs that never
+import ``gjspark``. The directory holding ``gjspark`` is added to
+``spark.executorEnv.PYTHONPATH`` so Spark can start it; Spark merges that
+value into the workers' path rather than replacing it. Cluster masters
+keep pyspark's own daemon: an executor may not have ``gjspark`` on its
+path when the daemon starts (``--py-files`` archives are added to the
+path per task, inside the forked worker). On Python 3.12+ the daemon
+changes nothing. ``get_spark`` logs which daemon the session uses.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+log = logging.getLogger(__name__)
 
 # One BLAS thread per Python worker: N workers x M BLAS threads thrashes the
 # box and makes UDF stage times wildly variable. Python workers inherit the
@@ -115,8 +133,17 @@ def get_spark(
             pass
     for v in _BLAS_VARS:
         b = b.config(f"spark.executorEnv.{v}", "1")
+    if master == "local" or master.startswith("local["):
+        b = b.config("spark.python.daemon.module", "gjspark.pydaemon")
+        b = b.config("spark.executorEnv.PYTHONPATH", REPO_ROOT)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    conf = spark.sparkContext.getConf()
+    log.info(
+        "master=%s python daemon=%s",
+        conf.get("spark.master"),
+        conf.get("spark.python.daemon.module", "pyspark.daemon"),
+    )
     return spark

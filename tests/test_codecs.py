@@ -1,6 +1,9 @@
 """Image codec invariants (SURVEY.md §5.4, north-rule PSNR gate)."""
 
+import os
+
 import numpy as np
+import pandas as pd
 import pytest
 
 from gjspark.functions import codecs as C
@@ -31,6 +34,79 @@ def test_png_crc_detects_corruption():
     data[40] ^= 0xFF
     with pytest.raises(ValueError):
         C.decode_png(bytes(data))
+
+
+UNIT_IMAGES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "fixtures_data",
+    "images_sf_unit.parquet",
+)
+
+
+def _unit_rows(per_fmt: int) -> pd.DataFrame:
+    """The first ``per_fmt`` rows of each format in the unit image fixture."""
+    d = pd.read_parquet(UNIT_IMAGES).sort_values("image_id")
+    return d.groupby("fmt", sort=True).head(per_fmt)
+
+
+@pytest.mark.parametrize("fmt", ["avif", "nope"])
+def test_unknown_format_is_codec_error(fmt):
+    with pytest.raises(C.CodecError):
+        C.decode_image(b"\x00" * 16, fmt)
+
+
+def test_corrupt_payloads_raise_only_codec_error():
+    """Seeded fuzz over 15 rows x 7 formats of the unit fixture: each row
+    truncated to 1/2 and 1/4, emptied, and 8 single-bit flips. A decode
+    may succeed (a flip in pixel data) or raise ``CodecError``; anything
+    else escapes the decode call sites and fails the whole task."""
+    rows = _unit_rows(15)
+    assert rows["fmt"].nunique() == 7 and len(rows) == 105
+    flips = np.random.default_rng(0)
+    escapes, failed, n = [], 0, 0
+    for fmt, b in zip(rows["fmt"], rows["bytes"]):
+        b = bytes(b)
+        variants = [b[: len(b) // 2], b[: len(b) // 4], b""]
+        for bit in flips.integers(0, len(b) * 8, size=8):
+            m = bytearray(b)
+            m[bit // 8] ^= 1 << (bit % 8)
+            variants.append(bytes(m))
+        for v in variants:
+            n += 1
+            try:
+                C.decode_image(v, fmt)
+            except C.CodecError:
+                failed += 1
+            except Exception as e:  # anything but CodecError is an escape
+                escapes.append((fmt, type(e).__name__))
+    assert n == 1155
+    assert escapes == []
+    assert failed >= 105 * 3  # every truncated and empty variant fails
+
+
+def test_decoded_features_marks_truncated_rows_failed(spark):
+    """Truncated PNG and DCT rows come out ``decode_ok = false``; the good
+    rows of the same batch keep the pixel CRCs they get without them."""
+    from pyspark.sql import functions as F
+
+    from gjspark.operators.fused import decoded_features
+
+    good = _unit_rows(2)
+    bad = good[good["fmt"].isin(["png", "dct"])].copy()
+    bad["bytes"] = [bytes(b)[: len(b) // 2] for b in bad["bytes"]]
+    bad["image_id"] = "cut-" + bad["image_id"]
+
+    def features(pdf: pd.DataFrame) -> pd.DataFrame:
+        df = spark.createDataFrame(pdf.drop(columns=["lat", "lon"]))
+        df = df.coalesce(1).withColumn("h3_r7", F.lit(0).cast("long"))
+        out = decoded_features(df).select("image_id", "decode_ok", "pix_crc32")
+        return out.toPandas().set_index("image_id").sort_index()
+
+    alone = features(good)
+    mixed = features(pd.concat([good, bad]))
+    assert alone["decode_ok"].all()
+    assert not mixed.loc[bad["image_id"], "decode_ok"].any()
+    pd.testing.assert_frame_equal(mixed.loc[alone.index], alone)
 
 
 def test_phash_stability_and_discrimination():

@@ -1,9 +1,16 @@
-"""Session factory safety: the shared scratch sweeper must never delete a
-live Spark job's spark.local.dir (shuffle data loss)."""
+"""Session factory: the shared scratch sweeper must never delete a live
+Spark job's spark.local.dir (shuffle data loss), and local-mode Python
+workers run under ``gjspark.pydaemon`` with its zipimport backport."""
 
+import importlib
 import os
+import sys
+import zipfile
+import zipimport
 
-from gjspark import session
+import pytest
+
+from gjspark import pydaemon, session
 
 
 class TestScratchSweep:
@@ -43,3 +50,75 @@ class TestScratchSweep:
         for p in (a, b):
             assert os.path.isdir(p)
             assert os.path.basename(p).startswith(f"sess-{os.getpid()}-")
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 12), reason="CPython 3.12+ has the fix; install is a no-op"
+)
+def test_zipimport_backport_rereads_only_changed_archives(tmp_path, monkeypatch):
+    archive = tmp_path / "mods.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("gjspark_zip_a.py", "X = 1\n")
+    # registers the stock method for restoring at teardown
+    stock = zipimport.zipimporter.invalidate_caches
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", stock)
+    monkeypatch.setattr(pydaemon, "_read_stamps", {})
+    pydaemon.install()
+    monkeypatch.syspath_prepend(str(archive))
+    stock_read = zipimport._read_directory
+    reads = []
+
+    def counting_read(path):
+        reads.append(path)
+        return stock_read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    try:
+        assert importlib.import_module("gjspark_zip_a").X == 1
+        reads.clear()  # the importer's own first read
+        for _ in range(10):
+            importlib.invalidate_caches()
+        assert reads.count(str(archive)) <= 1
+        n = reads.count(str(archive))
+
+        with zipfile.ZipFile(archive, "a") as z:
+            z.writestr("gjspark_zip_b.py", "Y = 2\n")
+        importlib.invalidate_caches()
+        assert reads.count(str(archive)) == n + 1
+        assert importlib.import_module("gjspark_zip_b").Y == 2
+    finally:
+        for name in ("gjspark_zip_a", "gjspark_zip_b"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(str(archive), None)
+
+
+def test_local_python_workers_run_under_gjspark_daemon(spark):
+    """The shared ``local[4]`` session forks its Python workers from
+    ``gjspark.pydaemon``, and on Python < 3.12 they carry the zipimport
+    backport (the UDF below never imports ``gjspark``)."""
+
+    def probe(batches):
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        main = sys.modules["__main__"]
+        yield pd.DataFrame(
+            {
+                "main": [getattr(main.__spec__, "name", None)],
+                "patched": [
+                    zipimport.zipimporter.invalidate_caches
+                    is getattr(main, "_invalidate_caches", None)
+                ],
+            }
+        )
+
+    rows = (
+        spark.range(8, numPartitions=2)
+        .mapInPandas(probe, "main string, patched boolean")
+        .collect()
+    )
+    assert len(rows) == 2
+    assert {r["main"] for r in rows} == {"gjspark.pydaemon"}
+    if sys.version_info < (3, 12):
+        assert all(r["patched"] for r in rows)
