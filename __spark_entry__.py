@@ -517,10 +517,10 @@ def q_tile_rollup(spark, sf_dir):
 
 
 def q_mosaic(spark, sf_dir):
-    """Per-cell mosaic (J7), map-side-combine default plan (the salted
-    plan remains in tiling.cell_mosaic for adversarial layouts; byte
-    equality of all three plans is pytest-asserted). Checkable part =
-    per-cell image counts; mosaic bytes verified by the equality tests."""
+    """Per-cell mosaic (J7) through ``fused.mosaic_from_features``, which
+    picks the direct or map-side-combine plan. Checkable part = per-cell
+    image counts; the mosaic bytes of both plans are pytest-asserted
+    against an independent per-image numpy mosaic."""
     from gjspark.operators.cells import with_cell_columns
     from gjspark.operators.fused import decoded_features, mosaic_from_features
 

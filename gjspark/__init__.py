@@ -8,7 +8,7 @@ upserts, observation validators) into a distributed DataFrame pipeline:
 - H3-style / S2 cell indexing in pure numpy (vectorized Arrow UDFs)
 - broadcast / bucketed point-in-polygon joins, cell-local kNN
 - image decode (pure-numpy PPM/BMP/PNG/DCT codecs) + raster<->vector tiling
-  with salted repartitioning for hot-cell skew
+  from one decode pass (per-cell tile rollup and mean-thumbnail mosaic)
 - checkpointed, resumable writes with per-partition lineage + metrics
 - training-data ops: dedup (exact/MinHash/SimHash), ANN, text analysis
 

@@ -472,10 +472,10 @@ def resize_rgb_exact(stack: np.ndarray, dst: int = 32) -> np.ndarray:
     """(n, h, w, 3) uint8 -> (n, 3, dst, dst) uint8 exact block-mean thumbs.
 
     thumb = rint(Kh @ img @ Kw.T / (h*w)) — the mathematically exact
-    area-weighted mean, correctly rounded once. Every caller (fused decode,
-    both mosaic plans, the salted variant) shares this kernel, so thumb
-    bytes are identical across plans BY CONSTRUCTION, not by accident of
-    matching BLAS call shapes.
+    area-weighted mean, correctly rounded once. The fused decode computes
+    its thumbs from the same numerators (``block_mean_numerators_cf``),
+    so a per-image call reproduces its thumb bytes BY CONSTRUCTION, not by
+    accident of matching BLAS call shapes.
     """
     n, h, w, _c = stack.shape
     t = block_mean_numerators(stack, dst)

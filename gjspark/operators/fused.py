@@ -11,7 +11,7 @@ pass per image emitting everything downstream needs:
   tiles), which :func:`rollup_from_features` aggregates per cell;
 - a per-image rounded uint8 thumbnail (the mosaic partial unit; rounding
   once per image is what makes any grouping of the subsequent integer
-  sums byte-identical — see ``tiling.cell_mosaic``). Stored LOSSLESSLY
+  sums byte-identical — see :func:`mosaic_from_features`). Stored LOSSLESSLY
   COMPRESSED (horizontal-delta filter + zlib, the PNG Sub-filter idea
   without the framing): the 3 KB raw thumb was both the 2M-row persisted
   frame's memory cliff and the mosaic exchange's dominant bytes
@@ -32,6 +32,7 @@ demands.
 
 from __future__ import annotations
 
+import logging
 import zlib
 from collections.abc import Iterator
 
@@ -43,11 +44,8 @@ from pyspark.sql import types as T
 
 from gjspark.functions import codecs as C
 from gjspark.operators.multimodal import _decode_one
-from gjspark.operators.tiling import (
-    _merge_mosaic_partials,
-    _MOSAIC_PARTIAL_SCHEMA,
-    _MOSAIC_SCHEMA,
-)
+
+_log = logging.getLogger(__name__)
 
 FEATURES_SCHEMA = T.StructType(
     [
@@ -270,6 +268,66 @@ def rollup_from_features(feat: DataFrame) -> DataFrame:
     )
 
 
+def _cell_sums(
+    cells: np.ndarray, n: np.ndarray, mat: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Group rows by cell: one stable sort, then ``reduceat`` at the cell
+    boundaries. -> (distinct cells, summed ``n``, summed ``mat`` rows as
+    int64). Summing with ``dtype=np.int64`` never upcasts a whole uint8
+    thumb matrix; integer sums commute, so any grouping of the same rows
+    gives the same bytes."""
+    order = np.argsort(cells, kind="stable")
+    c = cells[order]
+    bounds = np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
+    return (
+        c[bounds],
+        np.add.reduceat(n[order], bounds),
+        np.add.reduceat(mat[order], bounds, axis=0, dtype=np.int64),
+    )
+
+
+def _mosaic_rows(
+    cells: np.ndarray, counts: np.ndarray, sums: np.ndarray
+) -> pd.DataFrame:
+    """Per-cell pixel sums -> mosaic rows (floor mean of uint8 thumbs,
+    so it stays in 0..255)."""
+    mosaics = (sums // counts[:, None]).astype(np.uint8)
+    return pd.DataFrame(
+        {"cell": cells, "n_images": counts, "mosaic": [m.tobytes() for m in mosaics]}
+    )
+
+
+def _thumb_batches(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """(cell, thumb) batches -> (cells, (n, 3072) uint8 thumbs) of the
+    decoded rows."""
+    for pdf in batches:
+        mask = pdf["thumb"].notna()
+        if mask.any():
+            yield (
+                pdf.loc[mask, "cell"].to_numpy(dtype=np.int64),
+                _decompress_thumbs(pdf.loc[mask, "thumb"]),
+            )
+
+
+_MOSAIC_PARTIAL_SCHEMA = T.StructType(
+    [
+        T.StructField("cell", T.LongType()),
+        T.StructField("n", T.LongType()),
+        T.StructField("pix_sum", T.BinaryType()),  # int64[32*32*3] LE
+    ]
+)
+
+_MOSAIC_SCHEMA = T.StructType(
+    [
+        T.StructField("cell", T.LongType()),
+        T.StructField("n_images", T.LongType()),
+        T.StructField("mosaic", T.BinaryType()),  # uint8 (32, 32, 3)
+    ]
+)
+
+
 def mosaic_from_features(
     feat: DataFrame,
     combine: bool | None = None,
@@ -277,7 +335,8 @@ def mosaic_from_features(
 ) -> DataFrame:
     """Per-cell mean-thumbnail mosaic from pre-decoded thumbs.
 
-    Two plans, byte-identical (integer sums commute; tested):
+    Two plans, byte-identical (integer sums commute; tested against an
+    independent per-image numpy mosaic):
 
     - ``combine=False`` (direct): shuffle the losslessly-compressed
       thumbs by cell, one vectorized merge per partition. A map-side
@@ -285,17 +344,22 @@ def mosaic_from_features(
       (~0.15 KB on this synthetic corpus, ~1-2 KB for photographic
       content) combining only *reduces* shuffle volume when a partition
       holds >~15-150 rows per distinct cell — below that it amplifies
-      the exchange. Hot cells co-locate in one merge task, now bounded
-      by corpus share x compressed size.
+      the exchange. Hot cells co-locate in one merge task, bounded by
+      corpus share x compressed size.
     - ``combine=True``: map-side partial sums per (cell x partition),
       then the tiny merge. Wins at 10^12 scale with res-7 cells, where
       rows per (cell x partition) is large and a hot cell would
       otherwise flood one task.
     - ``combine=None`` (default): decide from a cheap count +
-      approx_count_distinct probe. Pass ``probe`` (any frame with the
-      same ``cell`` distribution, e.g. the PRE-decode images frame) when
-      ``feat`` is unpersisted — probing ``feat`` itself would run the
-      whole decode ``mapInPandas`` a second time just to count rows.
+      approx_count_distinct probe, and log the choice. Pass ``probe``
+      (any frame with the same ``cell`` distribution, e.g. the PRE-decode
+      images frame) when ``feat`` is unpersisted — probing ``feat``
+      itself would run the whole decode ``mapInPandas`` a second time
+      just to count rows.
+
+    The choice uses *average* rows per (cell x partition), so a single
+    hot cell in an otherwise sparse corpus takes the direct plan and
+    meets in one merge task.
     """
     n_rows = None
     if combine is None:
@@ -310,34 +374,18 @@ def mosaic_from_features(
         # geometric middle. Both plans are byte-identical, so a wrong
         # choice costs shuffle time, never correctness.
         combine = row["n"] / max(row["c"], 1) / nparts > 64.0
+        _log.info(
+            "mosaic_from_features plan=%s rows=%d approx_cells=%d partitions=%d",
+            "combine" if combine else "direct", n_rows, row["c"], nparts,
+        )
     if not combine:
         def direct(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cells_l, mats_l = [], []
-            for pdf in batches:
-                mask = pdf["thumb"].notna()
-                if not mask.any():
-                    continue
-                cells_l.append(pdf.loc[mask, "cell"].to_numpy(dtype=np.int64))
-                mats_l.append(_decompress_thumbs(pdf.loc[mask, "thumb"]))
-            if not cells_l:
-                return
-            cells = np.concatenate(cells_l)
-            mat = np.concatenate(mats_l)  # (n, 3072) uint8, decompressed
-            order = np.argsort(cells, kind="stable")
-            c, m = cells[order], mat[order]
-            bounds = np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
-            sums = np.add.reduceat(m, bounds, axis=0, dtype=np.int64)
-            counts = np.diff(np.r_[bounds, len(c)])
-            mosaics = (
-                (sums // np.maximum(counts, 1)[:, None]).clip(0, 255).astype(np.uint8)
-            )
-            yield pd.DataFrame(
-                {
-                    "cell": c[bounds],
-                    "n_images": counts,
-                    "mosaic": [x.tobytes() for x in mosaics],
-                }
-            )
+            parts = list(_thumb_batches(batches))
+            if parts:
+                cells = np.concatenate([c for c, _ in parts])
+                mat = np.concatenate([m for _, m in parts])
+                ones = np.ones(len(cells), np.int64)
+                yield _mosaic_rows(*_cell_sums(cells, ones, mat))
 
         # EXPLICIT partition count: an unnumbered repartition(col) is fair
         # game for AQE's 64 MB-advisory coalescing, which squeezes this
@@ -366,38 +414,38 @@ def mosaic_from_features(
         )
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cells_l, ns_l, mats_l = [], [], []
-        for pdf in batches:
-            mask = pdf["thumb"].notna()
-            if not mask.any():
-                continue
-            cells = pdf.loc[mask, "cell"].to_numpy(dtype=np.int64)
-            mat = _decompress_thumbs(pdf.loc[mask, "thumb"]).astype(np.int64)
-            # per-batch combine: sort + reduceat (buffered vector adds)
-            order = np.argsort(cells, kind="stable")
-            c, m = cells[order], mat[order]
-            bounds = np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
-            cells_l.append(c[bounds])
-            ns_l.append(np.diff(np.r_[bounds, len(c)]))
-            mats_l.append(np.add.reduceat(m, bounds, axis=0))
-        if not cells_l:
-            return
-        # cross-batch combine within the task
-        cells = np.concatenate(cells_l)
-        ns = np.concatenate(ns_l)
-        mat = np.concatenate(mats_l)
-        order = np.argsort(cells, kind="stable")
-        c, n_s, m_s = cells[order], ns[order], mat[order]
-        bounds = np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
-        yield pd.DataFrame(
-            {
-                "cell": c[bounds],
-                "n": np.add.reduceat(n_s, bounds),
-                "pix_sum": [
-                    r.tobytes() for r in np.add.reduceat(m_s, bounds, axis=0)
-                ],
-            }
-        )
+        # per batch, then across the task's batches
+        per_batch = [
+            _cell_sums(c, np.ones(len(c), np.int64), m)
+            for c, m in _thumb_batches(batches)
+        ]
+        if per_batch:
+            cells, n, sums = _cell_sums(*(np.concatenate(x) for x in zip(*per_batch)))
+            yield pd.DataFrame(
+                {"cell": cells, "n": n, "pix_sum": [r.tobytes() for r in sums]}
+            )
 
-    parts = feat.select("cell", "thumb").mapInPandas(partials, _MOSAIC_PARTIAL_SCHEMA)
-    return _merge_mosaic_partials(parts)
+    # Merge: hash-repartition by cell so each cell's partials co-locate,
+    # then ONE vectorized call per partition. A groupBy(cell).applyInPandas
+    # here would cost one Python call per cell (~40k calls at sf0.1).
+    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdfs = [pdf for pdf in batches if len(pdf)]
+        if pdfs:
+            pdf = pd.concat(pdfs)
+            sums = np.frombuffer(
+                b"".join(bytes(b) for b in pdf["pix_sum"]), dtype=np.int64
+            ).reshape(len(pdf), -1)
+            yield _mosaic_rows(
+                *_cell_sums(
+                    pdf["cell"].to_numpy(dtype=np.int64),
+                    pdf["n"].to_numpy(dtype=np.int64),
+                    sums,
+                )
+            )
+
+    return (
+        feat.select("cell", "thumb")
+        .mapInPandas(partials, _MOSAIC_PARTIAL_SCHEMA)
+        .repartition(F.col("cell"))
+        .mapInPandas(merge, _MOSAIC_SCHEMA)
+    )

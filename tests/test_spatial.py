@@ -1,6 +1,6 @@
 """E2E spatial pipeline vs the committed numpy-oracle goldens
 (SURVEY.md §5.5): cell assignment, PIP join (broadcast + bucketed), kNN,
-decode invariants, salted tiling == unsalted tiling."""
+decode invariants, both mosaic plans == a per-image numpy mosaic."""
 
 import zlib
 from contextlib import contextmanager
@@ -261,34 +261,6 @@ def test_decode_invariants(decoded, fixtures_dir):
     assert list(stats.sort_values("image_id")["caption"]) == expected_caps
 
 
-def test_mosaic_salted_equals_unsalted(images):
-    from gjspark.operators.tiling import cell_mosaic, salt_map
-
-    # the fixture's hot cell must actually trigger salting
-    sm = salt_map(images, target_rows_per_salt=200).toPandas()
-    assert len(sm) > 0 and sm["n_salt"].max() >= 4
-
-    salted = (
-        cell_mosaic(images, target_rows_per_salt=200)
-        .toPandas()
-        .sort_values("cell")
-        .reset_index(drop=True)
-    )
-    unsalted = (
-        cell_mosaic(images, target_rows_per_salt=10**9)
-        .toPandas()
-        .sort_values("cell")
-        .reset_index(drop=True)
-    )
-    assert len(salted) == len(unsalted)
-    assert (salted["cell"].to_numpy() == unsalted["cell"].to_numpy()).all()
-    assert (salted["n_images"].to_numpy() == unsalted["n_images"].to_numpy()).all()
-    # integer partial sums make the mosaics byte-identical
-    for a, b in zip(salted["mosaic"], unsalted["mosaic"]):
-        assert bytes(a) == bytes(b)
-    assert int(salted["n_images"].sum()) == images.count()
-
-
 def test_rollup_totals(images, decoded):
     roll = rollup_from_features(decoded).toPandas()
     assert int(roll["n_images"].sum()) == images.count()
@@ -305,41 +277,15 @@ def test_tiling_counts_match_pixel_math(images, decoded):
     assert roll == exp
 
 
-def test_mosaic_mapcombine_equals_salted(images):
-    from gjspark.operators.tiling import cell_mosaic, cell_mosaic_mapcombine
-
-    # limit() collapses to one partition — fan back out so the decode
-    # parallelizes (plan-shape parity is unaffected; cached frame)
-    sub = images.limit(8000).repartition(32).cache()
-    a = (
-        cell_mosaic(sub, target_rows_per_salt=500)
-        .toPandas()
-        .sort_values("cell")
-        .reset_index(drop=True)
-    )
-    b = (
-        cell_mosaic_mapcombine(sub)
-        .toPandas()
-        .sort_values("cell")
-        .reset_index(drop=True)
-    )
-    assert (a["cell"].to_numpy() == b["cell"].to_numpy()).all()
-    assert (a["n_images"].to_numpy() == b["n_images"].to_numpy()).all()
-    for x, y in zip(a["mosaic"], b["mosaic"]):
-        assert bytes(x) == bytes(y)
-
-
 _LUMA = np.array([0.299, 0.587, 0.114])
 _TILE = 16
 
 
-def _reference_image_stats(image_id, data, fmt, w, h) -> dict:
-    """One image's decode stats and tile stats, computed independently of
-    ``decoded_features``: a single ``codecs.decode_image``, int64 channel
-    sums, ``phash64_batch`` on the image alone and ``reduceat`` tile
-    sums, where the fused kernel batches images by shape and runs float64
-    GEMMs."""
-    img = C.decode_image(bytes(data), fmt)
+def _reference_image_stats(image_id, img, w, h) -> dict:
+    """One decoded image's stats and tile stats, computed independently of
+    ``decoded_features``: int64 channel sums, ``phash64_batch`` on the
+    image alone and ``reduceat`` tile sums, where the fused kernel batches
+    images by shape and runs float64 GEMMs."""
     ih, iw, _ = img.shape
     csum = img.sum(axis=(0, 1), dtype=np.int64)
     ys, xs = np.arange(0, ih, _TILE), np.arange(0, iw, _TILE)
@@ -368,42 +314,77 @@ def _reference_image_stats(image_id, data, fmt, w, h) -> dict:
 def test_fused_pipeline_matches_standalone(images):
     """decoded_features must reproduce, from ONE decode pass (the 100TB
     plan shape), an independent per-image decode of every image, and
-    mosaic_from_features must equal the map-combine mosaic plan byte for
-    byte."""
+    every mosaic_from_features plan must equal a per-cell numpy mosaic of
+    per-image thumbs byte for byte."""
     from gjspark.operators.fused import mosaic_from_features
-    from gjspark.operators.tiling import cell_mosaic_mapcombine
 
     sub = images.limit(6000).repartition(32).cache()
     feat = decoded_features(sub).cache()
     try:
-        ref = pd.DataFrame(
-            [
-                _reference_image_stats(*r)
-                for r in sub.select("image_id", "bytes", "fmt", "w", "h").collect()
-            ]
-        ).sort_values("image_id").reset_index(drop=True)
+        stats, sums, counts = [], {}, {}
+        for image_id, data, fmt, w, h, cell in sub.select(
+            "image_id", "bytes", "fmt", "w", "h", "h3_r7"
+        ).collect():
+            img = C.decode_image(bytes(data), fmt)
+            stats.append(_reference_image_stats(image_id, img, w, h))
+            thumb = C.resize_rgb_exact(img[None], 32)[0].transpose(1, 2, 0)
+            sums[cell] = sums.get(cell, 0) + thumb.astype(np.int64)
+            counts[cell] = counts.get(cell, 0) + 1
+        ref = pd.DataFrame(stats).sort_values("image_id").reset_index(drop=True)
         got = (
             feat.select(*ref.columns)
             .toPandas().sort_values("image_id").reset_index(drop=True)
         )
         # decode stats and tile stats, per image, exact (float columns too)
         pd.testing.assert_frame_equal(got, ref, check_exact=True)
-        # mosaic byte parity vs the map-combine plan
-        ma = (
-            mosaic_from_features(feat).toPandas()
-            .sort_values("cell").reset_index(drop=True)
-        )
-        mb = (
-            cell_mosaic_mapcombine(sub).toPandas()
-            .sort_values("cell").reset_index(drop=True)
-        )
-        assert (ma["cell"].to_numpy() == mb["cell"].to_numpy()).all()
-        assert (ma["n_images"].to_numpy() == mb["n_images"].to_numpy()).all()
-        for x, y in zip(ma["mosaic"], mb["mosaic"]):
-            assert bytes(x) == bytes(y)
+        # the fixture's planted hot cell is in the slice
+        assert max(counts.values()) >= 100
+        cells = sorted(sums)
+        for combine in (None, False, True):
+            m = (
+                mosaic_from_features(feat, combine=combine).toPandas()
+                .sort_values("cell").reset_index(drop=True)
+            )
+            assert m["cell"].tolist() == cells, combine
+            assert m["n_images"].tolist() == [counts[c] for c in cells], combine
+            for c, x in zip(cells, m["mosaic"]):
+                exp = (sums[c] // counts[c]).astype(np.uint8).tobytes()
+                assert bytes(x) == exp, (combine, c)
     finally:
         feat.unpersist()
         sub.unpersist()
+
+
+def test_mosaic_logs_plan_choice(decoded, caplog):
+    """The probe's choice goes to logging once; at fixture scale (few
+    rows per cell and partition) it is the direct plan."""
+    from gjspark.operators.fused import mosaic_from_features
+
+    with caplog.at_level("INFO", logger="gjspark.operators.fused"):
+        mosaic_from_features(decoded)
+    msgs = [r.getMessage() for r in caplog.records if r.name.endswith("fused")]
+    assert len(msgs) == 1 and "plan=direct" in msgs[0], msgs
+
+
+def test_mosaic_plan_shapes(decoded):
+    """Over a persisted features frame the direct plan is one exchange
+    and one map; the combine plan adds the map-side partials. Neither
+    reads or shuffles image bytes."""
+    from gjspark.operators.fused import mosaic_from_features
+
+    # the operators above the cached relation; its own decode plan is
+    # printed below InMemoryRelation
+    def top(df):
+        return _plan(df).split("InMemoryRelation")[0]
+
+    direct = top(mosaic_from_features(decoded, combine=False))
+    assert direct.count("Exchange") == 1, direct
+    assert direct.count("MapInPandas") == 1, direct
+    combined = top(mosaic_from_features(decoded, combine=True))
+    assert combined.count("Exchange") == 1, combined
+    assert combined.count("MapInPandas") == 2, combined
+    for plan in (direct, combined):
+        assert "bytes" not in plan, plan
 
 
 def test_thumb_compression_roundtrip_exact():
