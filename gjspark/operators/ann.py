@@ -31,6 +31,15 @@ _TOPK_SCHEMA = T.StructType(
 )
 
 
+def row_cosine(a: pd.Series, b: pd.Series) -> np.ndarray:
+    """Cosine of each row pair of two equal-length series of vectors."""
+    ma = np.stack(a.to_numpy()).astype(np.float64)
+    mb = np.stack(b.to_numpy()).astype(np.float64)
+    num = (ma * mb).sum(axis=1)
+    den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
+    return num / np.maximum(den, 1e-30)
+
+
 def _collect_normalized(index: DataFrame, id_col: str, vec_col: str):
     # Arrow path (toPandas) instead of row-based collect(): the index pull
     # is driver-side either way, but Arrow moves the list<float> column as
@@ -196,13 +205,6 @@ def ivf_topk(
         m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
         return pd.Series(np.argmax(m @ c.T, axis=1).astype(np.int32))
 
-    # asNondeterministic: the list_id equi-join implies isnotnull(list_id),
-    # which filter-pushdown satisfies by RE-EVALUATING the centroid
-    # assignment UDF below the join (guide §4.4, two ArrowEvalPython for
-    # one call). Pure function of the broadcast centroids; results
-    # unchanged, single evaluation.
-    _assign = _assign.asNondeterministic()
-
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def _probes(vec: pd.Series) -> pd.Series:
         c = bc.value
@@ -212,9 +214,12 @@ def ivf_topk(
         order = np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int32)
         return pd.Series(list(order))
 
+    # argmax always yields a list id: the coalesce only makes list_id
+    # non-nullable, so the join infers no isnotnull that would evaluate
+    # _assign a second time below it
     idx = index.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec")
-    ).withColumn("list_id", _assign(F.col("nvec")))
+    ).withColumn("list_id", F.coalesce(_assign(F.col("nvec")), F.lit(-1)))
     q = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
     ).withColumn("list_id", F.explode(_probes(F.col("qvec"))))
@@ -223,11 +228,7 @@ def ivf_topk(
 
     @pandas_udf(T.DoubleType())
     def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack(a.to_numpy()).astype(np.float64)
-        mb = np.stack(b.to_numpy()).astype(np.float64)
-        num = (ma * mb).sum(axis=1)
-        den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        return pd.Series(num / np.maximum(den, 1e-30))
+        return pd.Series(row_cosine(a, b))
 
     from pyspark.sql import Window
 

@@ -49,18 +49,21 @@ def _cell_struct(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-# Pure function, but spatial joins on the cell columns imply isnotnull
-# predicates that filter-pushdown moves below the scan by duplicating the
-# UDF evaluation (guide §4.4; plans/r06/q_pip_after.txt nodes 2+5 pre-fix).
-# Nondeterministic marking pins a single evaluation; results unchanged.
-_cell_struct = _cell_struct.asNondeterministic()
-
-
 def with_cell_columns(
     df: DataFrame, lat_col: str = "lat", lon_col: str = "lon"
 ) -> DataFrame:
-    """Append h3_r7..h3_r12 + s2_cell columns."""
+    """Append h3_r7..h3_r12 + s2_cell columns.
+
+    The seven columns are non-nullable: the kernel never returns null
+    (bad or null coordinates read 0), and saying so lets Catalyst infer no
+    ``isnotnull`` on a cell join key, which it would otherwise satisfy by
+    evaluating the kernel a second time below the join. The kernel is
+    deterministic, so a filter written after this call on any other
+    column still reaches the scan's ``PushedFilters``.
+    """
     tmp = df.withColumn("__cells", _cell_struct(F.col(lat_col), F.col(lon_col)))
     for f in _CELL_STRUCT.fields:
-        tmp = tmp.withColumn(f.name, F.col(f"__cells.{f.name}"))
+        tmp = tmp.withColumn(
+            f.name, F.coalesce(F.col(f"__cells.{f.name}"), F.lit(0))
+        )
     return tmp.drop("__cells")

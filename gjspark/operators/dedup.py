@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from gjspark.operators.ann import row_cosine
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """-> one row per distinct text: (text_md5, keeper_id, n_dups)."""
@@ -139,23 +141,56 @@ def shingle_set_udf(shingle_k: int = 5):
     return _s
 
 
-@pandas_udf(T.DoubleType())
-def _jaccard_sets(a: pd.Series, b: pd.Series) -> pd.Series:
+def _jaccard(a: pd.Series, b: pd.Series) -> np.ndarray:
+    """Exact Jaccard of each row pair of sorted distinct-hash arrays."""
     out = np.empty(len(a))
     for i, (x, y) in enumerate(zip(a, b)):
         xa = np.asarray(x, dtype=np.int64)
         ya = np.asarray(y, dtype=np.int64)
         inter = np.intersect1d(xa, ya, assume_unique=True).size
         out[i] = inter / max(xa.size + ya.size - inter, 1)
-    return pd.Series(out)
+    return out
 
 
-# The function is pure, but filter-pushdown duplicates the evaluation
-# (guide §4.4): `withColumn("jaccard", udf).filter(jaccard >= t)` planned
-# as TWO ArrowEvalPython nodes, each re-shipping both shingle arrays of
-# every candidate pair across the Arrow boundary. Nondeterministic marking
-# forbids the optimizer from copying the expression; results unchanged.
-_jaccard_sets = _jaccard_sets.asNondeterministic()
+def _verify_pairs(
+    cand: DataFrame, values: DataFrame, score, name: str, threshold: float
+) -> DataFrame:
+    """Candidate ``(id_a, id_b)`` pairs -> ``(id_a, id_b, name)`` for the
+    pairs whose ``score`` of their two ``values`` rows ``(id, v)`` is
+    >= ``threshold``, rounded to 6 places.
+
+    Both values join back by id, then ONE ``mapInPandas`` scores each
+    batch and yields only the survivors: the threshold is applied in the
+    same pass as the kernel, so only surviving rows cross back over Arrow,
+    and no filter on a Python output is left for Catalyst to copy below
+    the kernel."""
+    id_type = cand.schema["id_a"].dataType
+    schema = T.StructType([
+        T.StructField("id_a", id_type),
+        T.StructField("id_b", id_type),
+        T.StructField(name, T.DoubleType()),
+    ])
+    pairs = cand.join(
+        values.select(F.col("id").alias("id_a"), F.col("v").alias("va")), "id_a"
+    ).join(values.select(F.col("id").alias("id_b"), F.col("v").alias("vb")), "id_b")
+
+    def run(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            s = score(pdf["va"], pdf["vb"])
+            # ~(s < t), not s >= t: a NaN score passes, as under a Spark
+            # `>=` filter (Spark orders NaN above every number)
+            keep = ~(s < threshold)
+            yield pd.DataFrame({
+                "id_a": pdf["id_a"].to_numpy()[keep],
+                "id_b": pdf["id_b"].to_numpy()[keep],
+                name: s[keep],
+            })
+
+    return pairs.select("id_a", "id_b", "va", "vb").mapInPandas(run, schema).select(
+        "id_a", "id_b", F.round(name, 6).alias(name)
+    )
 
 
 def minhash_lsh_pairs(
@@ -244,17 +279,9 @@ def minhash_lsh_pairs(
     # join the arrays back by id, intersect per candidate pair
     sets = df.select(
         F.col(id_col).alias("id"),
-        shingle_set_udf(shingle_k)(F.col(text_col)).alias("sh"),
+        shingle_set_udf(shingle_k)(F.col(text_col)).alias("v"),
     )
-    pairs = (
-        cand.join(sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sa")), "id_a")
-        .join(sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sb")), "id_b")
-    )
-    return (
-        pairs.withColumn("jaccard", _jaccard_sets(F.col("sa"), F.col("sb")))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _verify_pairs(cand, sets, _jaccard, "jaccard", jaccard_threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -318,12 +345,62 @@ def simhash_udf():
             d0 = d1
         return pd.Series(out)
 
-    # Pure function, but without this the isnotnull(sim) implied by the
-    # band-join keys is pushed below the degenerate-split repartition by
-    # RE-EVALUATING the UDF under it — each join side paid the simhash
-    # kernel twice (plans/r06/q_simhash_pairs_after.txt nodes 3+7/14+18).
-    # Nondeterministic marking keeps one evaluation per side (guide §4.4).
-    return _sh.asNondeterministic()
+    return _sh
+
+
+def _banded_hamming_pairs(
+    hashes: DataFrame, n_bands: int, max_hamming: int
+) -> DataFrame:
+    """``(id, h)`` 64-bit hashes -> ``(id_a, id_b, hamming)``, id_a < id_b,
+    for the pairs with ``bit_count(h_a XOR h_b) <= max_hamming`` that agree
+    on at least one of ``n_bands`` equal-width bands — every such pair
+    when ``max_hamming < n_bands`` (pigeonhole).
+
+    The bands are exploded and self-joined on ``(band, val)``; only
+    (band, val, id, hash) rows are shuffled, never an all-pairs join. The
+    Hamming filter runs inside the join stage (a pure function of the
+    pair, so filtering first cannot change the surviving set), and a pair
+    that collides in several bands is emitted only from its lowest
+    matching band — band j matches iff chunk j of h_a XOR h_b is zero,
+    computable from the row itself — so each pair appears exactly once
+    with no ``dropDuplicates`` exchange (at Hamming 10 on sf1.0 simhash
+    emits 22.3M pairs from 43.9M band collisions).
+    """
+    width = 64 // n_bands
+    mask = (1 << width) - 1
+    bands = F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.shiftrightunsigned("h", b * width).bitwiseAND(F.lit(mask)).alias("val"),
+        )
+        for b in range(n_bands)
+    ])
+    exploded = hashes.select("id", "h", F.explode(bands).alias("b")).select(
+        "id", "h", F.col("b.band").alias("band"), F.col("b.val").alias("val")
+    )
+    left = exploded.select(
+        "band", "val", F.col("id").alias("id_a"), F.col("h").alias("h_a")
+    )
+    right = exploded.select(
+        "band", "val", F.col("id").alias("id_b"), F.col("h").alias("h_b")
+    )
+    x = F.col("h_a").bitwiseXOR(F.col("h_b"))
+    chunk_differs = [
+        F.shiftrightunsigned(x, width * j).bitwiseAND(F.lit(mask)) != 0
+        for j in range(n_bands - 1)
+    ]
+    lower_differ = F.when(F.col("band") == 0, F.lit(True))
+    acc = F.lit(True)
+    for j in range(1, n_bands):
+        acc = acc & chunk_differs[j - 1]
+        lower_differ = lower_differ.when(F.col("band") == j, acc)
+    return (
+        left.join(right, ["band", "val"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(lower_differ.otherwise(F.lit(False)))
+        .select("id_a", "id_b", F.bit_count(x).alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
 
 
 def simhash_pairs(
@@ -349,54 +426,16 @@ def simhash_pairs(
     # on both sides, but an interleaved A/B at sf1.0 read none 8.54s /
     # localCheckpoint 8.81s / persist 8.57s (min of 3) — the duplicated
     # pass is as cheap as materializing, and keeping the Catalyst subtree
-    # preserves size statistics for the join planner.
+    # preserves size statistics for the join planner. Empty text hashes
+    # to 0, so the coalesce only makes ``h`` non-nullable: the band join
+    # then infers no isnotnull that would evaluate the UDF again below
+    # the degenerate-split repartition.
     sh = df.select(
-        F.col(id_col).alias("id"), simhash_udf()(F.col(text_col)).alias("sim")
+        F.col(id_col).alias("id"),
+        F.coalesce(simhash_udf()(F.col(text_col)), F.lit(0)).alias("h"),
     )
-    bands = [
-        F.struct(
-            F.lit(bnd).alias("bno"),
-            F.shiftrightunsigned("sim", bnd * 16).bitwiseAND(F.lit(0xFFFF)).alias("bval"),
-        )
-        for bnd in range(4)
-    ]
-    banded = sh.select("id", "sim", F.explode(F.array(*bands)).alias("b")).select(
-        "id", "sim", F.col("b.bno").alias("bno"), F.col("b.bval").alias("bval")
-    )
-    l, r = banded.alias("l"), banded.alias("r")
-    # Two r6 optimizations, both result-preserving:
-    #
-    # 1. Hamming filter INSIDE the join stage (was: after a dropDuplicates
-    #    exchange of every band collision — measured 43.9M rows at sf1.0,
-    #    one 16-bit bucket holding 3151 docs). hamming is a pure function
-    #    of the pair, so filtering first cannot change the surviving set.
-    # 2. First-matching-band dedup instead of dropDuplicates: a pair that
-    #    collides in several bands is emitted only from its lowest-
-    #    numbered matching band — band j matches iff the j-th 16-bit chunk
-    #    of sa XOR sb is zero, computable from the row itself — so every
-    #    qualifying pair appears exactly once with ZERO dedup exchange.
-    #    At max_hamming=10/sf1.0 the output is 22.3M pairs; dropDuplicates
-    #    was a 22M-row shuffle for nothing.
-    x = F.col("l.sim").bitwiseXOR(F.col("r.sim"))
-    chunk = [
-        F.shiftrightunsigned(x, 16 * j).bitwiseAND(F.lit(0xFFFF)) for j in range(3)
-    ]
-    lower_differ = (
-        F.when(F.col("bno") == 0, F.lit(True))
-        .when(F.col("bno") == 1, chunk[0] != 0)
-        .when(F.col("bno") == 2, (chunk[0] != 0) & (chunk[1] != 0))
-        .otherwise((chunk[0] != 0) & (chunk[1] != 0) & (chunk[2] != 0))
-    )
-    return (
-        l.join(r, on=["bno", "bval"])
-        .filter(F.col("l.id") < F.col("r.id"))
-        .filter(lower_differ)
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.bit_count(x).cast("long").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    return _banded_hamming_pairs(sh, 4, max_hamming).select(
+        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     )
 
 
@@ -436,23 +475,30 @@ def embedding_near_dup(
     per = n_planes // bands
     weights = 1 << np.arange(per, dtype=np.int64)
 
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def _band_vals(vec: pd.Series) -> pd.Series:
-        m = np.stack(vec.to_numpy()).astype(np.float64)
-        bits = ((m @ planes.T) > 0).astype(np.int64)  # (n, n_planes)
-        vals = (
-            bits.reshape(len(m), bands, per) * weights[None, None, :]
-        ).sum(axis=2).astype(np.int32)  # (n, bands)
-        return pd.Series(list(vals))
+    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
 
-    # asNondeterministic: §4.4 — the band join's implied isnotnull(bv)
-    # otherwise duplicates the hyperplane-projection UDF on each side
-    # (4 evaluations total for the self-join). Pure; results unchanged.
-    _band_vals = _band_vals.asNondeterministic()
-    banded = (
-        df.select(F.col(id_col).alias("id"), _band_vals(F.col(vec_col)).alias("bv"))
-        .select("id", F.posexplode("bv").alias("bno", "bval"))
-    )
+    def band_rows(batches):
+        # the exploded (id, bno, bval) rows straight out of the kernel:
+        # no array column for Catalyst to guard with size > 0
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            bits = ((m @ planes.T) > 0).astype(np.int64)  # (n, n_planes)
+            vals = (
+                bits.reshape(len(m), bands, per) * weights[None, None, :]
+            ).sum(axis=2).astype(np.int32)  # (n, bands)
+            yield pd.DataFrame({
+                "id": np.repeat(pdf["id"].to_numpy(), bands),
+                "bno": np.tile(np.arange(bands, dtype=np.int32), len(m)),
+                "bval": vals.ravel(),
+            })
+
+    banded = vecs.mapInPandas(band_rows, T.StructType([
+        T.StructField("id", df.schema[id_col].dataType),
+        T.StructField("bno", T.IntegerType(), False),
+        T.StructField("bval", T.IntegerType(), False),
+    ]))
     l, r = banded.alias("l"), banded.alias("r")
     cand = (
         l.join(r, on=["bno", "bval"])
@@ -463,29 +509,7 @@ def embedding_near_dup(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    pairs = (
-        cand.join(vecs.select(F.col("id").alias("id_a"), F.col("v").alias("va")), "id_a")
-        .join(vecs.select(F.col("id").alias("id_b"), F.col("v").alias("vb")), "id_b")
-    )
-
-    @pandas_udf(T.DoubleType())
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack(a.to_numpy()).astype(np.float64)
-        mb = np.stack(b.to_numpy()).astype(np.float64)
-        num = (ma * mb).sum(axis=1)
-        den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        return pd.Series(num / np.maximum(den, 1e-30))
-
-    # asNondeterministic: same §4.4 duplication as _jaccard_sets — the
-    # threshold filter otherwise re-evaluates the cosine UDF (and re-ships
-    # both vectors) a second time. Pure function; results unchanged.
-    _cos = _cos.asNondeterministic()
-    return (
-        pairs.withColumn("cosine", _cos(F.col("va"), F.col("vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
+    return _verify_pairs(cand, vecs, row_cosine, "cosine", threshold)
 
 
 def connected_components(
@@ -630,51 +654,5 @@ def phash_neardup_pairs(
     """
     if max_hamming >= n_bands:
         raise ValueError("pigeonhole recall needs max_hamming < n_bands")
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftrightunsigned(F.col(phash_col), b * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("val"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    exploded = (
-        df.select(
-            F.col(id_col).alias("id"), F.col(phash_col).alias("ph"), bands.alias("bs")
-        )
-        .select("id", "ph", F.explode("bs").alias("b"))
-        .select("id", "ph", F.col("b.band").alias("band"), F.col("b.val").alias("val"))
-    )
-    left = exploded.select(
-        "band", "val", F.col("id").alias("id_a"), F.col("ph").alias("ph_a")
-    )
-    right = exploded.select(
-        "band", "val", F.col("id").alias("id_b"), F.col("ph").alias("ph_b")
-    )
-    # first-matching-band dedup (see simhash_pairs): emit a pair only from
-    # its lowest matching band — band j matches iff byte j of ph_a XOR
-    # ph_b is zero — so multi-band collisions never need a dropDuplicates
-    # exchange; every filter runs inside the join's codegen stage.
-    x = F.col("ph_a").bitwiseXOR(F.col("ph_b"))
-    chunk = [
-        F.shiftrightunsigned(x, width * j).bitwiseAND(F.lit(mask))
-        for j in range(n_bands - 1)
-    ]
-    lower_differ = F.when(F.col("band") == 0, F.lit(True))
-    acc = None
-    for j in range(1, n_bands):
-        cond = chunk[j - 1] != 0 if acc is None else acc & (chunk[j - 1] != 0)
-        acc = cond
-        lower_differ = lower_differ.when(F.col("band") == j, cond)
-    return (
-        left.join(right, ["band", "val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(lower_differ.otherwise(F.lit(False)))
-        .select("id_a", "id_b", F.bit_count(x).alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    hashes = df.select(F.col(id_col).alias("id"), F.col(phash_col).alias("h"))
+    return _banded_hamming_pairs(hashes, n_bands, max_hamming)

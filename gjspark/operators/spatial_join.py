@@ -59,6 +59,7 @@ from pyspark.sql import types as T
 
 from gjspark.functions import geometry as G
 from gjspark.functions import h3 as h3x
+from gjspark.session import broadcast_threshold
 
 _log = logging.getLogger(__name__)
 
@@ -251,11 +252,7 @@ def pip_join(images: DataFrame, features: DataFrame) -> DataFrame:
     to 50k polygons and from 2 km to 2 degrees across
     (``tools/pip_crossover.py``).
     """
-    limit = int(
-        images.sparkSession._jsparkSession.sessionState()
-        .conf()
-        .autoBroadcastJoinThreshold()
-    )
+    limit = broadcast_threshold(images.sparkSession)
     polys, n_feat, n_bytes = None, 0, 0
     if limit >= 0:
         polys, n_feat, n_bytes = _collect_polygons(features, limit)

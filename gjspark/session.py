@@ -90,6 +90,14 @@ def _session_scratch_dir(root: str) -> str:
     return tempfile.mkdtemp(prefix=f"sess-{os.getpid()}-", dir=root)
 
 
+def broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes, parsed as the
+    planner reads it; negative means broadcasts are off."""
+    return int(
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+
+
 def get_spark(
     app_name: str = "gjspark",
     master: str | None = None,

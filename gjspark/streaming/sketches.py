@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gjspark.operators.sketches import bucket_rho_exprs
+from gjspark.session import broadcast_threshold
 
 
 def stream_bloom_filter(
@@ -60,16 +61,19 @@ def stream_bloom_filter(
     cols = list(stream.columns)
     out = stream
     pos_cols = _bloom_pos_cols(value_col, m_bits, k, salt)
+    # Broadcast hint while the table's hard bound (m_bits longs, 8 *
+    # m_bits bytes) is within autoBroadcastJoinThreshold: the position
+    # table's size ESTIMATE runs past the threshold well before its data
+    # does (at the default m_bits=1<<20, 8 MB of data), which would
+    # demote each of the k stream-static joins to a per-batch shuffle of
+    # the whole stream. Past the bound, or with broadcasts off, the
+    # planner picks the join: a shuffle, never a forced multi-GB broadcast.
+    limit = broadcast_threshold(stream.sparkSession)
+    hint = F.broadcast if 0 <= 8 * m_bits <= limit else (lambda d: d)
     hit = F.lit(True)
     for i, pc in enumerate(pos_cols):
-        # Explicit broadcast: at the default m_bits=1<<20 the position
-        # table's estimated size exceeds autoBroadcastJoinThreshold
-        # (10 MB), silently demoting each of the k stream-static joins to
-        # a per-batch shuffle of the whole stream — the opposite of the
-        # zero-exchange design documented above. The table is bounded at
-        # m_bits longs (8 MB of data at the default), safely broadcastable.
         out = out.withColumn(f"__p{i}", pc).join(
-            F.broadcast(
+            hint(
                 bits_d.select(
                     F.col("pos").alias(f"__p{i}"), F.lit(1).alias(f"__s{i}")
                 )

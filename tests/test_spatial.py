@@ -118,6 +118,19 @@ def test_pip_broadcast_plan_is_one_map(spark, features, fixtures_dir):
     assert "Exchange" not in plan and "Join" not in plan, plan
 
 
+def test_pip_bucketed_plan_evaluates_cells_once(spark, features, fixtures_dir):
+    """The cover join on ``h3_r7`` must not copy the cell kernel below
+    it: the cell columns are non-nullable, so no ``isnotnull`` is
+    inferred on the join key."""
+    imgs = with_cell_columns(
+        spark.read.parquet(f"{fixtures_dir}/images_sf_e2e.parquet")
+    )
+    with _broadcast_threshold(spark, "-1"):
+        plan = _plan(pip_join(imgs, features))
+    assert "Join" in plan, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_pip_over_broadcast_threshold_takes_bucketed_path(
     spark, images, features, fixtures_dir, caplog
 ):
@@ -437,14 +450,34 @@ def test_large_image_tile_sums_exact(spark):
 class TestCellsNullSafety:
     def test_null_coordinates_get_sentinel_not_batch_abort(self, spark):
         """One bad row must not poison the Arrow batch (streaming ingest
-        re-reads the same file forever on failure)."""
+        re-reads the same file forever on failure). The sentinel is the
+        kernel's only answer for bad input, so the schema declares the
+        seven cell columns non-nullable."""
         df = spark.createDataFrame(
             [("a", 50.0, 8.0), ("b", None, 8.0), ("c", float("nan"), 8.0)],
             "id string, lat double, lon double",
         )
-        rows = {r["id"]: r for r in with_cell_columns(df).collect()}
+        cells = with_cell_columns(df)
+        for c in [f"h3_r{r}" for r in range(7, 13)] + ["s2_cell"]:
+            assert cells.schema[c].dataType.simpleString() == "bigint", c
+            assert not cells.schema[c].nullable, c
+        rows = {r["id"]: r for r in cells.collect()}
         assert rows["a"]["h3_r9"] != 0 and rows["a"]["s2_cell"] != 0
         for bad in ("b", "c"):
             assert rows[bad]["h3_r7"] == 0
             assert rows[bad]["h3_r12"] == 0
             assert rows[bad]["s2_cell"] == 0
+
+    def test_filter_after_cells_reaches_scan(self, spark, fixtures_dir):
+        """A filter on a scan column written after ``with_cell_columns``
+        is pushed into the parquet scan, and keeps the same rows as the
+        filter written before it."""
+        src = spark.read.parquet(f"{fixtures_dir}/images_sf_e2e.parquet")
+        after = with_cell_columns(src).filter("fmt = 'png'")
+        pushed = [ln for ln in _plan(after).split("\n") if "PushedFilters" in ln]
+        assert len(pushed) == 1 and "EqualTo(fmt,png)" in pushed[0], pushed
+        before = with_cell_columns(src.filter("fmt = 'png'"))
+        key = ["image_id", "h3_r12", "s2_cell"]
+        assert sorted(after.select(key).collect()) == sorted(
+            before.select(key).collect()
+        )

@@ -231,10 +231,10 @@ def test_stream_hll_registers_match_batch(spark, tmp_path):
     assert abs(ea / 300 - 1) < 0.26 and abs(eb / 150 - 1) < 0.26
 
 
-def test_stream_bloom_filter_gate(spark, tmp_path):
-    """Stateless stream-static Bloom gate: rows whose text was in the
-    previous snapshot are dropped; all genuinely-new rows survive unless
-    they are bloom false positives (checked against the batch probe)."""
+def _run_bloom_gate(spark, tmp_path):
+    """Run the stream-static Bloom gate over 100 docs (every other one
+    seen in the 200-doc snapshot) -> (surviving doc_id -> text, the
+    batch probe's non-hit doc_ids, the executed physical plan)."""
     from gjspark.operators.sketches import bloom_bits, bloom_membership
     from gjspark.streaming.sketches import stream_bloom_filter
 
@@ -259,10 +259,8 @@ def test_stream_bloom_filter_gate(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
+    plan = q._jsq.explainInternal(False)
     got = {r["doc_id"]: r["text"] for r in spark.sql("select * from bloom_gate").collect()}
-    # every snapshot text dropped (no false negatives)
-    assert all(not t.startswith("old") for t in got.values())
-    # survivors == exactly the batch probe's non-hits (false positives agree)
     batch = spark.createDataFrame(rows, "doc_id string, text string")
     expect = {
         r["doc_id"]
@@ -270,4 +268,33 @@ def test_stream_bloom_filter_gate(spark, tmp_path):
         .filter(~F.col("bloom_hit"))
         .collect()
     }
+    return got, expect, plan
+
+
+def test_stream_bloom_filter_gate(spark, tmp_path):
+    """Stateless stream-static Bloom gate: rows whose text was in the
+    previous snapshot are dropped; all genuinely-new rows survive unless
+    they are bloom false positives (checked against the batch probe).
+    The 32 KB position table is within the broadcast threshold, so the
+    k joins broadcast it."""
+    got, expect, plan = _run_bloom_gate(spark, tmp_path)
+    # every snapshot text dropped (no false negatives)
+    assert all(not t.startswith("old") for t in got.values())
+    # survivors == exactly the batch probe's non-hits (false positives agree)
+    assert set(got) == expect
+    assert "BroadcastExchange" in plan, plan
+
+
+def test_stream_bloom_filter_respects_broadcast_threshold(spark, tmp_path):
+    """With broadcasts off the gate forces no broadcast of the position
+    table, and its output is unchanged."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        got, expect, plan = _run_bloom_gate(spark, tmp_path)
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastExchange" not in plan, plan
+    assert all(not t.startswith("old") for t in got.values())
     assert set(got) == expect

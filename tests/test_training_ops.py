@@ -77,6 +77,33 @@ class TestDedup:
         assert all(a >= 100 for a, b in pairs)  # random pairs don't hit 0.98
 
 
+@pytest.mark.parametrize(
+    "name, n_python, n_map",
+    [
+        # signature and shingle UDFs once per join side, one verify map
+        ("q_minhash_pairs", 5, 1),
+        # the simhash UDF once per band-join side
+        ("q_simhash_pairs", 2, 0),
+        # the band map once per join side, one verify map
+        ("q_embed_pairs", 3, 3),
+        # centroid assignment, probe lists, cosine
+        ("q_ivf_topk", 3, 0),
+    ],
+)
+def test_pair_kernels_evaluate_once(spark, name, n_python, n_map):
+    """Each kernel use is one Python node (ArrowEvalPython or
+    MapInPandas). A Spark filter on a kernel's output, or an isnotnull
+    Catalyst infers on a nullable join key, would copy the kernel below
+    it and add a node."""
+    import __spark_entry__ as E
+
+    df = E.queries()[name](spark, "/root/testdata/sf0.01")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    n_map_got = plan.count("MapInPandas")
+    assert plan.count("ArrowEvalPython") + n_map_got == n_python, plan
+    assert n_map_got == n_map, plan
+
+
 class TestConnectedComponents:
     """dedup.connected_components (large-star/small-star) — the
     transitive-closure step over near-dup pairs."""
