@@ -8,17 +8,19 @@ the 200 default. At cluster scale the same factory is used via
 Python daemon: on ``local``/``local[...]`` masters the Python workers are
 forked from ``gjspark.pydaemon`` instead of ``pyspark.daemon``. Every
 kernel here is an Arrow UDF, so every operator pays the fixed cost of
-each Python task, and on CPython below 3.12 most of that cost was
-re-reading ``pyspark.zip``'s directory in every zip importer at the start
-of every task (see the ``pydaemon`` docstring). The daemon applies the
-fix before forking, so it reaches every worker, including UDFs that never
-import ``gjspark``. The directory holding ``gjspark`` is added to
-``spark.executorEnv.PYTHONPATH`` so Spark can start it; Spark merges that
-value into the workers' path rather than replacing it. Cluster masters
-keep pyspark's own daemon: an executor may not have ``gjspark`` on its
-path when the daemon starts (``--py-files`` archives are added to the
-path per task, inside the forked worker). On Python 3.12+ the daemon
-changes nothing. ``get_spark`` logs which daemon the session uses.
+starting and running Python workers. Before it forks, the daemon imports
+the installed, byte-compiled pyspark instead of compiling
+``$SPARK_HOME/python/lib/pyspark.zip`` from source (only when both are
+the same release), imports pandas and pyarrow once for all workers, and
+on CPython below 3.12 stops every task from re-reading each zip
+importer's directory (see the ``pydaemon`` docstring). The workers
+inherit all three, including UDFs that never import ``gjspark``. The
+directory holding ``gjspark`` is added to ``spark.executorEnv.PYTHONPATH``
+so Spark can start it; Spark merges that value into the workers' path
+rather than replacing it. Cluster masters keep pyspark's own daemon: an
+executor may not have ``gjspark`` on its path when the daemon starts
+(``--py-files`` archives are added to the path per task, inside the
+forked worker). ``get_spark`` logs which daemon the session uses.
 """
 
 from __future__ import annotations

@@ -1,6 +1,8 @@
 """Session factory: the shared scratch sweeper must never delete a live
 Spark job's spark.local.dir (shuffle data loss), and local-mode Python
-workers run under ``gjspark.pydaemon`` with its zipimport backport."""
+workers run under ``gjspark.pydaemon``: the installed pyspark (not
+``pyspark.zip``), pandas and pyarrow loaded before the fork, and the
+zipimport backport."""
 
 import importlib
 import os
@@ -92,17 +94,78 @@ def test_zipimport_backport_rereads_only_changed_archives(tmp_path, monkeypatch)
         sys.path_importer_cache.pop(str(archive), None)
 
 
+def _pyspark_tree(root, version):
+    (root / "pyspark").mkdir(parents=True)
+    (root / "pyspark" / "__init__.py").write_text("")
+    (root / "pyspark" / "version.py").write_text(f"__version__ = {version!r}\n")
+    return str(root)
+
+
+def _pyspark_zip(root, version):
+    root.mkdir(parents=True)
+    archive = root / "pyspark.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("pyspark/__init__.py", "")
+        z.writestr("pyspark/version.py", f"__version__ = {version!r}\n")
+    return str(archive)
+
+
+class TestPreferInstalledPyspark:
+    """``prefer_installed_pyspark`` moves SPARK_HOME's source-only zip behind
+    an installed pyspark of the same release, and otherwise leaves
+    ``sys.path`` as Spark built it."""
+
+    def _run(self, monkeypatch, path):
+        monkeypatch.setattr(sys, "path", list(path))
+        pydaemon.prefer_installed_pyspark()
+        return list(sys.path)
+
+    def test_same_release_moves_zip_behind_installed_copy(self, tmp_path, monkeypatch):
+        zip_ = _pyspark_zip(tmp_path / "lib", "4.1.2")
+        site = _pyspark_tree(tmp_path / "site", "4.1.2")
+        a, b, c, d = (str(tmp_path / n) for n in "abcd")
+        assert self._run(monkeypatch, [a, zip_, b, c, site, d]) == [
+            a, b, c, site, zip_, d
+        ]
+
+    def test_other_release_keeps_path(self, tmp_path, monkeypatch):
+        zip_ = _pyspark_zip(tmp_path / "lib", "4.1.2")
+        site = _pyspark_tree(tmp_path / "site", "4.1.1")
+        path = [str(tmp_path / "a"), zip_, site, str(tmp_path / "d")]
+        assert self._run(monkeypatch, path) == path
+
+    def test_no_installed_copy_keeps_path(self, tmp_path, monkeypatch):
+        zip_ = _pyspark_zip(tmp_path / "lib", "4.1.2")
+        path = [str(tmp_path / "a"), zip_, str(tmp_path / "b")]
+        assert self._run(monkeypatch, path) == path
+
+    def test_no_zip_keeps_path(self, tmp_path, monkeypatch):
+        site = _pyspark_tree(tmp_path / "site", "4.1.2")
+        path = [str(tmp_path / "a"), site, str(tmp_path / "b")]
+        assert self._run(monkeypatch, path) == path
+
+
 def test_local_python_workers_run_under_gjspark_daemon(spark):
     """The shared ``local[4]`` session forks its Python workers from
-    ``gjspark.pydaemon``, and on Python < 3.12 they carry the zipimport
+    ``gjspark.pydaemon``: they import the installed pyspark rather than
+    ``pyspark.zip``, their daemon loaded pyarrow before forking while
+    still single-threaded, and on Python < 3.12 they carry the zipimport
     backport (the UDF below never imports ``gjspark``)."""
 
     def probe(batches):
         import pandas as pd
+        import pyspark
 
         for _ in batches:
             pass
         main = sys.modules["__main__"]
+        daemon = f"/proc/{os.getppid()}"
+        with open(f"{daemon}/maps") as f:
+            daemon_arrow = "libarrow" in f.read()
+        with open(f"{daemon}/status") as f:
+            threads = next(
+                int(line.split()[1]) for line in f if line.startswith("Threads:")
+            )
         yield pd.DataFrame(
             {
                 "main": [getattr(main.__spec__, "name", None)],
@@ -110,15 +173,26 @@ def test_local_python_workers_run_under_gjspark_daemon(spark):
                     zipimport.zipimporter.invalidate_caches
                     is getattr(main, "_invalidate_caches", None)
                 ],
+                "pyspark_file": [pyspark.__file__],
+                "daemon_arrow": [daemon_arrow],
+                "daemon_threads": [threads],
             }
         )
 
     rows = (
         spark.range(8, numPartitions=2)
-        .mapInPandas(probe, "main string, patched boolean")
+        .mapInPandas(
+            probe,
+            "main string, patched boolean, pyspark_file string, "
+            "daemon_arrow boolean, daemon_threads int",
+        )
         .collect()
     )
     assert len(rows) == 2
     assert {r["main"] for r in rows} == {"gjspark.pydaemon"}
     if sys.version_info < (3, 12):
         assert all(r["patched"] for r in rows)
+    for r in rows:
+        assert ".zip" not in r["pyspark_file"], r["pyspark_file"]
+        assert r["daemon_arrow"]
+        assert r["daemon_threads"] == 1

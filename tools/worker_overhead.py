@@ -1,7 +1,9 @@
 """Fixed cost of a Python task: identity ``mapInPandas`` jobs over tiny partitions.
 
-Starts a session with ``get_spark``, runs one warm-up job (it starts the
-Python daemon and its workers), then ``--jobs`` timed jobs, each an
+Starts a session with ``get_spark`` and runs one warm-up job that starts
+the Python daemon and forks its workers; ``boot_s`` times both, and the
+warm-up reports where the workers imported ``pyspark`` from
+(``pyspark_origin``). Then it runs ``--jobs`` timed jobs, each an
 identity ``mapInPandas`` over ``--partitions`` partitions of 8 rows, so
 almost all of a task's cost is the worker's per-task setup. Python-worker
 CPU is read from ``/proc``: every process under this one started with
@@ -11,6 +13,9 @@ that of its reaped children.
 Usage: python tools/worker_overhead.py [--jobs 10] [--partitions 8]
        [--master local[4]]
 Prints one JSON line, naming the Python daemon ``get_spark`` configured.
+``boot_s`` includes the JVM start, so it is the cold cost of a session's
+first Python job; ``first_job_s`` is that job alone, where the daemon
+boots.
 """
 
 from __future__ import annotations
@@ -59,6 +64,15 @@ def python_worker_cpu_s() -> float:
     return total / _TICK
 
 
+def _pyspark_origin(batches):
+    import pandas as pd
+    import pyspark
+
+    for _ in batches:
+        pass
+    yield pd.DataFrame({"origin": [os.path.dirname(os.path.dirname(pyspark.__file__))]})
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--jobs", type=int, default=10)
@@ -69,10 +83,17 @@ def main(argv: list[str] | None = None) -> int:
     from gjspark.session import get_spark
 
     conf = {"spark.ui.showConsoleProgress": "false"}
+    t0 = time.perf_counter()
     spark = get_spark("worker_overhead", master=args.master, extra_conf=conf)
+    t1 = time.perf_counter()
     df = spark.range(8 * args.partitions, numPartitions=args.partitions)
+    # the daemon starts and forks its workers in this first job
+    probe = df.mapInPandas(_pyspark_origin, "origin string")
+    origins = {r.origin for r in probe.collect()}
+    t2 = time.perf_counter()
+    boot, first_job = t2 - t0, t2 - t1
     job = df.mapInPandas(lambda it: (pdf for pdf in it), "id long")
-    job.collect()  # warm-up: daemon and workers start here
+    job.collect()  # warm-up of the timed plan
     cpu0, t0 = python_worker_cpu_s(), time.perf_counter()
     for _ in range(args.jobs):
         job.collect()
@@ -86,6 +107,9 @@ def main(argv: list[str] | None = None) -> int:
         "master": args.master,
         "jobs": args.jobs,
         "partitions": args.partitions,
+        "boot_s": round(boot, 3),
+        "first_job_s": round(first_job, 3),
+        "pyspark_origin": sorted(origins),
         "wall_s_per_job": round(wall / args.jobs, 4),
         "worker_cpu_s_per_task": round(cpu / tasks, 4),
     }))
