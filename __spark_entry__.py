@@ -390,7 +390,8 @@ def q_dedup_clusters(spark, sf_dir):
     component, not per pair). Pairs come from the bit-exact simhash
     pipeline at the classic Hamming<=3 dedup threshold (where the
     4x16-bit band blocking has EXACT pigeonhole recall); components via
-    alternating large-star/small-star (dedup.connected_components).
+    dedup.connected_components (labelled on the driver while the edges
+    fit the broadcast bound, alternating large-star/small-star above it).
     Oracle: the same simhash SQL twin feeding a recursive-CTE
     reachability closure in DuckDB — a fully independent second
     implementation of both stages."""

@@ -20,16 +20,22 @@ text/embedding back by id (broadcast when small, shuffle otherwise). At
 
 from __future__ import annotations
 
+import logging
 import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from gjspark.operators.ann import row_cosine
+from gjspark.session import broadcast_threshold
+
+_log = logging.getLogger(__name__)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -512,6 +518,40 @@ def embedding_near_dup(
     return _verify_pairs(cand, vecs, row_cosine, "cosine", threshold)
 
 
+def _min_labels(ends: pa.ChunkedArray) -> tuple[pa.Array, pa.Array]:
+    """Edge endpoints (every ``u``, then every ``v``) -> ``(nodes,
+    component)``: every node with the minimum node of its component,
+    nodes in sorted order.
+
+    Nodes are ranked in sorted order, so the minimum rank is the minimum
+    id: integers by ``np.unique``, other types by Arrow, which sorts
+    strings and binaries by their bytes (Spark's order) without a Python
+    object per id. Each round hooks every tree root onto the smallest
+    label across its edges (``np.minimum.at``), then jumps pointers
+    until every node points at a root. A label is always a node of the
+    same component and never larger than the node, so when every edge
+    joins equal labels each component points at its minimum; every tree
+    not yet whole merges each round, so rounds are O(log n).
+    """
+    if pa.types.is_integer(ends.type):
+        nodes, a = np.unique(ends.to_numpy(), return_inverse=True)
+        nodes = pa.array(nodes)
+    else:
+        nodes = pc.unique(ends)
+        nodes = nodes.take(pc.sort_indices(nodes))
+        a = pc.index_in(ends, value_set=nodes).to_numpy()
+    m = len(a) // 2
+    b = np.concatenate([a[m:], a[:m]])
+    label = np.arange(len(nodes))
+    while True:
+        la, lb = label[a], label[b]
+        if np.array_equal(la, lb):
+            return nodes, nodes.take(label)
+        np.minimum.at(label, la, lb)
+        while not np.array_equal(jumped := label[label], label):
+            label = jumped
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -525,27 +565,56 @@ def connected_components(
     A~B, B~C puts A,C in one cluster even though the pair finder never
     compared them).
 
-    Algorithm: alternating large-star / small-star (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    published O(log^2 n)-round MapReduce formulation, here as pure
-    DataFrame ops:
+    The first action counts the distinct edges and, in the same
+    aggregation, their bytes (count x 2 x the id type's width; the
+    summed id lengths for string and binary ids). Then one of two paths:
 
-    - large-star: for each node u with neighborhood G(u), attach every
-      neighbor v > u to m = min(G(u) + {u});
-    - small-star: orient edges (larger -> smaller); attach every
-      neighbor and u itself to the minimum of the oriented neighborhood.
+    - **local**, when those bytes fit
+      ``spark.sql.autoBroadcastJoinThreshold`` (the bound PIP uses), or
+      there are no edges: the checkpointed edges are collected in one
+      job and labelled on the driver by :func:`_min_labels`, and the
+      result is built from an Arrow table (no Python worker). At
+      benchmark scale each star round costs a few jobs' fixed overhead
+      for a few KB of edges, so one collect replaces about twenty jobs.
+      The byte bound is the only switch because under the session's
+      64 MB default the local path was faster for every edge set tried
+      (``tools/cc_crossover.py``, ``dedup_clusters`` on ``local[4]``,
+      clusters of 4 nodes), by the edge bytes the switch reads: long
+      ids 0.8 vs 3.3 s at 11 KB, 11 vs 18 s at 11 MB, 29 vs 33 s at
+      32 MB and 14 vs 61 s at 64 MB; string ids 0.9 vs 3.4 s at 26 KB
+      and 11 vs 39 s at 53 MB. The margin is smallest at about two
+      million result rows: under
+      ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps
+      the Arrow table as a local relation, whose rows every scan
+      serializes into its tasks.
+    - **star**, above the bound or when the threshold is negative:
+      alternating large-star / small-star (Kiveris et al., "Connected
+      Components in MapReduce and Beyond", SoCC'14) — the published
+      O(log^2 n)-round MapReduce formulation, here as pure DataFrame
+      ops:
 
-    Each half-round is ONE groupBy-min plus ONE equi-join on the node id
-    — never an all-pairs product — and edge count only shrinks toward
-    the star fixpoint, so at 10^12 rows every shuffle is bounded by the
-    current edge set. Convergence is detected by an order-independent
-    signature (count + xor of xxhash64(u,v)); lineage is cut per round
-    with ``localCheckpoint`` (swap for ``checkpoint`` on a reliable FS
-    when running multi-executor — driver note in plans/job.py applies).
+      - large-star: for each node u with neighborhood G(u), attach
+        every neighbor v > u to m = min(G(u) + {u});
+      - small-star: orient edges (larger -> smaller); attach every
+        neighbor and u itself to the minimum of the oriented
+        neighborhood.
 
-    Nodes that appear only in self-pairs (u==u) are dropped with those
-    degenerate edges; singleton nodes never appear in ``pairs`` at all,
-    so the output covers exactly the nodes with >=1 real neighbor.
+      Each half-round is ONE groupBy-min plus ONE equi-join on the node
+      id — never an all-pairs product — and edge count only shrinks
+      toward the star fixpoint, so at 10^12 rows every shuffle is
+      bounded by the current edge set. Convergence is detected by an
+      order-independent signature (count + xor of xxhash64(u,v));
+      lineage is cut per round with ``localCheckpoint`` (swap for
+      ``checkpoint`` on a reliable FS when running multi-executor —
+      driver note in plans/job.py applies).
+
+    The chosen path goes to ``logging`` with the edge count, bytes and
+    threshold. Both paths return the same rows and schema.
+
+    Nodes that appear only in self-pairs (u==u) or with a null id are
+    dropped with those degenerate edges; singleton nodes never appear in
+    ``pairs`` at all, so the output covers exactly the nodes with >=1
+    real neighbor.
     """
     E = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
@@ -554,23 +623,45 @@ def connected_components(
     )
     id_type = E.schema["u"].dataType
 
-    def _sig(e: DataFrame):
+    def _sig(e: DataFrame, *extra):
         # order-independent, overflow-free (xor) fingerprint of the edge set
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(cast(u as string), cast(v as string)))").alias("h"),
-        ).first()
-        return (row["n"], row["h"])
+        return tuple(e.agg(
+            F.count("*"),
+            F.expr("bit_xor(xxhash64(cast(u as string), cast(v as string)))"),
+            *extra,
+        ).first())
 
+    if isinstance(id_type, (T.StringType, T.BinaryType)):
+        edge_bytes = F.sum(F.octet_length("u") + F.octet_length("v"))
+    else:
+        width = E._jdf.schema().apply("u").dataType().defaultSize()
+        edge_bytes = F.count("*") * (2 * width)
     E = E.localCheckpoint(eager=False)  # materialized by the _sig action
-    prev = _sig(E)
-    if prev[0] == 0:
+    n, h, n_bytes = _sig(E, edge_bytes)
+    n_bytes = n_bytes or 0
+    limit = broadcast_threshold(E.sparkSession)
+    local = n == 0 or n_bytes <= limit
+    _log.info(
+        "connected_components path=%s edges=%d bytes=%d threshold=%d",
+        "local" if local else "star", n, n_bytes, limit,
+    )
+    if local:
+        edges = E.toArrow()
+        u, v = edges.column("u"), edges.column("v")
+        ids, comps = _min_labels(pa.chunked_array(u.chunks + v.chunks, u.type))
+        # an Arrow table, not a list: a list goes through the RDD API and
+        # starts Python workers; an empty pandas frame falls back to it.
+        # One partition (the rows are within the broadcast bound): a
+        # consumer grouping by component, as dedup_clusters does, then
+        # plans no exchange, which is one job fewer.
         return E.sparkSession.createDataFrame(
-            [], T.StructType([
+            pa.table({"id": ids, "component": comps}),
+            T.StructType([
                 T.StructField("id", id_type),
                 T.StructField("component", id_type),
-            ])
-        )
+            ]),
+        ).coalesce(1)
+    prev = (n, h)
     for _ in range(max_iter):
         # large-star: symmetrize, m(u) = min over G(u)+{u}, attach v>u to m
         sym = E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))

@@ -18,9 +18,12 @@ Reference analogues:
 
 from __future__ import annotations
 
+import logging
 import threading
 import time
 from collections.abc import Callable
+
+_log = logging.getLogger(__name__)
 
 
 class ChangingStatus:
@@ -50,9 +53,11 @@ class ChangingStatus:
 
 class ChangingStatusLogger:
     """Periodically polls registered statuses, logging each only when it
-    changed. ``log`` defaults to print; inject a logger in production."""
+    changed. ``log`` defaults to this module's logger at INFO."""
 
-    def __init__(self, log: Callable[[str], None] = print, interval: float = 1.0):
+    def __init__(
+        self, log: Callable[[str], None] = _log.info, interval: float = 1.0
+    ):
         self.log = log
         self.interval = interval
         self._statuses: list[ChangingStatus] = []

@@ -35,6 +35,15 @@ def test_changing_status_logger_thread():
     assert lines == ["n=0", "n=1"]
 
 
+def test_changing_status_logger_defaults_to_logging(caplog):
+    s = ChangingStatus("n={}", 1)
+    s.set_all_to(3)
+    logger = ChangingStatusLogger(interval=60).add_status(s)
+    with caplog.at_level("INFO", logger="gjspark.plans.progress"):
+        logger.stop()  # flushes the changed status once
+    assert [r.getMessage() for r in caplog.records] == ["n=3"]
+
+
 def test_track_progress_observes_stages(spark):
     import pandas as pd
 

@@ -3,11 +3,11 @@
 decode invariants, both mosaic plans == a per-image numpy mosaic."""
 
 import zlib
-from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import broadcast_threshold
 from pyspark.sql import functions as F
 
 from gjspark.fixtures import generator as gen
@@ -76,24 +76,9 @@ def test_cell_assignment_matches_golden(images, fixtures_dir):
         assert (got[col].to_numpy() == exp[col].to_numpy()).all(), col
 
 
-@contextmanager
-def _broadcast_threshold(spark, value: str | None):
-    """Run the block with spark.sql.autoBroadcastJoinThreshold set to
-    ``value`` (None: unchanged), then restore the old setting. "-1" turns
-    broadcasts off, which sends ``pip_join`` down its bucketed path."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    if value is not None:
-        spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 @pytest.mark.parametrize("broadcast", [True, False])
 def test_pip_join_matches_golden(spark, images, features, fixtures_dir, broadcast):
-    with _broadcast_threshold(spark, None if broadcast else "-1"):
+    with broadcast_threshold(spark, None if broadcast else "-1"):
         got = pip_join(images, features).toPandas()
     exp = pd.read_parquet(f"{fixtures_dir}/expected_pip.parquet")
     got_set = set(zip(got["image_id"], got["feature_id"]))
@@ -125,7 +110,7 @@ def test_pip_bucketed_plan_evaluates_cells_once(spark, features, fixtures_dir):
     imgs = with_cell_columns(
         spark.read.parquet(f"{fixtures_dir}/images_sf_e2e.parquet")
     )
-    with _broadcast_threshold(spark, "-1"):
+    with broadcast_threshold(spark, "-1"):
         plan = _plan(pip_join(imgs, features))
     assert "Join" in plan, plan
     assert plan.count("ArrowEvalPython") == 1, plan
@@ -136,7 +121,7 @@ def test_pip_over_broadcast_threshold_takes_bucketed_path(
 ):
     """Geometry bytes past autoBroadcastJoinThreshold: the collect stops,
     the bucketed plan runs, the pairs still equal the golden."""
-    with _broadcast_threshold(spark, "100"):
+    with broadcast_threshold(spark, "100"):
         with caplog.at_level("INFO", logger="gjspark.operators.spatial_join"):
             df = pip_join(images, features)
         got = _pairs(df)
@@ -217,7 +202,7 @@ def test_pip_edge_cases_both_paths_match_oracle(spark, tmp_path):
             ("shared_edge", "east"),
         }
         for threshold in (None, "-1"):  # broadcast path, then bucketed
-            with _broadcast_threshold(spark, threshold):
+            with broadcast_threshold(spark, threshold):
                 assert _pairs(pip_join(images, features)) == oracle
     finally:
         features.unpersist()

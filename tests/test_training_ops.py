@@ -1,9 +1,13 @@
 """Training-data pipeline ops: dedup (exact/MinHash/SimHash/embedding),
 ANN (brute + IVF recall), text analysis — with planted ground truth."""
 
+import uuid
+
 import numpy as np
 import pytest
+from conftest import broadcast_threshold
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gjspark.operators.ann import brute_force_topk, ivf_topk
 from gjspark.operators.dedup import (
@@ -104,18 +108,58 @@ def test_pair_kernels_evaluate_once(spark, name, n_python, n_map):
     assert n_map_got == n_map, plan
 
 
-class TestConnectedComponents:
-    """dedup.connected_components (large-star/small-star) — the
-    transitive-closure step over near-dup pairs."""
+def _min_components(edges) -> dict:
+    """Union-find oracle: node -> minimum node of its component. Ids
+    compare as Spark compares them (strings by their UTF-8 bytes); self
+    pairs and pairs with a null are not edges."""
+    key = (lambda x: x.encode()) if isinstance(edges[0][0], str) else None
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a is None or b is None or a == b:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    members: dict = {}
+    for v in parent:
+        members.setdefault(find(v), []).append(v)
+    return {
+        v: min(group, key=key) for group in members.values() for v in group
+    }
+
+
+class _ConnectedComponentsCases:
+    """dedup.connected_components — the transitive-closure step over
+    near-dup pairs. Every graph here fits the session's broadcast bound,
+    so these cases run the local (driver-side) labelling unless a class
+    sets the threshold to -1."""
+
+    threshold: str | None = None
+    path = "local"
+
+    @pytest.fixture(autouse=True)
+    def _path(self, spark):
+        with broadcast_threshold(spark, self.threshold):
+            yield
 
     @staticmethod
-    def _cc(spark, edges):
+    def _cc(spark, edges, schema="id_a long, id_b long"):
         from gjspark.operators.dedup import connected_components
 
-        df = spark.createDataFrame(edges, "id_a long, id_b long")
-        return {
-            r["id"]: r["component"] for r in connected_components(df).collect()
-        }
+        df = spark.createDataFrame(edges, schema)
+        comp = connected_components(df)
+        id_type = df.schema["id_a"].dataType
+        assert comp.schema == T.StructType([
+            T.StructField("id", id_type), T.StructField("component", id_type)
+        ])
+        return {r["id"]: r["component"] for r in comp.collect()}
 
     def test_chain_is_one_component(self, spark):
         # a path 1-2-3-...-8: pair-finders never compared 1 with 8
@@ -126,11 +170,16 @@ class TestConnectedComponents:
         out = self._cc(spark, [(5, 3), (3, 9), (20, 10), (10, 30)])
         assert out == {3: 3, 5: 3, 9: 3, 10: 10, 20: 10, 30: 10}
 
-    def test_self_loops_dropped_empty_ok(self, spark):
-        from gjspark.operators.dedup import connected_components
+    def test_duplicate_reversed_and_null_edges(self, spark):
+        edges = [(4, 2), (2, 4), (4, 2), (6, 4), (4, 6), (8, None),
+                 (None, 9), (9, 9), (11, 12), (12, 11)]
+        out = self._cc(spark, edges)
+        assert out == _min_components(edges)
+        assert out == {2: 2, 4: 2, 6: 2, 11: 11, 12: 11}
 
-        df = spark.createDataFrame([(7, 7)], "id_a long, id_b long")
-        assert connected_components(df).count() == 0
+    def test_self_loops_dropped_empty_ok(self, spark):
+        assert self._cc(spark, [(7, 7)]) == {}
+        assert self._cc(spark, []) == {}
 
     def test_random_graph_vs_union_find(self, spark):
         rng = np.random.default_rng(7)
@@ -140,42 +189,28 @@ class TestConnectedComponents:
             for a, b in rng.integers(0, n, size=(250, 2))
             if a != b
         ]
-        parent = list(range(n))
+        assert self._cc(spark, edges) == _min_components(edges)
 
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        touched = {v for e in edges for v in e}
-        # canonicalize: representative = min id in component
-        comp_min: dict[int, int] = {}
-        for v in touched:
-            r = find(v)
-            comp_min[r] = min(comp_min.get(r, v), v)
-        expected = {v: comp_min[find(v)] for v in touched}
-        out = self._cc(spark, edges)
-        assert out == expected
-
-    def test_long_path_converges_in_log_rounds(self, spark):
-        # a 64-node path is the worst diameter per edge count; the
-        # alternating-star iteration must collapse it in O(log n) rounds
-        # (max_iter=12 << 63 plain-propagation rounds)
-        from gjspark.operators.dedup import connected_components
-
-        df = spark.createDataFrame(
-            [(i, i + 1) for i in range(64)], "id_a long, id_b long"
-        )
-        out = {
-            r["id"]: r["component"]
-            for r in connected_components(df, max_iter=12).collect()
-        }
-        assert out == {i: 0 for i in range(65)}
+    def test_random_string_graph_vs_union_find(self, spark):
+        # upper before lower case, prefixes and non-ASCII ids: the
+        # component minimum must follow Spark's string order (UTF-8 bytes)
+        rng = np.random.default_rng(11)
+        alphabet = ["A", "Z", "a", "ab", "b", "z", "\xe9", "\uff21",
+                    "\U0001f600"]
+        names = sorted({
+            "".join(rng.choice(alphabet, size=rng.integers(1, 3)))
+            for _ in range(120)
+        })
+        picks = rng.integers(0, len(names), size=(90, 2))
+        # U+E000 sorts first in UTF-8 (and code points), U+10000 in UTF-16
+        edges = [(names[a], names[b]) for a, b in picks]
+        edges.append(("\U00010000", "\ue000"))
+        # case-folded, "zz_lower" would sort first
+        edges.append(("zz_lower", "ZZ_upper"))
+        out = self._cc(spark, edges, "id_a string, id_b string")
+        assert out == _min_components(edges)
+        assert out["\U00010000"] == "\ue000"
+        assert out["zz_lower"] == "ZZ_upper"
 
     def test_cluster_sizes(self, spark):
         from gjspark.operators.dedup import dedup_clusters
@@ -192,17 +227,86 @@ class TestConnectedComponents:
         }
 
     def test_string_ids(self, spark):
-        from gjspark.operators.dedup import connected_components
-
-        df = spark.createDataFrame(
-            [("img_b", "img_a"), ("img_b", "img_c")], "id_a string, id_b string"
+        out = self._cc(
+            spark, [("img_b", "img_a"), ("img_b", "img_c")],
+            "id_a string, id_b string",
         )
-        out = {
-            r["id"]: r["component"] for r in connected_components(df).collect()
-        }
         assert out == {
             "img_a": "img_a", "img_b": "img_a", "img_c": "img_a"
         }
+
+    def test_logs_path(self, spark, caplog):
+        # an empty edge set returns at once on the local path, whatever
+        # the threshold
+        with caplog.at_level("INFO", logger="gjspark.operators.dedup"):
+            self._cc(spark, [(1, 2), (2, 3)])
+            self._cc(spark, [(5, 5)])
+        msgs = [r.getMessage() for r in caplog.records
+                if r.name == "gjspark.operators.dedup"]
+        assert len(msgs) == 2, msgs
+        assert msgs[0].startswith(
+            f"connected_components path={self.path} edges=2 bytes=32 "
+        ), msgs
+        assert msgs[1].startswith(
+            "connected_components path=local edges=0 bytes=0 "
+        ), msgs
+
+
+class TestConnectedComponents(_ConnectedComponentsCases):
+    """The cases on the local path, and the star rounds' convergence."""
+
+    def test_long_path_converges_in_log_rounds(self, spark):
+        # a 64-node path is the worst diameter per edge count; the
+        # alternating-star iteration must collapse it in O(log n) rounds
+        # (max_iter=12 << 63 plain-propagation rounds); broadcasts off
+        # keeps the rounds running
+        from gjspark.operators.dedup import connected_components
+
+        df = spark.createDataFrame(
+            [(i, i + 1) for i in range(64)], "id_a long, id_b long"
+        )
+        with broadcast_threshold(spark, "-1"):
+            out = {
+                r["id"]: r["component"]
+                for r in connected_components(df, max_iter=12).collect()
+            }
+        assert out == {i: 0 for i in range(65)}
+
+
+class TestConnectedComponentsStar(_ConnectedComponentsCases):
+    """The same cases with broadcasts off: the large-star/small-star
+    rounds."""
+
+    threshold = "-1"
+    path = "star"
+
+
+def _count_jobs(spark, action) -> int:
+    """Spark jobs ``action()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_clusters_job_floor(spark):
+    """q_dedup_clusters on the sf0.01 documents labels its 29 edges on
+    the driver: the pair finder's jobs, the edge count, one collect and
+    the cluster sizes, at most 9 jobs. With broadcasts off the star
+    rounds run, each with its own jobs."""
+    import __spark_entry__ as E
+
+    def run():
+        E.queries()["q_dedup_clusters"](spark, "/root/testdata/sf0.01").collect()
+
+    assert _count_jobs(spark, run) <= 9
+    with broadcast_threshold(spark, "-1"):
+        assert _count_jobs(spark, run) > 9
 
 
 class TestANN:
