@@ -114,18 +114,14 @@ def run_bench(
     master: str | None = None,
     spatial_only: bool = False,
     reps: int = 1,
-    legs: str = "both",
+    legs: str = "jpeg",
 ) -> dict:
     """``legs``: which image corpus drives the spatial stages.
 
-    - ``"both"`` (default, what the driver records): the jpeg-bearing
-      5-format corpus is the PRIMARY leg — its numbers are the quoted
-      cells/decode_fused/... timings, so the headline pays the
-      real-corpus JPEG decode cost — and the legacy 4-format corpus runs
-      its decode-dependent stages as a ``legacy_leg`` side report for
-      round-over-round continuity (kept one more round, VERDICT r4 #1).
-    - ``"jpeg"`` / ``"legacy"``: that single corpus only (scaling sweeps
-      pass ``legacy`` this round so the sweep stays comparable to r3/r4).
+    - ``"jpeg"`` (default): the jpeg-bearing 5-format corpus, so the
+      headline pays the real-corpus JPEG decode cost.
+    - ``"legacy"``: the 4-format corpus without jpeg; the scaling sweeps
+      pass it so they stay comparable to the earlier sweeps' tables.
     """
     from pyspark.sql import functions as F
 
@@ -133,9 +129,8 @@ def run_bench(
     from gjspark.session import get_spark
 
     ensure_fixtures()
-    primary_jpeg = legs in ("both", "jpeg")
+    primary_jpeg = legs == "jpeg"
     primary_path = _bench_images_path(jpeg=primary_jpeg)
-    legacy_path = _bench_images_path(jpeg=False) if legs == "both" else None
     master = master or f"local[{CPUS}]"
     n_threads = int(master.split("[")[1].rstrip("]"))
     spark = get_spark(
@@ -152,13 +147,8 @@ def run_bench(
     # with disk also the best absolute at BOTH sizes). Production never
     # caches blobs at all (plans/pipeline.py streams them once); the
     # harness re-reads per rep, so it wants the local-SSD-cache analogue.
-    blob_level = (
-        StorageLevel.MEMORY_AND_DISK
-        if os.environ.get("SPARK_GRAFT_BLOB_CACHE") == "memory"
-        else StorageLevel.DISK_ONLY
-    )
     d = _spatial_dfs(spark, primary_path)
-    images = d["images"].persist(blob_level)
+    images = d["images"].persist(StorageLevel.DISK_ONLY)
     n_images = images.count()  # warm: parquet scan + cell UDF boundary
 
     # Fused pipeline: ONE decode pass per rep materializes the persisted
@@ -251,46 +241,6 @@ def run_bench(
             extra_ops.get("phash_neardup", 1e18), round(time.time() - t0, 3)
         )
 
-    legacy_leg = None
-    if legacy_path is not None:
-        from gjspark.operators.cells import with_cell_columns
-
-        # release the primary leg's cached frames first: at 500k rows two
-        # corpora's persisted images would share one heap and evict each
-        # other, inflating the legacy leg 2-4x (cache-thrash, not code)
-        if "feat" in state:
-            state.pop("feat").unpersist()
-        images.unpersist()
-        limg = with_cell_columns(
-            spark.read.parquet(legacy_path).repartition(128)
-        ).persist(blob_level)
-        limg.count()
-        lstate: dict = {}
-
-        def legacy_decode():
-            if "feat" in lstate:
-                lstate["feat"].unpersist()
-            f = d["decoded_features"](limg).persist()
-            f.agg(F.sum("pix_crc32")).collect()
-            lstate["feat"] = f
-
-        lstages = {
-            "decode_fused": legacy_decode,
-            "tile_rollup": lambda: d["rollup"](lstate["feat"]).collect(),
-            "mosaic": lambda: d["mosaic"](lstate["feat"]).count(),
-        }
-        legacy_leg = {}
-        for _ in range(reps):
-            for name, fn in lstages.items():
-                t0 = time.time()
-                fn()
-                legacy_leg[name] = min(
-                    legacy_leg.get(name, 1e18), round(time.time() - t0, 3)
-                )
-        if "feat" in lstate:
-            lstate["feat"].unpersist()
-        limg.unpersist()
-
     if not spatial_only:
         qnames = (
             "q_pricing_summary",
@@ -336,8 +286,6 @@ def run_bench(
         "master": master,
         "corpus": "5-format incl. jpeg" if primary_jpeg else "legacy 4-format",
     }
-    if legacy_leg is not None:
-        result["legacy_leg"] = legacy_leg
     if extra_ops:
         result["extra_ops"] = extra_ops
     if probe is not None:
@@ -482,7 +430,7 @@ if __name__ == "__main__":
     # VM swing 2-10x (cold page cache + co-tenant noise); the second rep
     # measures steady state and min-of-reps is what BASELINE.md reports
     p.add_argument("--reps", type=int, default=3)
-    p.add_argument("--legs", choices=("both", "jpeg", "legacy"), default="both")
+    p.add_argument("--legs", choices=("jpeg", "legacy"), default="jpeg")
     args = p.parse_args()
     if args.scaling:
         run_scaling()

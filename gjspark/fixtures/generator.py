@@ -284,7 +284,7 @@ def _images_schema():
 def oracle_cells(image_id, lat, lon):
     cols = {"image_id": image_id}
     for r in range(7, 13):
-        cols[f"h3_r{r}"] = h3x.h3_index(lat, lon, r)
+        cols[f"h3_r{r}"] = h3x.latlng_to_cell(lat, lon, r)
     cols["s2_cell"] = s2.s2_cell(lat, lon, 16)
     return cols
 

@@ -305,9 +305,9 @@ LOSSLESS = {"ppm", "bmp", "png", "webp", "gif"}
 
 class CodecError(ValueError):
     """Unknown format or malformed payload: the one error ``decode_image``
-    raises for bad input. A ``ValueError``, so the decode call sites that
-    catch ``(NotImplementedError, ValueError)`` mark the row failed
-    instead of failing the task."""
+    raises for bad input. The decode call sites catch it and mark the row
+    failed instead of failing the task; it is a ``ValueError`` for callers
+    that catch that."""
 
 
 def encode_image(img: np.ndarray, fmt: str) -> bytes:

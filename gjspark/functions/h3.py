@@ -27,10 +27,9 @@ lattice points (2,0,0)/(0,2,0)/(0,0,2) of every face containing them),
 and the handful of path-ambiguous pentagon entries by a decode-roundtrip
 probe (decode never consults the rotation table, so it anchors encode).
 
-Replaces ``hexcell`` (the earlier non-interoperable packing) as the
-engine's cell index: same call surface (``h3_index``/``h3_kring``/
-``h3_center``/``h3_parent``/``face_boundary_margin_m``), so
-``operators/cells.py`` / ``operators/spatial_join.py`` drop it in.
+The engine's cell index: ``operators/cells.py`` and
+``operators/spatial_join.py`` call it by the libh3 names
+(``latlng_to_cells_multi``, ``latlng_to_cell``, ``grid_disk``).
 Not present in the reference repo (no spatial index; linear per-feature
 loop at ``geojson/GeoJsonConverter.java:185-196``); required by the
 north rule ("H3 (res 7-12)").
@@ -1233,31 +1232,6 @@ def grid_disk(cell: np.ndarray, k: int) -> np.ndarray:
     out = latlng_to_cell(np.degrees(lat), np.degrees(lng), res).reshape(n, m)
     out[:, 0] = cell  # exact by construction
     return out
-
-
-# ---------------------------------------------------------------------------
-# hexcell-compatible surface (drop-in for operators/cells, spatial_join)
-# ---------------------------------------------------------------------------
-
-
-def h3_index(lat_deg, lng_deg, res: int) -> np.ndarray:
-    return latlng_to_cell(lat_deg, lng_deg, res)
-
-
-def h3_center(cell):
-    return cell_to_latlng(cell)
-
-
-def h3_parent(cell, parent_res: int) -> np.ndarray:
-    return cell_to_parent(cell, parent_res)
-
-
-def h3_kring(cell, k: int) -> np.ndarray:
-    return grid_disk(cell, k)
-
-
-def h3_resolution(cell) -> np.ndarray:
-    return get_resolution(cell)
 
 
 def h3_edge_length_m(res: int) -> float:

@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gjspark.functions import codecs as C
-from gjspark.operators.multimodal import _decode_one
 
 _log = logging.getLogger(__name__)
 
@@ -131,8 +130,8 @@ def decoded_features(
                 zip(pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"])
             ):
                 try:
-                    img = _decode_one(bytes(b), f)
-                except (NotImplementedError, ValueError):
+                    img = C.decode_image(b, f)
+                except C.CodecError:
                     continue
                 imgs[k] = img
                 crc[k] = zlib.crc32(img.tobytes()) & 0x7FFFFFFF
@@ -250,10 +249,8 @@ def rollup_from_features(feat: DataFrame) -> DataFrame:
     max_tile_mean) over the ``decode_ok`` rows. Every column is a
     commutative monoid, so the only shuffle carries tiny partial-aggregated
     stat rows and hot cells cannot skew it. ``phash_xor`` is an
-    order-independent per-cell checksum of the stored phashes."""
-    xor_agg = F.expr(
-        "aggregate(collect_list(phash_stored), cast(0 as bigint), (a, x) -> a ^ x)"
-    )
+    order-independent per-cell checksum of the stored phashes (null when
+    every one is null, as SQL ``bit_xor`` is)."""
     return (
         feat.filter(F.col("decode_ok"))
         .groupBy("cell")
@@ -261,7 +258,7 @@ def rollup_from_features(feat: DataFrame) -> DataFrame:
             F.countDistinct("image_id").alias("n_images"),
             F.sum("n_tiles_img").alias("n_tiles"),
             (F.sum("luma_wsum") / F.sum("px")).alias("mean_tile_luma"),
-            xor_agg.alias("phash_xor"),
+            F.bit_xor("phash_stored").alias("phash_xor"),
             F.min("min_tm").alias("min_tile_mean"),
             F.max("max_tm").alias("max_tile_mean"),
         )

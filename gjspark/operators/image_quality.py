@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gjspark.functions import codecs as C
 from gjspark.functions.quality import quality_metrics
-from gjspark.operators.multimodal import _decode_one
 
 QUALITY_SCHEMA = T.StructType(
     [
@@ -55,8 +55,8 @@ def image_quality(images: DataFrame) -> DataFrame:
             vals = np.full((n, 4), np.nan)
             for k, (blob, fmt) in enumerate(zip(pdf["bytes"], pdf["fmt"])):
                 try:
-                    img = _decode_one(bytes(blob), fmt)
-                except (NotImplementedError, ValueError):
+                    img = C.decode_image(blob, fmt)
+                except C.CodecError:
                     continue
                 ok[k] = True
                 vals[k] = quality_metrics(img)

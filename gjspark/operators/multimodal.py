@@ -1,13 +1,12 @@
-"""Multimodal operators: the image decode shared by the fused decode pass
-and the quality filter, video frame sampling and audio features.
+"""Multimodal operators: video frame sampling and audio features.
 
 Media are opaque ``binary`` columns with typed metadata (input_hint
-schema). All pixel and sample work happens in ``mapInPandas`` over Arrow
-batches with the pure-numpy codecs from ``gjspark.functions`` — never
-per-row Python in a driver loop. Formats with no from-spec implementation
-here (``STUB_FORMATS``, lossy video and audio codecs) raise
-``NotImplementedError`` while the Spark-side plumbing (schema, batching,
-partitioning) stays fully real and tested.
+schema). All sample work happens in ``mapInPandas`` over Arrow batches
+with the pure-numpy codecs from ``gjspark.functions`` — never per-row
+Python in a driver loop. Formats with no from-spec implementation here
+(lossy video and audio codecs) raise ``NotImplementedError`` while the
+Spark-side plumbing (schema, batching, partitioning) stays fully real and
+tested.
 """
 
 from __future__ import annotations
@@ -18,23 +17,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-from gjspark.functions import codecs as C
-
-# jpeg/jpg (gjspark/functions/jpeg.py, pure-numpy baseline T.81) and
-# webp-lossless (gjspark/functions/webp.py, from the public VP8L spec)
-# are REAL now; only formats with no from-spec implementation remain
-# honest environment stubs
-STUB_FORMATS = {"avif", "mp4", "webm"}
-
-
-def _decode_one(data: bytes, fmt: str) -> np.ndarray:
-    if fmt in STUB_FORMATS:
-        # real codec libs are not in this container; the Spark plumbing
-        # (schema/batching) is identical — swap the codec in production
-        raise NotImplementedError(f"codec '{fmt}' requires external library")
-    return C.decode_image(data, fmt)
-
 
 # ---------------------------------------------------------------------------
 # Video frame sampling (training-data pipeline requirement): videos are
@@ -62,23 +44,17 @@ FRAMES_SCHEMA = T.StructType(
     ]
 )
 
-VIDEO_STUB_FORMATS: set[str] = set()
-
-
 def _decode_video(data: bytes, fmt: str):
     """-> (w, h, n_frames, frame_getter). 'rawvid' is the deterministic
     test codec. ``mp4`` demuxes through the real ISO-BMFF container
     layer (`gjspark/functions/bmff.py`, from the public ISO/IEC
     14496-12 spec): sample tables are fully parsed and ``rawv``-entry
     samples (one raw RGB frame each) decode end-to-end; lossy codec
-    payloads (avc1/av01/...) still raise NotImplementedError — the
-    same container-real / codec-stubbed posture as the image formats.
+    payloads (avc1/av01/...) still raise NotImplementedError.
     ``gif`` is fully real: animated GIF89a decodes through
     `gjspark/functions/gif.py` (LZW + disposal compositing), each
-    composited canvas being one frame. Other container formats raise
-    like the image stubs."""
-    if fmt in VIDEO_STUB_FORMATS:
-        raise NotImplementedError(f"video codec '{fmt}' requires external library")
+    composited canvas being one frame. Other formats raise
+    ``ValueError``."""
     if fmt == "gif":
         from gjspark.functions.gif import decode_gif_frames
 

@@ -108,10 +108,12 @@ def _cover_cells_for_wkb(wkb: bytes) -> np.ndarray:
         xs = np.arange(xmin - pad, xmax + pad + step_lon, step_lon)
         ys = np.arange(ymin - pad, ymax + pad + step_deg, step_deg)
         gx, gy = np.meshgrid(xs, ys)
-        cells.append(np.unique(h3x.h3_index(gy.ravel(), gx.ravel(), PIP_BUCKET_RES)))
+        cells.append(
+            np.unique(h3x.latlng_to_cell(gy.ravel(), gx.ravel(), PIP_BUCKET_RES))
+        )
         for ring in rings:  # ring vertices too (degenerate slivers)
             cells.append(
-                np.unique(h3x.h3_index(ring[:, 1], ring[:, 0], PIP_BUCKET_RES))
+                np.unique(h3x.latlng_to_cell(ring[:, 1], ring[:, 0], PIP_BUCKET_RES))
             )
     return np.unique(np.concatenate(cells))
 
@@ -334,7 +336,7 @@ def knn_join(images: DataFrame, locations: DataFrame) -> DataFrame:
     res = _choose_knn_res(loc_lat, loc_lon)
     inradius_m = 0.866 * h3x.h3_edge_length_m(res)
 
-    loc_cells = h3x.h3_index(loc_lat, loc_lon, res)
+    loc_cells = h3x.latlng_to_cell(loc_lat, loc_lon, res)
     cell_index: dict[int, np.ndarray] = {}
     for i, c in enumerate(loc_cells):
         cell_index.setdefault(int(c), []).append(i)
@@ -368,13 +370,13 @@ def knn_join(images: DataFrame, locations: DataFrame) -> DataFrame:
                 continue
             qla = pdf["lat"].to_numpy(dtype=float)
             qlo = pdf["lon"].to_numpy(dtype=float)
-            cells = h3x.h3_index(qla, qlo, res_b)
+            cells = h3x.latlng_to_cell(qla, qlo, res_b)
             margin = h3x.face_boundary_margin_m(qla, qlo)
             best_d = np.full(n, np.inf)
             best_i = np.full(n, -1, dtype=np.int64)
             resolved = np.zeros(n, dtype=bool)
             uniq, inv = np.unique(cells, return_inverse=True)
-            rings = {k: h3x.h3_kring(uniq, k) for k in KNN_K_SCHEDULE}
+            rings = {k: h3x.grid_disk(uniq, k) for k in KNN_K_SCHEDULE}
             for g, cell in enumerate(uniq):
                 rows = np.nonzero(inv == g)[0]
                 seen_cand = 0

@@ -118,7 +118,7 @@ def checkpointed_write(
     out_dir: str,
     job_id: str,
     id_col: str,
-    n_parts: int | None = 64,
+    n_parts: int = 64,
     cell_col: str | None = None,
     source_col: str | None = None,
     resume: bool = True,
@@ -131,8 +131,7 @@ def checkpointed_write(
 
     Memory-bounded by construction: each task streams Arrow batches into
     per-partition ``pyarrow.ParquetWriter``s — it never holds a logical
-    partition in memory. ``n_parts=None`` derives the count from the
-    input's scan parallelism (resume granularity tracks data volume).
+    partition in memory.
 
     ``commit`` selects the part-file commit protocol:
 
@@ -150,8 +149,6 @@ def checkpointed_write(
         raise ValueError("commit must be 'rename' or 'unique-name'")
     os.makedirs(out_dir, exist_ok=True)
     done = completed_parts(out_dir) if resume else set()
-    if n_parts is None:
-        n_parts = max(8, df.rdd.getNumPartitions())
 
     work = df.withColumn(
         "__part", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_parts)).cast("int")
@@ -165,7 +162,7 @@ def checkpointed_write(
 
     # one task per logical partition (a task may receive several parts if
     # hash-colliding; the writer keeps one open ParquetWriter per part)
-    work = work.repartition(int(n_parts), F.col("__part"))
+    work = work.repartition(n_parts, F.col("__part"))
 
     def write_stream(batches):
         writers: dict[int, dict] = {}

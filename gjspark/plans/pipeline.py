@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 
 from gjspark.functions import geometry as G
 from gjspark.operators.cells import with_cell_columns
-from gjspark.operators.entities import CreatorConfig, create_entities, nuts_config
+from gjspark.operators.entities import create_entities, nuts_config
 from gjspark.operators.fused import decoded_features, rollup_from_features
 from gjspark.operators.spatial_join import knn_join, pip_join
 from gjspark.operators.upsert import find_or_create
@@ -71,17 +71,14 @@ def build_pipeline(
     spark: SparkSession,
     images_path: str,
     features_path: str,
-    location_config: CreatorConfig | None = None,
-    snapshot: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """Construct every output DataFrame lazily; nothing executes here."""
     features = read_feature_collection(spark, features_path)
     images = with_cell_columns(read_images(spark, images_path))
 
-    cfg = location_config or nuts_config()[0]
-    locations_entities = create_entities(features, cfg)
+    locations_entities = create_entities(features, nuts_config()[0])
     upserted = find_or_create(
-        locations_entities, snapshot, "Location", check_ambiguous=False
+        locations_entities, None, "Location", check_ambiguous=False
     )
 
     loc_points = feature_locations(features)

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import logging
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -100,6 +101,29 @@ def broadcast_threshold(spark: SparkSession) -> int:
     )
 
 
+@contextmanager
+def broadcast_threshold_override(spark: SparkSession, value: str | None):
+    """Run the block with ``spark.sql.autoBroadcastJoinThreshold`` set to
+    ``value`` (None: unchanged), then restore the old setting. "-1" turns
+    broadcasts off, which sends ``pip_join`` down its bucketed path and
+    ``connected_components`` down its star rounds."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 24g: a heap larger than the
+    host lets garbage grow until the machine, not the JVM, runs out."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2, 24 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "gjspark",
     master: str | None = None,
@@ -108,7 +132,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 in this sandbox).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 if unset).
+    ``spark.driver.memory`` is ``$GJSPARK_DRIVER_MEM`` if set, else half
+    of physical memory up to 24g.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -126,7 +152,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("GJSPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("GJSPARK_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -26,8 +26,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
+from gjspark.functions import h3 as h3f
 from gjspark.operators.cells import with_cell_columns
 
 # input_hint schema (+ the lat/lon columns every fixture/test table has)
@@ -46,16 +49,8 @@ IMAGES_SCHEMA = T.StructType(
 )
 
 
-def read_image_stream(
-    spark: SparkSession,
-    src_dir: str,
-    schema: T.StructType = IMAGES_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(src_dir)
+def read_image_stream(spark: SparkSession, src_dir: str) -> DataFrame:
+    return spark.readStream.schema(IMAGES_SCHEMA).parquet(src_dir)
 
 
 def ingest_images(
@@ -63,40 +58,28 @@ def ingest_images(
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    partition_res: int = 5,
-    available_now: bool = True,
 ):
-    """Start the ingest query; returns the StreamingQuery.
+    """Start the ingest query with an ``availableNow`` trigger; returns
+    the StreamingQuery.
 
-    ``partition_res`` picks the coarse-cell directory key (res 5 ~= a
-    couple hundred km — coarse enough that directory counts stay sane at
-    planet scale, fine enough that regional scans prune hard).
+    Output directories are keyed by the res-5 cell ``h3_r5`` (a couple
+    hundred km — coarse enough that directory counts stay sane at planet
+    scale, fine enough that regional scans prune hard). It is derived
+    from ``h3_r7`` by pure bit truncation, with no second kernel pass.
     """
+
+    @pandas_udf(T.LongType())
+    def _parent(cell: pd.Series) -> pd.Series:
+        return pd.Series(h3f.cell_to_parent(cell.to_numpy(dtype=np.int64), 5))
+
     enriched = with_cell_columns(read_image_stream(spark, src_dir))
-    from gjspark.functions import h3 as h3f  # noqa: F401  (kernel warm)
-    from pyspark.sql import functions as F
-
-    part_col = f"h3_r{partition_res}"
-    if part_col not in enriched.columns:
-        # derive the coarse partition cell from the finest assigned column
-        # by pure bit truncation (no second kernel pass)
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf(T.LongType())
-        def _parent(cell: pd.Series) -> pd.Series:
-            return pd.Series(
-                h3f.cell_to_parent(cell.to_numpy(dtype=np.int64), partition_res)
-            )
-
-        enriched = enriched.withColumn(part_col, _parent(F.col("h3_r7")))
-
-    writer = (
+    enriched = enriched.withColumn("h3_r5", _parent(F.col("h3_r7")))
+    return (
         enriched.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .partitionBy(part_col)
+        .partitionBy("h3_r5")
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

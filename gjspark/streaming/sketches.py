@@ -31,7 +31,6 @@ def stream_bloom_filter(
     stream: DataFrame,
     bits: DataFrame,
     value_col: str,
-    id_col: str,
     m_bits: int = 1 << 20,
     k: int = 3,
     salt: str = "bloom",
@@ -49,14 +48,10 @@ def stream_bloom_filter(
     state (dropDuplicates state grows with distinct keys seen; this is
     map-side broadcast probing forever). False positives drop
     ~(1-e^(-kn/m))^k of genuinely-new rows — the usual Bloom trade,
-    acceptable for crawl dedup, not for exactly-once accounting.
-
-    ``id_col`` is unused in the stateless formulation (kept for
-    signature parity with the batch probe)."""
+    acceptable for crawl dedup, not for exactly-once accounting."""
     from gjspark.operators.sketches import _bloom_pos_cols, _check_bloom_params
 
     _check_bloom_params(m_bits, k)
-    del id_col  # stateless: no per-id re-aggregation needed
     bits_d = bits.select("pos").distinct()
     cols = list(stream.columns)
     out = stream

@@ -2,7 +2,6 @@ from __future__ import annotations
 
 import os
 import sys
-from contextlib import contextmanager
 
 import pytest
 
@@ -24,19 +23,3 @@ def fixtures_dir():
     from gjspark.fixtures.generator import ensure_fixtures
 
     return ensure_fixtures()
-
-
-@contextmanager
-def broadcast_threshold(spark, value: str | None):
-    """Run the block with spark.sql.autoBroadcastJoinThreshold set to
-    ``value`` (None: unchanged), then restore the old setting. "-1" turns
-    broadcasts off, which sends ``pip_join`` down its bucketed path and
-    ``connected_components`` down its star rounds."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    if value is not None:
-        spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)

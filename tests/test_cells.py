@@ -80,9 +80,9 @@ class TestS2:
 class TestH3X:
     def test_center_roundtrip(self):
         for res in (7, 9, 12):
-            c = h3x.h3_index(LAT, LNG, res)
-            clat, clng = h3x.h3_center(c)
-            assert (h3x.h3_index(clat, clng, res) == c).all()
+            c = h3x.latlng_to_cell(LAT, LNG, res)
+            clat, clng = h3x.cell_to_latlng(c)
+            assert (h3x.latlng_to_cell(clat, clng, res) == c).all()
 
     def test_hierarchy_mostly_nested(self):
         # aperture-7 hierarchies are not perfectly nested: each outer
@@ -91,39 +91,39 @@ class TestH3X:
         # wobble band where truncation-ancestor != direct coarse encode.
         # The exact invariant (child CENTER is inside the parent) is
         # tested in test_h3_canonical.py.
-        c12 = h3x.h3_index(LAT, LNG, 12)
-        c7 = h3x.h3_index(LAT, LNG, 7)
-        agree = (h3x.h3_parent(c12, 7) == c7).mean()
+        c12 = h3x.latlng_to_cell(LAT, LNG, 12)
+        c7 = h3x.latlng_to_cell(LAT, LNG, 7)
+        agree = (h3x.cell_to_parent(c12, 7) == c7).mean()
         assert agree > 0.85
 
     def test_kring_sizes(self):
-        c = h3x.h3_index(LAT[:50], LNG[:50], 8)
+        c = h3x.latlng_to_cell(LAT[:50], LNG[:50], 8)
         for k in (1, 2, 3):
-            kr = h3x.h3_kring(c, k)
+            kr = h3x.grid_disk(c, k)
             assert kr.shape == (50, 1 + 3 * k * (k + 1))
             assert (kr[:, 0] == c).all()
             # all distinct per row
             assert all(len(np.unique(row)) == kr.shape[1] for row in kr)
 
     def test_neighbor_symmetry(self):
-        c = h3x.h3_index(LAT[:100], LNG[:100], 7)
-        kr = h3x.h3_kring(c, 1)
+        c = h3x.latlng_to_cell(LAT[:100], LNG[:100], 7)
+        kr = h3x.grid_disk(c, 1)
         for row in range(100):
             for nb in kr[row, 1:]:
-                assert c[row] in h3x.h3_kring(np.array([nb]), 1)[0]
+                assert c[row] in h3x.grid_disk(np.array([nb]), 1)[0]
 
     def test_resolution_recovery(self):
         for res in (7, 10, 12):
-            assert (h3x.h3_resolution(h3x.h3_index(LAT, LNG, res)) == res).all()
+            assert (h3x.get_resolution(h3x.latlng_to_cell(LAT, LNG, res)) == res).all()
 
     def test_res_monotone_cell_size(self):
         prev = None
         for res in range(7, 13):
-            n = len(np.unique(h3x.h3_index(LAT, LNG, res)))
+            n = len(np.unique(h3x.latlng_to_cell(LAT, LNG, res)))
             if prev is not None:
                 assert n >= prev
             prev = n
 
     def test_out_of_range_res(self):
         with pytest.raises(ValueError):
-            h3x.h3_index(LAT[:1], LNG[:1], 16)
+            h3x.latlng_to_cell(LAT[:1], LNG[:1], 16)

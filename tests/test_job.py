@@ -31,6 +31,34 @@ def test_text_source(spark, tmp_path):
         read_text_source(spark, "https://example.com/x")
 
 
+def test_job_dry_run_prints_schemas_and_writes_nothing(
+    spark, fixtures_dir, tmp_path, capsys
+):
+    """--dry-run builds every pipeline output, prints one schema line per
+    output and writes nothing."""
+    from gjspark.plans.job import main
+
+    out = tmp_path / "out"
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)  # main's get_spark resets it on this session
+    try:
+        rc = main([
+            "--images", f"{fixtures_dir}/images_sf_unit.parquet",
+            "--features", f"{fixtures_dir}/features_nuts.geojson",
+            "--out", str(out),
+            "--master", "local[4]",
+            "--dry-run",
+        ])
+    finally:
+        spark.conf.set(key, old)
+    assert rc == 0
+    lines = [ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("== ")]
+    names = [ln[3:].split(": ", 1)[0] for ln in lines]
+    assert names == ["features", "images", "slim", "locations", "pip", "knn", "rollup"]
+    assert all(ln.split(": ", 1)[1].startswith("struct<") for ln in lines), lines
+    assert not out.exists()
+
+
 @pytest.mark.slow
 def test_job_cli_end_to_end(fixtures_dir, tmp_path):
     out = str(tmp_path / "out")
@@ -93,7 +121,7 @@ def test_pipeline_rollup_skips_stub_format_rows(spark, fixtures_dir, tmp_path):
     )
     roll = read_checkpointed(spark, str(tmp_path / "out" / "rollup")).toPandas()
     # the stub row shares its cell with unit row 0, whose count must not grow
-    cells = h3x.h3_index(unit["lat"].to_numpy(), unit["lon"].to_numpy(), 7)
+    cells = h3x.latlng_to_cell(unit["lat"].to_numpy(), unit["lon"].to_numpy(), 7)
     exp = pd.Series(cells).value_counts()
     got = roll.set_index("cell")["n_images"]
     assert dict(zip(got.index.astype(np.int64), got.astype(np.int64))) == dict(

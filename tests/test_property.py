@@ -104,9 +104,9 @@ class TestCellProperties:
     )
     @settings(**SETTINGS)
     def test_center_roundtrip(self, lat, lng, res):
-        c = h3x.h3_index(np.array([lat]), np.array([lng]), res)
-        clat, clng = h3x.h3_center(c)
-        assert h3x.h3_index(clat, clng, res)[0] == c[0]
+        c = h3x.latlng_to_cell(np.array([lat]), np.array([lng]), res)
+        clat, clng = h3x.cell_to_latlng(c)
+        assert h3x.latlng_to_cell(clat, clng, res)[0] == c[0]
 
     @given(
         st.floats(-84, 84, allow_nan=False),
@@ -115,8 +115,8 @@ class TestCellProperties:
     )
     @settings(**SETTINGS)
     def test_kring_size(self, lat, lng, k):
-        c = h3x.h3_index(np.array([lat]), np.array([lng]), 7)
-        kr = h3x.h3_kring(c, k)
+        c = h3x.latlng_to_cell(np.array([lat]), np.array([lng]), 7)
+        kr = h3x.grid_disk(c, k)
         assert kr.shape[1] == 1 + 3 * k * (k + 1)
         assert len(np.unique(kr[0])) == kr.shape[1]
 

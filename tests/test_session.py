@@ -196,3 +196,17 @@ def test_local_python_workers_run_under_gjspark_daemon(spark):
         assert ".zip" not in r["pyspark_file"], r["pyspark_file"]
         assert r["daemon_arrow"]
         assert r["daemon_threads"] == 1
+
+
+def test_driver_heap_fits_physical_memory(spark):
+    """Without ``GJSPARK_DRIVER_MEM`` the driver heap defaults to half of
+    physical memory, capped at 24g; the test session's heap is no more
+    than physical memory."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    default = to_bytes(session._default_driver_memory())
+    assert default <= min(phys // 2, 24 << 30)
+    heap = spark.sparkContext.getConf().get("spark.driver.memory")
+    if "GJSPARK_DRIVER_MEM" not in os.environ:
+        assert to_bytes(heap) == default
+    assert to_bytes(heap) <= phys

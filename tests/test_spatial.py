@@ -7,7 +7,6 @@ import zlib
 import numpy as np
 import pandas as pd
 import pytest
-from conftest import broadcast_threshold
 from pyspark.sql import functions as F
 
 from gjspark.fixtures import generator as gen
@@ -15,6 +14,7 @@ from gjspark.functions import codecs as C
 from gjspark.operators.cells import with_cell_columns
 from gjspark.operators.fused import decoded_features, rollup_from_features
 from gjspark.operators.spatial_join import knn_join, pip_join
+from gjspark.session import broadcast_threshold_override
 from gjspark.sources.geojson import read_feature_collection
 
 
@@ -78,7 +78,7 @@ def test_cell_assignment_matches_golden(images, fixtures_dir):
 
 @pytest.mark.parametrize("broadcast", [True, False])
 def test_pip_join_matches_golden(spark, images, features, fixtures_dir, broadcast):
-    with broadcast_threshold(spark, None if broadcast else "-1"):
+    with broadcast_threshold_override(spark, None if broadcast else "-1"):
         got = pip_join(images, features).toPandas()
     exp = pd.read_parquet(f"{fixtures_dir}/expected_pip.parquet")
     got_set = set(zip(got["image_id"], got["feature_id"]))
@@ -110,7 +110,7 @@ def test_pip_bucketed_plan_evaluates_cells_once(spark, features, fixtures_dir):
     imgs = with_cell_columns(
         spark.read.parquet(f"{fixtures_dir}/images_sf_e2e.parquet")
     )
-    with broadcast_threshold(spark, "-1"):
+    with broadcast_threshold_override(spark, "-1"):
         plan = _plan(pip_join(imgs, features))
     assert "Join" in plan, plan
     assert plan.count("ArrowEvalPython") == 1, plan
@@ -121,7 +121,7 @@ def test_pip_over_broadcast_threshold_takes_bucketed_path(
 ):
     """Geometry bytes past autoBroadcastJoinThreshold: the collect stops,
     the bucketed plan runs, the pairs still equal the golden."""
-    with broadcast_threshold(spark, "100"):
+    with broadcast_threshold_override(spark, "100"):
         with caplog.at_level("INFO", logger="gjspark.operators.spatial_join"):
             df = pip_join(images, features)
         got = _pairs(df)
@@ -202,7 +202,7 @@ def test_pip_edge_cases_both_paths_match_oracle(spark, tmp_path):
             ("shared_edge", "east"),
         }
         for threshold in (None, "-1"):  # broadcast path, then bucketed
-            with broadcast_threshold(spark, threshold):
+            with broadcast_threshold_override(spark, threshold):
                 assert _pairs(pip_join(images, features)) == oracle
     finally:
         features.unpersist()
@@ -263,6 +263,21 @@ def test_rollup_totals(images, decoded):
     roll = rollup_from_features(decoded).toPandas()
     assert int(roll["n_images"].sum()) == images.count()
     assert (roll["n_tiles"] >= roll["n_images"]).all()
+
+
+def test_rollup_xor_is_one_hash_aggregate(decoded):
+    """``phash_xor`` is the built-in ``bit_xor``, which partial-aggregates
+    in a HashAggregate; a ``collect_list`` fold would plan an
+    ObjectHashAggregate and buffer every cell's phash list. The values
+    equal a per-cell numpy XOR of the stored phashes."""
+    roll = rollup_from_features(decoded)
+    plan = _plan(roll).split("InMemoryRelation")[0]
+    assert "HashAggregate" in plan, plan
+    assert "ObjectHashAggregate" not in plan, plan
+    ok = decoded.filter(F.col("decode_ok")).select("cell", "phash_stored").toPandas()
+    want = ok.groupby("cell")["phash_stored"].agg(np.bitwise_xor.reduce)
+    got = roll.toPandas().set_index("cell")["phash_xor"]
+    assert got.sort_index().tolist() == want.sort_index().tolist()
 
 
 def test_tiling_counts_match_pixel_math(images, decoded):

@@ -251,7 +251,7 @@ def _run_bloom_gate(spark, tmp_path):
     src = spark.readStream.schema("doc_id string, text string").parquet(p)
 
     q = (
-        stream_bloom_filter(src, bits, "text", "doc_id", m_bits=4096, k=3)
+        stream_bloom_filter(src, bits, "text", m_bits=4096, k=3)
         .writeStream.format("memory")
         .queryName("bloom_gate")
         .outputMode("append")
@@ -288,13 +288,10 @@ def test_stream_bloom_filter_gate(spark, tmp_path):
 def test_stream_bloom_filter_respects_broadcast_threshold(spark, tmp_path):
     """With broadcasts off the gate forces no broadcast of the position
     table, and its output is unchanged."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
+    from gjspark.session import broadcast_threshold_override
+
+    with broadcast_threshold_override(spark, "-1"):
         got, expect, plan = _run_bloom_gate(spark, tmp_path)
-    finally:
-        spark.conf.set(key, old)
     assert "BroadcastExchange" not in plan, plan
     assert all(not t.startswith("old") for t in got.values())
     assert set(got) == expect

@@ -5,7 +5,6 @@ import uuid
 
 import numpy as np
 import pytest
-from conftest import broadcast_threshold
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -24,6 +23,7 @@ from gjspark.operators.text import (
     text_stats,
     winnow_fingerprints,
 )
+from gjspark.session import broadcast_threshold_override
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -146,7 +146,7 @@ class _ConnectedComponentsCases:
 
     @pytest.fixture(autouse=True)
     def _path(self, spark):
-        with broadcast_threshold(spark, self.threshold):
+        with broadcast_threshold_override(spark, self.threshold):
             yield
 
     @staticmethod
@@ -265,7 +265,7 @@ class TestConnectedComponents(_ConnectedComponentsCases):
         df = spark.createDataFrame(
             [(i, i + 1) for i in range(64)], "id_a long, id_b long"
         )
-        with broadcast_threshold(spark, "-1"):
+        with broadcast_threshold_override(spark, "-1"):
             out = {
                 r["id"]: r["component"]
                 for r in connected_components(df, max_iter=12).collect()
@@ -305,7 +305,7 @@ def test_dedup_clusters_job_floor(spark):
         E.queries()["q_dedup_clusters"](spark, "/root/testdata/sf0.01").collect()
 
     assert _count_jobs(spark, run) <= 9
-    with broadcast_threshold(spark, "-1"):
+    with broadcast_threshold_override(spark, "-1"):
         assert _count_jobs(spark, run) > 9
 
 

@@ -32,20 +32,8 @@ import os
 import statistics
 import sys
 import time
-from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-@contextmanager
-def _threshold(spark, value: str):
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def synth_pairs(spark, n: int, cluster: int, ids: str, seed: int):
@@ -81,7 +69,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from gjspark.operators.dedup import dedup_clusters
-    from gjspark.session import get_spark
+    from gjspark.session import broadcast_threshold_override, get_spark
 
     spark = get_spark("cc_crossover", master=args.master)
     paths = {"local": str(2**62), "star": "-1"}
@@ -96,7 +84,7 @@ def main() -> None:
         )
         sigs = {}
         for path, threshold in paths.items():
-            with _threshold(spark, threshold):
+            with broadcast_threshold_override(spark, threshold):
                 sigs[path] = tuple(dedup_clusters(pairs).agg(
                     F.count("*"),
                     F.expr("bit_xor(xxhash64(id, cluster_id, cluster_size))"),
@@ -104,7 +92,7 @@ def main() -> None:
         walls = {p: [] for p in paths}
         for _ in range(args.reps):  # alternate the paths
             for path, threshold in paths.items():
-                with _threshold(spark, threshold):
+                with broadcast_threshold_override(spark, threshold):
                     t0 = time.perf_counter()
                     dedup_clusters(pairs).write.format(
                         "noop"

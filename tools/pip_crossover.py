@@ -26,7 +26,6 @@ import os
 import statistics
 import sys
 import time
-from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -34,21 +33,6 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BOX = (-10.0, 35.0, 30.0, 60.0)  # lon_min, lat_min, lon_max, lat_max
-
-
-@contextmanager
-def _path(spark, broadcast: bool):
-    """Run the block on ``pip_join``'s broadcast path (threshold
-    unchanged) or its bucketed path (threshold -1), then restore the
-    threshold."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    if not broadcast:
-        spark.conf.set(key, "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def synth_features(n: int, verts: int, radius: float, seed: int) -> pd.DataFrame:
@@ -83,7 +67,7 @@ def synth_images(n: int, seed: int) -> pd.DataFrame:
             "image_id": [f"i{i:08d}" for i in range(n)],
             "lat": lat,
             "lon": lon,
-            "h3_r7": h3x.h3_index(lat, lon, 7),
+            "h3_r7": h3x.latlng_to_cell(lat, lon, 7),
         }
     )
 
@@ -99,7 +83,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from gjspark.operators.spatial_join import pip_join
-    from gjspark.session import get_spark
+    from gjspark.session import broadcast_threshold_override, get_spark
 
     spark = get_spark("pip_crossover", master=args.master)
     images = spark.createDataFrame(synth_images(args.points, seed=1)).cache()
@@ -111,7 +95,7 @@ def main() -> None:
         feats.count()
         pairs = {}
         for broadcast in (True, False):
-            with _path(spark, broadcast):
+            with broadcast_threshold_override(spark, None if broadcast else "-1"):
                 pairs[broadcast] = set(
                     map(tuple, pip_join(images, feats)
                         .toPandas()[["image_id", "feature_id"]].to_numpy())
@@ -120,7 +104,7 @@ def main() -> None:
         walls = {True: [], False: []}
         for _ in range(args.reps):  # alternate the paths
             for broadcast in (True, False):
-                with _path(spark, broadcast):
+                with broadcast_threshold_override(spark, None if broadcast else "-1"):
                     t0 = time.perf_counter()
                     pip_join(images, feats).write.format(
                         "noop"

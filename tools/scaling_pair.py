@@ -77,20 +77,14 @@ def main() -> None:
     series: list[dict] = []
     from pyspark import StorageLevel
 
-    # Blob-bearing frame cache level, mirroring run_bench: DISK_ONLY by
-    # default (the A/B this tool ran measured heap-resident blobs as the
-    # residual per-row decode-growth driver — CPU ratio 1.39 heap / 1.31
-    # disk, disk also best absolute at both sizes); flip with
-    # SPARK_GRAFT_BLOB_CACHE=memory to reproduce the heap variant.
-    blob_level = (
-        StorageLevel.MEMORY_AND_DISK
-        if os.environ.get("SPARK_GRAFT_BLOB_CACHE") == "memory"
-        else StorageLevel.DISK_ONLY
-    )
+    # Blob-bearing frames cache DISK_ONLY, mirroring run_bench (the A/B
+    # this tool ran measured heap-resident blobs as the residual per-row
+    # decode-growth driver — CPU ratio 1.39 heap / 1.31 disk, disk also
+    # best absolute at both sizes).
     for rep in range(args.reps):
         for n in sizes:
             d = _spatial_dfs(spark, paths[n])
-            images = d["images"].persist(blob_level)
+            images = d["images"].persist(StorageLevel.DISK_ONLY)
             images.count()
             t: dict[str, float] = {}
             c: dict[str, float] = {}
