@@ -592,8 +592,13 @@ def q_image_dedup_clusters(spark, sf_dir):
     feats = decoded_features(imgs).filter(
         F.col("decode_ok") & F.col("fmt").isin(sorted(C.LOSSLESS))
     )
-    classes = feats.groupBy(F.col("phash_decoded").alias("phash")).agg(
-        F.min("image_id").alias("rep_id"), F.count("*").alias("class_size")
+    # materialized once: connected_components runs its actions on the
+    # pairs while the query is built, and the final join reads the
+    # classes again, so an unmaterialized frame decodes the corpus twice
+    classes = (
+        feats.groupBy(F.col("phash_decoded").alias("phash"))
+        .agg(F.min("image_id").alias("rep_id"), F.count("*").alias("class_size"))
+        .localCheckpoint()
     )
     pairs = phash_neardup_pairs(classes, phash_col="phash", id_col="rep_id")
     comp = connected_components(pairs)

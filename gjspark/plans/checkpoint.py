@@ -9,21 +9,22 @@ Not a Spark built-in at this granularity (SURVEY.md §4.5). Design:
   mapping is a pure function of the data — identical across runs and
   cluster sizes;
 - rows are ``repartition(__part)``-ed so each logical partition lands in
-  exactly one task, then ``mapInPandas`` STREAMS Arrow batches into a
-  ``pyarrow.ParquetWriter`` per partition — memory per task is bounded
-  by the Arrow batch size (spark.sql.execution.arrow.maxRecordsPerBatch),
-  never by the logical partition's total size, so a terabyte partition
-  writes in constant memory;
-- each data file commits atomically (temp name + rename) and emits one
-  manifest row ``(job_id, part_id, row_count, bytes_out, cell_min,
-  cell_max, source_files, wall_ms, status)``;
+  exactly one task, then ``mapInArrow`` STREAMS Spark's own Arrow batches
+  into a ``pyarrow.ParquetWriter`` per partition. No pandas conversion
+  sits in between, so every column keeps the type Spark gave it (a
+  nullable ``bigint`` stays 64-bit, a timestamp stays microseconds), and
+  memory per task is bounded by the Arrow batch size
+  (spark.sql.execution.arrow.maxRecordsPerBatch), never by the logical
+  partition's total size;
+- one commit protocol: each data file is written under a temp name and
+  committed by an atomic ``os.replace`` to ``part=N.parquet``, emitting
+  one manifest row ``(job_id, part_id, row_count, bytes_out, cell_min,
+  cell_max, source_files, wall_ms, status, file)``;
 - the manifest itself is committed last (parquet + ``_SUCCESS.json``).
-  This write-then-manifest protocol is what makes the scheme object-store
-  safe: on S3/GCS (no atomic rename) the writer targets a unique object
-  name per attempt and the manifest — the single last commit — is the
-  only source of truth; readers and resume logic trust manifest entries,
-  never directory listings, so orphaned files from failed attempts are
-  invisible;
+  Readers and resume logic trust manifest entries, never directory
+  listings, so stale temp files and stray part files are invisible. All
+  I/O here is local (``os``); an object-store committer (no atomic
+  rename) would need ``pyarrow.fs`` I/O and is not built;
 - resume = anti-join: completed part_ids (from the manifest) are filtered
   out before the shuffle and the write, and the surviving partitions
   append their manifest rows. The ``__part`` filter applies to ``df``,
@@ -47,10 +48,12 @@ import time
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MANIFEST_SCHEMA = T.StructType(
     [
@@ -66,51 +69,43 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("file", T.StringType()),
     ]
 )
+_MANIFEST_ARROW = to_arrow_schema(MANIFEST_SCHEMA)
 
 
 def manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest.parquet")
 
 
+def _read_manifest(out_dir: str) -> pa.Table:
+    """The committed manifest as an Arrow table (empty if none exists)."""
+    mp = manifest_path(out_dir)
+    if not os.path.exists(mp):
+        return _MANIFEST_ARROW.empty_table()
+    return pq.read_table(mp).cast(_MANIFEST_ARROW)
+
+
+def _ok(m: pa.Table) -> pa.Table:
+    return m.filter(pc.equal(m["status"], "ok"))
+
+
 def read_checkpointed(spark, out_dir: str) -> DataFrame:
     """Read a checkpointed dataset trusting the MANIFEST, not the
-    directory listing — the object-store-safe half of the write-then-
-    manifest protocol: orphaned files from failed unique-name attempts
-    sit in the directory but are never listed in the manifest, so they
-    are invisible here."""
+    directory listing: stale temp files and part files the manifest does
+    not list sit in the directory but are invisible here."""
     mp = manifest_path(out_dir)
     if not os.path.exists(mp):
         raise FileNotFoundError(f"no manifest at {mp}")
-    m = pq.read_table(mp).to_pandas()
-    ok = _with_file_column(m)[m["status"] == "ok"]
-    if not len(ok):
+    ok = _ok(_read_manifest(out_dir))
+    if not ok.num_rows:
         raise ValueError(
             f"manifest at {mp} has no status='ok' partitions — nothing to read"
         )
-    files = [os.path.join(out_dir, f) for f in ok["file"].tolist()]
+    files = [os.path.join(out_dir, f) for f in ok["file"].to_pylist()]
     return spark.read.parquet(*files)
 
 
-def _with_file_column(m: pd.DataFrame) -> pd.DataFrame:
-    """Backfill the 'file' column for manifests written before it existed
-    (or rows carrying null after a mixed-version resume concat): rename-mode
-    part names are deterministic, ``part={part_id}.parquet``."""
-    m = m.copy()
-    fallback = "part=" + m["part_id"].astype(int).astype(str) + ".parquet"
-    if "file" not in m.columns:
-        m["file"] = fallback
-    else:
-        missing = m["file"].isna()
-        m.loc[missing, "file"] = fallback[missing]
-    return m
-
-
 def completed_parts(out_dir: str) -> set[int]:
-    mp = manifest_path(out_dir)
-    if not os.path.exists(mp):
-        return set()
-    pdf = pq.read_table(mp).to_pandas()
-    return set(pdf.loc[pdf["status"] == "ok", "part_id"].astype(int))
+    return set(_ok(_read_manifest(out_dir))["part_id"].to_pylist())
 
 
 def checkpointed_write(
@@ -122,7 +117,6 @@ def checkpointed_write(
     cell_col: str | None = None,
     source_col: str | None = None,
     resume: bool = True,
-    commit: str = "rename",
 ) -> pd.DataFrame:
     """Write ``df`` to ``out_dir`` in ``n_parts`` deterministic logical
     partitions; returns the full manifest (pandas). Safe to re-run: on
@@ -131,22 +125,9 @@ def checkpointed_write(
 
     Memory-bounded by construction: each task streams Arrow batches into
     per-partition ``pyarrow.ParquetWriter``s — it never holds a logical
-    partition in memory.
-
-    ``commit`` selects the part-file commit protocol:
-
-    - ``"rename"`` (local FS / HDFS): temp name + atomic ``os.replace``;
-      stable ``part=N.parquet`` names.
-    - ``"unique-name"`` (object stores — S3/GCS have no atomic rename):
-      each attempt writes straight to a unique object name
-      ``part=N-<attempt>.parquet`` and the MANIFEST — the single last
-      commit — is the only source of truth. Readers
-      (:func:`read_checkpointed`) list files from the manifest, never
-      from the directory, so half-written or orphaned attempt files from
-      failed runs are invisible.
+    partition in memory. Each part is written to a temp name and
+    committed with an atomic ``os.replace`` to ``part=N.parquet``.
     """
-    if commit not in ("rename", "unique-name"):
-        raise ValueError("commit must be 'rename' or 'unique-name'")
     os.makedirs(out_dir, exist_ok=True)
     done = completed_parts(out_dir) if resume else set()
 
@@ -154,9 +135,9 @@ def checkpointed_write(
         "__part", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_parts)).cast("int")
     )
     if done:
-        work = work.filter(~F.col("__part").isin(*[int(p) for p in done]))
+        work = work.filter(~F.col("__part").isin(*sorted(done)))
 
-    data_cols = [c for c in df.columns]
+    data_cols = df.columns
     cell = cell_col if cell_col in data_cols else None
     src = source_col if source_col in data_cols else None
 
@@ -166,50 +147,41 @@ def checkpointed_write(
 
     def write_stream(batches):
         writers: dict[int, dict] = {}
-        for pdf in batches:
-            for part_key, g in pdf.groupby("__part", sort=False):
-                part = int(part_key)
-                body = g[data_cols]
-                table = pa.Table.from_pandas(body, preserve_index=False)
+        for batch in batches:
+            keys = batch.column("__part")
+            for part in pc.unique(keys).to_pylist():
+                body = batch.filter(pc.equal(keys, part)).select(data_cols)
                 st = writers.get(part)
                 if st is None:
-                    if commit == "unique-name":
-                        import uuid
-
-                        final = os.path.join(
-                            out_dir, f"part={part}-{uuid.uuid4().hex[:12]}.parquet"
-                        )
-                        tmp = final  # written directly; manifest commits it
-                    else:
-                        final = os.path.join(out_dir, f"part={part}.parquet")
-                        tmp = final + f".tmp-{os.getpid()}"
+                    final = os.path.join(out_dir, f"part={part}.parquet")
+                    tmp = final + f".tmp-{os.getpid()}"
                     st = writers[part] = {
                         "t0": time.time(),
                         "final": final,
                         "tmp": tmp,
-                        "schema": table.schema,
-                        "writer": pq.ParquetWriter(tmp, table.schema),
+                        "writer": pq.ParquetWriter(tmp, body.schema),
                         "rows": 0,
                         "cmin": None,
                         "cmax": None,
                         "sources": set(),
                     }
-                st["writer"].write_table(table.cast(st["schema"]))
-                st["rows"] += len(body)
+                st["writer"].write_batch(body)
+                st["rows"] += body.num_rows
                 if cell:
-                    lo, hi = int(g[cell].min()), int(g[cell].max())
-                    st["cmin"] = lo if st["cmin"] is None else min(st["cmin"], lo)
-                    st["cmax"] = hi if st["cmax"] is None else max(st["cmax"], hi)
+                    mm = pc.min_max(body.column(cell))
+                    lo, hi = mm["min"].as_py(), mm["max"].as_py()
+                    if lo is not None:
+                        st["cmin"] = lo if st["cmin"] is None else min(st["cmin"], lo)
+                        st["cmax"] = hi if st["cmax"] is None else max(st["cmax"], hi)
                 if src and len(st["sources"]) < 64:
-                    st["sources"].update(g[src].astype(str).unique().tolist())
+                    st["sources"].update(
+                        map(str, pc.unique(body.column(src)).to_pylist())
+                    )
         rows = []
         for part, st in sorted(writers.items()):
             st["writer"].close()
             size = os.path.getsize(st["tmp"])
-            if st["tmp"] != st["final"]:
-                os.replace(st["tmp"], st["final"])  # atomic commit (rename FS)
-            # unique-name mode: no rename exists on the target store — the
-            # file only becomes visible when the manifest commits it
+            os.replace(st["tmp"], st["final"])  # atomic commit
             rows.append(
                 {
                     "job_id": job_id,
@@ -227,30 +199,32 @@ def checkpointed_write(
                 }
             )
         if rows:
-            yield pd.DataFrame(rows)
+            yield pa.RecordBatch.from_pylist(rows, schema=_MANIFEST_ARROW)
 
-    new_manifest = work.mapInPandas(write_stream, MANIFEST_SCHEMA).toPandas()
+    # collect, not toArrow: perfbench reads the plan metrics of the frames
+    # passed to collect/toPandas, and the manifest is one row per part
+    new = pa.Table.from_pylist(
+        [r.asDict() for r in work.mapInArrow(write_stream, MANIFEST_SCHEMA).collect()],
+        schema=_MANIFEST_ARROW,
+    )
 
+    full = new
+    if resume:
+        old = _read_manifest(out_dir)
+        rerun = pc.is_in(old["part_id"], value_set=new["part_id"].combine_chunks())
+        full = pa.concat_tables([old.filter(pc.invert(rerun)), new])
     mp = manifest_path(out_dir)
-    if resume and os.path.exists(mp):
-        # backfill 'file' so a pre-'file'-column manifest never injects
-        # NaN rows into the merged manifest (os.path.join(dir, nan) later)
-        old = _with_file_column(pq.read_table(mp).to_pandas())
-        old = old[~old["part_id"].isin(new_manifest["part_id"])]
-        full = pd.concat([old, new_manifest], ignore_index=True)
-    else:
-        full = new_manifest
-    tmp = mp + ".tmp"
-    pq.write_table(pa.Table.from_pandas(full, preserve_index=False), tmp)
-    os.replace(tmp, mp)
+    pq.write_table(full, mp + ".tmp")
+    os.replace(mp + ".tmp", mp)
+    m = full.to_pandas()
     with open(os.path.join(out_dir, "_SUCCESS.json"), "w") as f:
         json.dump(
             {
                 "job_id": job_id,
-                "parts": int(full["part_id"].nunique()),
-                "rows": int(full["row_count"].sum()),
-                "bytes": int(full["bytes_out"].sum()),
+                "parts": int(m["part_id"].nunique()),
+                "rows": int(m["row_count"].sum()),
+                "bytes": int(m["bytes_out"].sum()),
             },
             f,
         )
-    return full
+    return m

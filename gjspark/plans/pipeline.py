@@ -118,34 +118,20 @@ def run_pipeline(
     # cache the blob-free projection (feeds pip + knn); rollup's decode
     # reads the scan directly — blobs are never held in storage memory
     cached = dfs["slim"].persist()
+    outputs = {
+        "pip": {"id_col": "image_id", "n_parts": n_parts},
+        "knn": {"id_col": "image_id", "n_parts": n_parts},
+        "rollup": {
+            "id_col": "cell", "n_parts": max(n_parts // 4, 8), "cell_col": "cell",
+        },
+    }
     summary = {}
-    m = checkpointed_write(
-        dfs["pip"],
-        os.path.join(out_dir, "pip"),
-        job_id,
-        id_col="image_id",
-        n_parts=n_parts,
-        resume=resume,
-    )
-    summary["pip_rows"] = int(m["row_count"].sum())
-    m = checkpointed_write(
-        dfs["knn"],
-        os.path.join(out_dir, "knn"),
-        job_id,
-        id_col="image_id",
-        n_parts=n_parts,
-        resume=resume,
-    )
-    summary["knn_rows"] = int(m["row_count"].sum())
-    m = checkpointed_write(
-        dfs["rollup"],
-        os.path.join(out_dir, "rollup"),
-        job_id,
-        id_col="cell",
-        n_parts=max(n_parts // 4, 8),
-        cell_col="cell",
-        resume=resume,
-    )
-    summary["rollup_rows"] = int(m["row_count"].sum())
-    cached.unpersist()
+    try:
+        for name, opts in outputs.items():
+            m = checkpointed_write(
+                dfs[name], os.path.join(out_dir, name), job_id, resume=resume, **opts
+            )
+            summary[f"{name}_rows"] = int(m["row_count"].sum())
+    finally:
+        cached.unpersist()
     return summary

@@ -1,15 +1,23 @@
 """Checkpoint/resume: atomic partition commits, lineage manifest, and the
 kill-and-rerun byte-identical guarantee (SURVEY.md §5.5)."""
 
+import datetime as dt
 import glob
 import os
+import shutil
 
 import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from gjspark.plans.checkpoint import checkpointed_write, completed_parts
+from gjspark.plans.checkpoint import (
+    checkpointed_write,
+    completed_parts,
+    manifest_path,
+    read_checkpointed,
+)
 
 
 @pytest.fixture()
@@ -81,138 +89,57 @@ def test_no_double_processing_on_full_rerun(df, tmp_path):
     assert len(_read_all(out)) == 10_000
 
 
-class TestLegacyManifest:
-    """Manifests written before the 'file' column existed must still read
-    and resume: rename-mode names are deterministic part={id}.parquet."""
-
-    def _strip_file_column(self, out):
-        import pyarrow as pa
-
-        from gjspark.plans import checkpoint as CP
-
-        mp = CP.manifest_path(out)
-        m = pq.read_table(mp).to_pandas().drop(columns=["file"])
-        pq.write_table(pa.Table.from_pandas(m, preserve_index=False), mp)
-
-    def test_read_falls_back_to_deterministic_names(self, df, tmp_path):
-        from gjspark.plans import checkpoint as CP
-
-        out = str(tmp_path / "leg1")
-        CP.checkpointed_write(df, out, "j", id_col="image_id", n_parts=8)
-        self._strip_file_column(out)
-        body = CP.read_checkpointed(df.sparkSession, out).toPandas()
-        assert len(body) == 10_000
-
-    def test_resume_over_legacy_manifest_has_no_nan_files(self, df, tmp_path):
-        from gjspark.plans import checkpoint as CP
-
-        out = str(tmp_path / "leg2")
-        part_col = F.pmod(F.xxhash64(F.col("image_id")), F.lit(8)).cast("int")
-        CP.checkpointed_write(
-            df.filter(part_col < 4), out, "j", id_col="image_id", n_parts=8
-        )
-        self._strip_file_column(out)
-        full = CP.checkpointed_write(df, out, "j", id_col="image_id", n_parts=8)
-        assert sorted(full["part_id"]) == list(range(8))
-        assert full["file"].notna().all()
-        body = CP.read_checkpointed(df.sparkSession, out).toPandas()
-        assert len(body) == 10_000 and body["image_id"].is_unique
-
-    def test_empty_ok_set_raises_clearly(self, df, tmp_path):
-        from gjspark.plans import checkpoint as CP
-
-        out = str(tmp_path / "leg3")
-        CP.checkpointed_write(df, out, "j", id_col="image_id", n_parts=4)
-        import pyarrow as pa
-
-        mp = CP.manifest_path(out)
-        m = pq.read_table(mp).to_pandas()
-        m["status"] = "failed"
-        pq.write_table(pa.Table.from_pandas(m, preserve_index=False), mp)
-        with pytest.raises(ValueError, match="no status='ok'"):
-            CP.read_checkpointed(df.sparkSession, out)
+def test_empty_ok_set_raises_clearly(df, tmp_path):
+    out = str(tmp_path / "none_ok")
+    checkpointed_write(df, out, "j", id_col="image_id", n_parts=4)
+    mp = manifest_path(out)
+    m = pq.read_table(mp)
+    failed = pa.array(["failed"] * m.num_rows)
+    pq.write_table(m.set_column(m.schema.get_field_index("status"), "status", failed), mp)
+    with pytest.raises(ValueError, match="no status='ok'"):
+        read_checkpointed(df.sparkSession, out)
 
 
-class TestUniqueNameCommit:
-    """Object-store twin (no atomic rename): parts write straight to
-    unique object names; the manifest is the only source of truth and
-    readers must never trust the directory listing."""
+def test_orphaned_attempt_files_are_invisible(df, tmp_path):
+    """A killed attempt can leave files the manifest never committed: a
+    copied part under another name, a half-written part, a stale temp
+    file. The reader trusts the manifest, so it returns exactly one copy
+    of every row and never opens the garbage."""
+    out = str(tmp_path / "orphans")
+    checkpointed_write(df, out, "j", id_col="image_id", n_parts=8)
+    shutil.copy(
+        os.path.join(out, "part=3.parquet"),
+        os.path.join(out, "part=3-deadbeef0000.parquet"),
+    )
+    with open(os.path.join(out, "part=5-feedface0000.parquet"), "wb") as f:
+        f.write(b"PAR1 half-written garbage from a killed attempt")
+    shutil.copy(
+        os.path.join(out, "part=2.parquet"), os.path.join(out, "part=2.parquet.tmp-1")
+    )
+    body = read_checkpointed(df.sparkSession, out).toPandas()
+    assert len(body) == 10_000
+    assert body["image_id"].is_unique
 
-    def test_writes_unique_names_and_reader_uses_manifest(self, df, tmp_path):
-        from gjspark.plans.checkpoint import read_checkpointed
 
-        out = str(tmp_path / "os1")
-        m = checkpointed_write(
-            df, out, "j", id_col="image_id", n_parts=8, commit="unique-name"
-        )
-        assert len(m) == 8 and (m["status"] == "ok").all()
-        # every committed file has an attempt suffix, no tmp leftovers
-        for f in m["file"]:
-            assert "-" in f and f.endswith(".parquet")
-        assert not glob.glob(os.path.join(out, "*.tmp-*"))
-        body = (
-            read_checkpointed(df.sparkSession, out)
-            .toPandas()
-            .sort_values("image_id")
-            .reset_index(drop=True)
-        )
-        assert len(body) == 10_000
-
-    def test_orphaned_attempt_files_are_invisible(self, df, tmp_path):
-        """A failed attempt leaves half-written objects in the directory
-        (object stores cannot clean atomically). The manifest never lists
-        them, so the reader must return exactly one copy of every row."""
-        from gjspark.plans.checkpoint import read_checkpointed
-
-        out = str(tmp_path / "os2")
-        checkpointed_write(
-            df, out, "j", id_col="image_id", n_parts=8, commit="unique-name"
-        )
-        # plant orphans: a duplicate data file AND a garbage half-object,
-        # both with valid-looking unique names
-        committed = glob.glob(os.path.join(out, "part=3-*.parquet"))[0]
-        dup = os.path.join(out, "part=3-deadbeef0000.parquet")
-        with open(committed, "rb") as a, open(dup, "wb") as b:
-            b.write(a.read())
-        with open(os.path.join(out, "part=5-feedface0000.parquet"), "wb") as f:
-            f.write(b"PAR1 half-written garbage from a killed attempt")
-        body = (
-            read_checkpointed(df.sparkSession, out)
-            .toPandas()
-            .sort_values("image_id")
-            .reset_index(drop=True)
-        )
-        assert len(body) == 10_000  # no duplicates, no crash on garbage
-        assert body["image_id"].is_unique
-
-    def test_resume_recommits_only_missing_parts(self, df, tmp_path):
-        from gjspark.plans import checkpoint as CP
-
-        out = str(tmp_path / "os3")
-        CP.checkpointed_write(
-            df, out, "j", id_col="image_id", n_parts=8, commit="unique-name"
-        )
-        # simulate a crash that lost parts 2 and 6 from the manifest
-        # (their attempt files remain as orphans)
-        mp = CP.manifest_path(out)
-        m = pq.read_table(mp).to_pandas()
-        kept = m[~m["part_id"].isin([2, 6])]
-        import pyarrow as pa
-
-        pq.write_table(pa.Table.from_pandas(kept, preserve_index=False), mp)
-        n_files_before = len(glob.glob(os.path.join(out, "part=*.parquet")))
-        full = CP.checkpointed_write(
-            df, out, "j", id_col="image_id", n_parts=8, commit="unique-name"
-        )
-        # resumed manifest complete; only the two missing parts re-ran
-        assert sorted(full["part_id"]) == list(range(8))
-        assert full["row_count"].sum() == 10_000
-        n_files_after = len(glob.glob(os.path.join(out, "part=*.parquet")))
-        assert n_files_after == n_files_before + 2  # orphans remain, ignored
-        body = (
-            CP.read_checkpointed(df.sparkSession, out)
-            .toPandas()
-            .sort_values("image_id")
-            .reset_index(drop=True)
-        )
-        assert len(body) == 10_000 and body["image_id"].is_unique
+def test_spark_types_round_trip_exactly(spark, tmp_path):
+    """One Arrow batch holding a nullable 64-bit hash (values 2^62 apart
+    by one, which a float64 cannot tell apart), a nullable int, a
+    nullable timestamp, a boolean, a binary and a double reads back with
+    the same Spark types and the same rows."""
+    big = 2**62
+    t = dt.datetime(2024, 3, 1, 12, 30, 15, 123456)
+    df = spark.createDataFrame(
+        [
+            (0, big + 12345, 7, t, True, b"\x00\xff", 0.1),
+            (1, big + 12346, None, t + dt.timedelta(microseconds=1), False, b"", -2.5),
+            (2, None, -3, None, True, b"abc", 1e300),
+        ],
+        "id long, h bigint, i int, ts timestamp, ok boolean, raw binary, d double",
+    )
+    out = str(tmp_path / "types")
+    checkpointed_write(df, out, "j", id_col="id", n_parts=1)
+    back = read_checkpointed(spark, out)
+    assert [(f.name, f.dataType) for f in back.schema] == [
+        (f.name, f.dataType) for f in df.schema
+    ]
+    assert back.orderBy("id").collect() == df.orderBy("id").collect()

@@ -3,6 +3,7 @@ entry runs at sf0.01; entries with an oracle_sql() twin must match DuckDB
 on row count, column names, and order-insensitive values."""
 
 import math
+import os
 
 import duckdb
 import pandas as pd
@@ -62,3 +63,19 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert "revenue" in df.columns
+
+
+def test_image_dedup_clusters_decodes_before_returning(
+    spark, fixtures_dir, tmp_path, monkeypatch
+):
+    """The duplicate classes are materialized while the query is built,
+    so the returned frame's executed plan holds no decode MapInPandas and
+    no image scan (the 1,000-row unit corpus stands in for the e2e one)."""
+    os.symlink(
+        f"{fixtures_dir}/images_sf_unit.parquet", tmp_path / "images_sf_e2e.parquet"
+    )
+    monkeypatch.setattr(E, "_fixtures", lambda: str(tmp_path))
+    df = E.queries()["q_image_dedup_clusters"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "images_sf_e2e" not in plan, plan
+    assert df.count() > 0

@@ -128,3 +128,26 @@ def test_pipeline_rollup_skips_stub_format_rows(spark, fixtures_dir, tmp_path):
         zip(exp.index.astype(np.int64), exp.astype(np.int64))
     )
     assert summary["rollup_rows"] == len(exp)
+
+
+def test_run_pipeline_unpersists_when_a_write_fails(
+    spark, fixtures_dir, tmp_path, monkeypatch
+):
+    """A write that raises still releases the cached slim projection."""
+    from gjspark.plans import checkpoint
+    from gjspark.plans.pipeline import run_pipeline
+
+    def failing_write(*args, **kwargs):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(checkpoint, "checkpointed_write", failing_write)
+    spark.catalog.clearCache()  # start from an empty cache manager
+    with pytest.raises(RuntimeError, match="write failed"):
+        run_pipeline(
+            spark,
+            f"{fixtures_dir}/images_sf_unit.parquet",
+            f"{fixtures_dir}/features_nuts.geojson",
+            str(tmp_path / "out"),
+            n_parts=8,
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -205,17 +205,18 @@ class TestAggregationContainers:
 
 
 class TestWriteObservations:
-    def test_parquet_branch_auto_selected_and_written(self, spark, tmp_path):
+    def test_parquet_branch_auto_selected_and_written(self, spark, obs, tmp_path):
         from gjspark.operators.sink import write_observations
+        from gjspark.plans.checkpoint import read_checkpointed
 
-        df = spark.createDataFrame(
-            [("o1", "ds1", 1.0), ("o2", "ds1", 2.0)], "obs_id string, ds_key string, v double"
-        )
         out = str(tmp_path / "obs_out")
-        branch = write_observations(df, out)  # path -> parquet twin
+        branch = write_observations(obs, out)  # path -> parquet twin
         assert branch == "parquet"
-        back = spark.read.parquet(out)  # _manifest/_SUCCESS are hidden files
-        assert back.count() == 2
+        back = read_checkpointed(spark, out)
+        assert back.schema == obs.schema  # t_start stays a Spark timestamp
+        assert back.orderBy("obs_id").collect() == obs.orderBy("obs_id").collect()
+        # _manifest/_SUCCESS are hidden files to a plain directory read
+        assert spark.read.parquet(out).count() == 250
 
     def test_iceberg_branch_requires_runtime(self, spark):
         from gjspark.operators.sink import (
