@@ -37,8 +37,16 @@ def _fixtures() -> str:
     return ensure_fixtures(FIX)
 
 
+def _parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema read on the driver,
+    so no schema-inference job runs."""
+    from gjspark.sources.parquet import read_parquet
+
+    return read_parquet(spark, path)
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -451,7 +459,7 @@ def q_embed_pairs(spark, sf_dir):
     from gjspark.operators.dedup import embedding_near_dup
 
     fx = _fixtures()
-    emb = spark.read.parquet(f"{fx}/embeddings_neardup.parquet")
+    emb = _parquet(spark, f"{fx}/embeddings_neardup.parquet")
     return embedding_near_dup(emb, threshold=0.95)
 
 
@@ -464,7 +472,7 @@ def q_cells(spark, sf_dir):
     from gjspark.operators.cells import with_cell_columns
 
     fx = _fixtures()
-    imgs = spark.read.parquet(f"{fx}/images_sf_e2e.parquet")
+    imgs = _parquet(spark, f"{fx}/images_sf_e2e.parquet")
     return with_cell_columns(imgs).select(
         "image_id", *[f"h3_r{r}" for r in range(7, 13)], "s2_cell"
     )
@@ -476,7 +484,7 @@ def q_pip(spark, sf_dir):
     from gjspark.sources.geojson import read_feature_collection
 
     fx = _fixtures()
-    imgs = with_cell_columns(spark.read.parquet(f"{fx}/images_sf_e2e.parquet"))
+    imgs = with_cell_columns(_parquet(spark, f"{fx}/images_sf_e2e.parquet"))
     feats = read_feature_collection(spark, f"{fx}/features_nuts.geojson")
     return pip_join(imgs, feats)
 
@@ -487,7 +495,7 @@ def q_knn(spark, sf_dir):
     from gjspark.sources.geojson import read_feature_collection
 
     fx = _fixtures()
-    imgs = spark.read.parquet(f"{fx}/images_sf_e2e.parquet")
+    imgs = _parquet(spark, f"{fx}/images_sf_e2e.parquet")
     feats = read_feature_collection(spark, f"{fx}/features_nuts.geojson")
     return knn_join(imgs, feature_locations(feats)).select(
         "image_id", "nearest_location_id"
@@ -502,7 +510,7 @@ def q_decode(spark, sf_dir):
     from gjspark.operators.fused import decoded_features
 
     fx = _fixtures()
-    imgs = with_cell_columns(spark.read.parquet(f"{fx}/images_sf_e2e.parquet"))
+    imgs = with_cell_columns(_parquet(spark, f"{fx}/images_sf_e2e.parquet"))
     return decoded_features(imgs).select("image_id", "pix_crc32", "caption")
 
 
@@ -511,7 +519,7 @@ def q_tile_rollup(spark, sf_dir):
     from gjspark.operators.fused import decoded_features, rollup_from_features
 
     fx = _fixtures()
-    imgs = with_cell_columns(spark.read.parquet(f"{fx}/images_sf_e2e.parquet"))
+    imgs = with_cell_columns(_parquet(spark, f"{fx}/images_sf_e2e.parquet"))
     return rollup_from_features(decoded_features(imgs)).select(
         "cell", "n_images", "n_tiles", "phash_xor"
     )
@@ -526,7 +534,7 @@ def q_mosaic(spark, sf_dir):
     from gjspark.operators.fused import decoded_features, mosaic_from_features
 
     fx = _fixtures()
-    imgs = with_cell_columns(spark.read.parquet(f"{fx}/images_sf_e2e.parquet"))
+    imgs = with_cell_columns(_parquet(spark, f"{fx}/images_sf_e2e.parquet"))
     # probe the plan choice on the PRE-decode frame: cell counts are
     # identical, and probing the unpersisted decoded frame would run the
     # decode mapInPandas twice (the round-2 verdict's perf-weak item)
@@ -552,7 +560,7 @@ def q_phash_neardup(spark, sf_dir):
     from gjspark.operators.fused import decoded_features
 
     fx = _fixtures()
-    imgs = with_cell_columns(spark.read.parquet(f"{fx}/images_sf_e2e.parquet"))
+    imgs = with_cell_columns(_parquet(spark, f"{fx}/images_sf_e2e.parquet"))
     feats = decoded_features(imgs).filter(
         F.col("decode_ok") & F.col("fmt").isin(sorted(C.LOSSLESS))
     )
@@ -588,7 +596,7 @@ def q_image_dedup_clusters(spark, sf_dir):
     from gjspark.operators.fused import decoded_features
 
     fx = _fixtures()
-    imgs = with_cell_columns(spark.read.parquet(f"{fx}/images_sf_e2e.parquet"))
+    imgs = with_cell_columns(_parquet(spark, f"{fx}/images_sf_e2e.parquet"))
     feats = decoded_features(imgs).filter(
         F.col("decode_ok") & F.col("fmt").isin(sorted(C.LOSSLESS))
     )
@@ -621,7 +629,7 @@ def q_cell_cap(spark, sf_dir):
     from gjspark.operators.sampling import group_cap
 
     fx = _fixtures()
-    imgs = with_cell_columns(spark.read.parquet(f"{fx}/images_sf_e2e.parquet"))
+    imgs = with_cell_columns(_parquet(spark, f"{fx}/images_sf_e2e.parquet"))
     return group_cap(
         imgs.select("image_id", F.col("h3_r7").alias("cell")),
         ("cell",),
@@ -639,7 +647,7 @@ def q_image_quality(spark, sf_dir):
     from gjspark.operators.image_quality import image_quality
 
     fx = _fixtures()
-    imgs = spark.read.parquet(f"{fx}/images_sf_e2e.parquet")
+    imgs = _parquet(spark, f"{fx}/images_sf_e2e.parquet")
     return image_quality(imgs).filter(F.col("decode_ok")).select(
         "image_id",
         "fmt",
@@ -670,7 +678,7 @@ def q_upsert(spark, sf_dir):
     fx = _fixtures()
     feats = read_feature_collection(spark, f"{fx}/features_nuts.geojson")
     locs = preview(feats, [nuts_config()[0]])
-    snap = spark.read.parquet(f"{fx}/entity_snapshot.parquet").filter(
+    snap = _parquet(spark, f"{fx}/entity_snapshot.parquet").filter(
         F.col("cache_key") != "NUTS-AMBIG"
     )
     return find_or_create(locs, snap, "Location", check_ambiguous=False).select(
@@ -692,7 +700,7 @@ def q_upsert_equals(spark, sf_dir):
     fx = _fixtures()
     feats = read_feature_collection(spark, f"{fx}/features_nuts.geojson")
     locs = preview(feats, [nuts_config()[0]])
-    snap = spark.read.parquet(f"{fx}/entity_snapshot_equals.parquet")
+    snap = _parquet(spark, f"{fx}/entity_snapshot_equals.parquet")
     return find_or_create(
         locs, snap, "Location", equals_col="name"
     ).select("cache_key", "op", "entity_id", "name", "properties_json")
@@ -818,7 +826,7 @@ def q_frames(spark, sf_dir):
     from gjspark.operators.multimodal import sample_frames
 
     fx = _fixtures()
-    vids = spark.read.parquet(f"{fx}/videos_fixture.parquet")
+    vids = _parquet(spark, f"{fx}/videos_fixture.parquet")
     return sample_frames(vids.select("video_id", "bytes", "fmt"), n_frames=4).select(
         "video_id",
         F.col("frame_idx").cast("long").alias("frame_idx"),
@@ -838,7 +846,7 @@ def q_audio(spark, sf_dir):
     from gjspark.operators.multimodal import audio_features
 
     fx = _fixtures()
-    auds = spark.read.parquet(f"{fx}/audio_fixture.parquet")
+    auds = _parquet(spark, f"{fx}/audio_fixture.parquet")
     # NOT F.round: Spark rounds via BigDecimal HALF_UP on the printed
     # decimal, DuckDB/numpy round the double — they disagree on exact
     # halfway cases (e.g. 1043/16000 = 0.0651875). floor(x*1e6 + 0.5)

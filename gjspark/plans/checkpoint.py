@@ -55,6 +55,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from gjspark.sources.parquet import read_parquet
+
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("job_id", T.StringType()),
@@ -101,7 +103,7 @@ def read_checkpointed(spark, out_dir: str) -> DataFrame:
             f"manifest at {mp} has no status='ok' partitions — nothing to read"
         )
     files = [os.path.join(out_dir, f) for f in ok["file"].to_pylist()]
-    return spark.read.parquet(*files)
+    return read_parquet(spark, *files)
 
 
 def completed_parts(out_dir: str) -> set[int]:

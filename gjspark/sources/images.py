@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gjspark.sources.parquet import read_parquet
+
 IMAGE_COLUMNS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
 
 
@@ -22,5 +24,5 @@ def read_images(spark: SparkSession, path: str) -> DataFrame:
     """Read the image table from Iceberg if `path` is a catalog table name,
     else parquet."""
     if path.endswith(".parquet") or path.startswith("/") or path.startswith("file:"):
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     return spark.read.format("iceberg").load(path)

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -23,3 +24,22 @@ def fixtures_dir():
     from gjspark.fixtures.generator import ensure_fixtures
 
     return ensure_fixtures()
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(action)``: the Spark jobs ``action()`` runs on the
+    shared session, counted through a job group."""
+
+    def count(action) -> int:
+        sc = spark.sparkContext
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

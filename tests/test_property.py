@@ -139,3 +139,53 @@ class TestCodecProperties:
         img = np.random.default_rng(seed).integers(0, 256, (h, w, 3), dtype=np.uint8)
         dec = C.decode_image(C.encode_image(img, "dct"), "dct")
         assert C.psnr(img, dec) >= 40.0
+
+
+def _palettized(img: np.ndarray) -> np.ndarray:
+    """GIF input: at most 256 colors (5 levels per channel)."""
+    return (img // 52 * 52).astype(np.uint8)
+
+
+@st.composite
+def mutated_payloads(draw):
+    """(fmt, a valid encoded image with one mutation applied): cut short,
+    bits flipped, a byte run overwritten, bytes inserted, or emptied."""
+    fmt = draw(st.sampled_from(sorted(C._ENCODERS)))
+    h, w = draw(st.integers(1, 24)), draw(st.integers(1, 24))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+    data = bytearray(C.encode_image(_palettized(img) if fmt == "gif" else img, fmt))
+    n = len(data)
+    kind = draw(st.sampled_from(["cut", "flip", "overwrite", "insert", "empty"]))
+    if kind == "cut":
+        data = data[: draw(st.integers(0, n - 1))]
+    elif kind == "flip":
+        for bit in draw(st.lists(st.integers(0, 8 * n - 1), min_size=1, max_size=8)):
+            data[bit // 8] ^= 1 << (bit % 8)
+    elif kind == "overwrite":
+        at = draw(st.integers(0, n - 1))
+        junk = draw(st.binary(min_size=1, max_size=16))
+        data[at : at + len(junk)] = junk
+    elif kind == "insert":
+        at = draw(st.integers(0, n))
+        data[at:at] = draw(st.binary(min_size=1, max_size=16))
+    else:
+        data = bytearray()
+    return fmt, bytes(data)
+
+
+class TestCodecFuzzProperties:
+    """Mutated payloads of every encoder's format decode or raise
+    ``CodecError``, nothing else: the decode call sites catch only that.
+    Seeded (``derandomize``), so every run draws the same examples; the
+    deterministic fuzz in ``tests/test_codecs.py`` covers the fixture rows."""
+
+    @given(mutated_payloads())
+    @settings(max_examples=300, deadline=None, derandomize=True, database=None)
+    def test_mutated_payload_raises_only_codec_error(self, case):
+        fmt, data = case
+        try:
+            out = C.decode_image(data, fmt)
+        except C.CodecError:
+            return
+        assert isinstance(out, np.ndarray)

@@ -2,17 +2,21 @@
 Spark job's spark.local.dir (shuffle data loss), and local-mode Python
 workers run under ``gjspark.pydaemon``: the installed pyspark (not
 ``pyspark.zip``), pandas and pyarrow loaded before the fork, and the
-zipimport backport."""
+zipimport backport. The local driver JVM starts from a validated CDS
+archive, never from one that failed validation."""
 
 import importlib
+import json
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
 
 import pytest
+from pyspark import SparkContext
 
-from gjspark import pydaemon, session
+from gjspark import cds, pydaemon, session
 
 
 class TestScratchSweep:
@@ -210,3 +214,193 @@ def test_driver_heap_fits_physical_memory(spark):
     if "GJSPARK_DRIVER_MEM" not in os.environ:
         assert to_bytes(heap) == default
     assert to_bytes(heap) <= phys
+
+
+# -- class-data-sharing archive (gjspark.cds) ---------------------------------
+
+
+@pytest.fixture
+def cds_env(tmp_path, monkeypatch):
+    """A fresh archive cache under ``tmp_path`` and no environment that
+    makes ``cds.plan`` skip."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    for var in ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR",
+                "SPARK_CLASSPATH", "SPARK_DIST_CLASSPATH"):
+        monkeypatch.delenv(var, raising=False)
+    if cds.plan("local[2]", {}) is None:
+        pytest.skip("this Spark install is not eligible for CDS")
+    for name in os.listdir(cds.cache_dir()):  # drop the probe's marker
+        if name.endswith(".dump"):
+            os.unlink(os.path.join(cds.cache_dir(), name))
+    return tmp_path
+
+
+def _dead_pid() -> int:
+    proc = subprocess.Popen(["true"])
+    proc.wait()
+    return proc.pid
+
+
+def _dumped_candidate(plan, truncate: bool) -> None:
+    """Write a real small archive at the plan's candidate path, as a dead
+    session's JVM would have, truncated if asked."""
+    java = cds._java()
+    cp = os.path.join(cds.cache_dir(), "conf")  # the empty conf dir
+    subprocess.run(
+        [java, f"-XX:ArchiveClassesAtExit={plan.candidate}", "-Xlog:cds*=off",
+         "-cp", cp, "-version"],
+        check=True, capture_output=True,
+    )
+    if truncate:
+        size = os.path.getsize(plan.candidate)
+        os.chmod(plan.candidate, 0o644)
+        with open(plan.candidate, "r+b") as f:
+            f.truncate(size // 2)
+    with open(plan.marker, "w") as f:
+        json.dump({"pid": _dead_pid(), "candidate": plan.candidate,
+                   "java": java, "classpath": cp}, f)
+
+
+def test_truncated_archive_is_deleted_and_never_passed_to_a_jvm(cds_env):
+    first = cds.plan("local[2]", {})
+    assert first.flags[0] == f"-XX:ArchiveClassesAtExit={first.candidate}"
+    _dumped_candidate(first, truncate=True)
+    # the same candidate makes the validation JVM die (SIGBUS when mapped)
+    assert not cds.validate(cds._java(), first.candidate, json.load(open(first.marker))["classpath"])
+    again = cds.plan("local[2]", {})
+    assert not os.path.exists(first.candidate)
+    assert not os.path.exists(again.archive)
+    assert all(first.candidate not in f for f in again.flags)
+    assert not any(f.startswith("-XX:SharedArchiveFile") for f in again.flags)
+    assert again.flags[0] == f"-XX:ArchiveClassesAtExit={again.candidate}"
+
+
+def test_validated_archive_is_published_then_used(cds_env):
+    first = cds.plan("local[2]", {})
+    _dumped_candidate(first, truncate=False)
+    used = cds.plan("local[2]", {})
+    assert not os.path.exists(first.candidate) and not os.path.exists(first.marker)
+    assert used.candidate is None
+    assert used.flags == [f"-XX:SharedArchiveFile={used.archive}", "-Xlog:cds*=off"]
+    assert '"-XX:SharedArchiveFile=' in used.java_options("-Dx=1")
+    assert used.java_options("-Dx=1").endswith(" -Dx=1")
+    # a published archive that changed after validation is not used
+    os.chmod(used.archive, 0o644)
+    with open(used.archive, "ab") as f:
+        f.write(b"\0")
+    redo = cds.plan("local[2]", {})
+    assert not os.path.exists(used.archive)
+    assert redo.candidate is not None
+
+
+def test_one_session_dumps_at_a_time(cds_env):
+    first = cds.plan("local[2]", {})
+    assert first.candidate is not None
+    # the marker names this live process: nobody else dumps or validates
+    assert cds.plan("local[2]", {}) is None
+    assert os.path.exists(first.marker)
+
+
+def test_conf_dir_eligibility(tmp_path, cds_env, monkeypatch):
+    templates = tmp_path / "templates"
+    templates.mkdir()
+    (templates / "spark-defaults.conf.template").write_text("")
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.x 1\n")
+    assert cds.conf_dir_replaceable(str(templates))
+    assert cds.conf_dir_replaceable(str(tmp_path / "missing"))
+    assert not cds.conf_dir_replaceable(str(conf))
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    assert cds.plan("local[2]", {}) is None
+    monkeypatch.setenv("SPARK_CONF_DIR", str(templates))
+    assert cds.plan("local[2]", {}) is not None
+    monkeypatch.setenv("HADOOP_CONF_DIR", str(tmp_path))
+    assert cds.plan("local[2]", {}) is None
+    monkeypatch.delenv("HADOOP_CONF_DIR")
+    extra = {"spark.driver.extraClassPath": str(tmp_path)}
+    assert cds.plan("local[2]", extra) is None
+
+
+def test_cluster_master_gets_no_flags(cds_env):
+    for master in ("spark://host:7077", "yarn", "k8s://https://host:443"):
+        assert cds.plan(master, {}) is None
+    assert not any(n.endswith(".dump") for n in os.listdir(cds.cache_dir()))
+
+
+class _Launch:
+    """Stands in for a ``cds.Plan`` around ``session._get_or_create``."""
+
+    conf_dir = "/nonexistent/empty-conf"
+    flags = ["-XX:SharedArchiveFile=/nonexistent/x.jsa"]
+
+    def __init__(self):
+        self.events = []
+
+    def java_options(self, user):
+        return " ".join([*self.flags, *([user] if user else [])])
+
+    def started(self, spark, proc):
+        self.events.append("started")
+
+    def failed(self):
+        self.events.append("failed")
+
+
+class _Builder:
+    """Records the conf dir and java options each ``getOrCreate`` sees;
+    the first ``fail`` calls raise as a JVM that did not start."""
+
+    def __init__(self, fail=0):
+        self.conf, self.seen, self.fail = {}, [], fail
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        self.seen.append((os.environ.get("SPARK_CONF_DIR"), self.conf.get(session._JAVA_OPTS)))
+        if self.fail:
+            self.fail -= 1
+            raise RuntimeError("Java gateway process exited")
+        return "session"
+
+
+@pytest.mark.parametrize("before", [None, "/some/conf"])
+def test_spark_conf_dir_restored_after_launch(monkeypatch, before):
+    if before is None:
+        monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_CONF_DIR", before)
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    launch, b = _Launch(), _Builder()
+    assert session._get_or_create(b, launch, "-Dx=1") == "session"
+    assert b.seen == [(launch.conf_dir, launch.flags[0] + " -Dx=1")]
+    assert os.environ.get("SPARK_CONF_DIR") == before
+    assert launch.events == ["started"]
+
+    # a JVM that does not start with the flags starts again without them
+    launch, b = _Launch(), _Builder(fail=1)
+    assert session._get_or_create(b, launch, "-Dx=1") == "session"
+    assert b.seen == [(launch.conf_dir, launch.flags[0] + " -Dx=1"), (before, "-Dx=1")]
+    assert os.environ.get("SPARK_CONF_DIR") == before
+    assert launch.events == ["failed"]
+
+
+def test_shared_session_driver_jvm_uses_the_archive(spark):
+    """The shared session's driver JVM maps the published archive, or, on
+    a machine with none yet, is the one session that writes it at exit."""
+    jvm = spark._jvm
+    pid = int(jvm.java.lang.ProcessHandle.current().pid())
+    args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    flags = {a.split("=", 1)[0]: a.split("=", 1)[1] for a in args if a.startswith("-XX:") and "=" in a}
+    if "-XX:ArchiveClassesAtExit" in flags:
+        marker = flags["-XX:ArchiveClassesAtExit"].rsplit(".dump-", 1)[0] + ".dump"
+        with open(marker) as f:
+            rec = json.load(f)
+        assert rec["pid"] == pid
+        assert rec["classpath"] == jvm.System.getProperty("java.class.path")
+    else:
+        archive = flags["-XX:SharedArchiveFile"]
+        assert cds.mapped_archive(pid) == archive
+    assert "-Xlog:cds*=off" in args

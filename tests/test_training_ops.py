@@ -1,7 +1,6 @@
 """Training-data pipeline ops: dedup (exact/MinHash/SimHash/embedding),
 ANN (brute + IVF recall), text analysis — with planted ground truth."""
 
-import uuid
 
 import numpy as np
 import pytest
@@ -281,32 +280,19 @@ class TestConnectedComponentsStar(_ConnectedComponentsCases):
     path = "star"
 
 
-def _count_jobs(spark, action) -> int:
-    """Spark jobs ``action()`` runs, counted through a job group."""
-    sc = spark.sparkContext
-    group = f"count-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_dedup_clusters_job_floor(spark):
+def test_dedup_clusters_job_floor(spark, count_jobs):
     """q_dedup_clusters on the sf0.01 documents labels its 29 edges on
     the driver: the pair finder's jobs, the edge count, one collect and
-    the cluster sizes, at most 9 jobs. With broadcasts off the star
-    rounds run, each with its own jobs."""
+    the cluster sizes, at most 8 jobs (reading the table runs none). With
+    broadcasts off the star rounds run, each with its own jobs."""
     import __spark_entry__ as E
 
     def run():
         E.queries()["q_dedup_clusters"](spark, "/root/testdata/sf0.01").collect()
 
-    assert _count_jobs(spark, run) <= 9
+    assert count_jobs(run) <= 8
     with broadcast_threshold_override(spark, "-1"):
-        assert _count_jobs(spark, run) > 9
+        assert count_jobs(run) > 8
 
 
 class TestANN:

@@ -12,10 +12,11 @@ that of its reaped children.
 
 Usage: python tools/worker_overhead.py [--jobs 10] [--partitions 8]
        [--master local[4]]
-Prints one JSON line, naming the Python daemon ``get_spark`` configured.
-``boot_s`` includes the JVM start, so it is the cold cost of a session's
-first Python job; ``first_job_s`` is that job alone, where the daemon
-boots.
+Prints one JSON line, naming the Python daemon ``get_spark`` configured
+and, as ``cds``, the class-data-sharing archive the driver JVM mapped
+(null without one; see ``gjspark.cds``). ``boot_s`` includes the JVM
+start, so it is the cold cost of a session's first Python job;
+``first_job_s`` is that job alone, where the daemon boots.
 """
 
 from __future__ import annotations
@@ -80,6 +81,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--master", default="local[4]")
     args = p.parse_args(argv)
 
+    from gjspark.cds import mapped_archive
     from gjspark.session import get_spark
 
     conf = {"spark.ui.showConsoleProgress": "false"}
@@ -92,6 +94,7 @@ def main(argv: list[str] | None = None) -> int:
     origins = {r.origin for r in probe.collect()}
     t2 = time.perf_counter()
     boot, first_job = t2 - t0, t2 - t1
+    archive = mapped_archive(int(spark._jvm.java.lang.ProcessHandle.current().pid()))
     job = df.mapInPandas(lambda it: (pdf for pdf in it), "id long")
     job.collect()  # warm-up of the timed plan
     cpu0, t0 = python_worker_cpu_s(), time.perf_counter()
@@ -110,6 +113,7 @@ def main(argv: list[str] | None = None) -> int:
         "boot_s": round(boot, 3),
         "first_job_s": round(first_job, 3),
         "pyspark_origin": sorted(origins),
+        "cds": archive,
         "wall_s_per_job": round(wall / args.jobs, 4),
         "worker_cpu_s_per_task": round(cpu / tasks, 4),
     }))
